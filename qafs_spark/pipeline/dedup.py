@@ -148,6 +148,15 @@ def with_shingle_hashes(
     )
 
 
+def _require_positive(**params: int) -> None:
+    """Reject loop counts of 0 or less: ``sequence(1, 0)`` is the
+    descending ``[1, 0]``, not an empty array, so they would yield
+    plausible-looking signatures and band keys instead of none."""
+    for name, value in params.items():
+        if value <= 0:
+            raise ValueError(f"{name} must be positive, got {value}")
+
+
 def minhash_signature_from_hashes(
     hashes: Column, num_hashes: int = 32, seed: int = 42
 ) -> Column:
@@ -164,6 +173,7 @@ def minhash_signature_from_hashes(
     # same num_hashes passes over the hash array at execution (both
     # forms are interpreted higher-order functions), ~1/32nd the
     # generated source.
+    _require_positive(num_hashes=num_hashes)
     params = minhash_params(num_hashes, seed)
     a_arr = F.array(*[F.lit(a) for a, _ in params])
     b_arr = F.array(*[F.lit(b) for _, b in params])
@@ -187,6 +197,7 @@ def lsh_band_keys(signature: Column, num_bands: int, rows_per_band: int) -> Colu
     sequence(0, num_bands-1) instead of num_bands unrolled concat terms —
     identical keys (int-to-string casts match ``str(band)`` for the
     non-negative band indexes), ~1/num_bands the generated source."""
+    _require_positive(num_bands=num_bands, rows_per_band=rows_per_band)
     return F.transform(
         F.sequence(F.lit(0), F.lit(num_bands - 1)),
         lambda band: F.concat_ws(
@@ -556,16 +567,15 @@ def simhash_table(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     # per-token md5 tokenize upstream at any scale. Bit b: counter
     # ``(_p[b div 3] >> 21*(b mod 3)) & mask``, then the same branchless
     # majority vote (sign bit of ``_n - 2*cnt``) shifted into place.
-    # ``(bi - k) / 3`` is an exact integer, so the double division is
-    # exact and the int cast lossless; call_function("shiftright"/
-    # "shiftleft") is the column-shift-amount spelling the python API's
-    # int-only signature hides.
+    # ``b div 3`` is SQL integer division; call_function("div"/
+    # "shiftright"/"shiftleft") is the column-operand spelling the python
+    # API hides.
     ps = F.array(*[F.col(f"_p{j}") for j in range(n_packs)])
 
     def _fold(acc, b):
         bi = b.cast("int")
         k = bi % F.lit(_PACK_FIELDS)
-        j = ((bi - k).cast("double") / F.lit(float(_PACK_FIELDS))).cast("int")
+        j = F.call_function("div", bi, F.lit(_PACK_FIELDS)).cast("int")
         cnt = F.call_function(
             "shiftright",
             F.element_at(ps, j + F.lit(1)),

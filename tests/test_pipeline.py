@@ -73,6 +73,19 @@ def test_ngram_jaccard_and_minhash_agree(docs):
         assert abs(exact[pair] - j) < 1e-12  # verification stage is exact
 
 
+@pytest.mark.parametrize("num_hashes", [0, -3])
+def test_minhash_signature_rejects_nonpositive_num_hashes(spark, num_hashes):
+    # sequence(1, 0) is [1, 0], so 0 hashes would yield a 2-entry signature
+    with pytest.raises(ValueError, match="num_hashes"):
+        dedup.minhash_signature_from_hashes(F.col("sh"), num_hashes)
+
+
+@pytest.mark.parametrize("num_bands,rows_per_band", [(0, 2), (4, 0), (-1, 2)])
+def test_lsh_band_keys_rejects_nonpositive_bands(spark, num_bands, rows_per_band):
+    with pytest.raises(ValueError, match="num_bands|rows_per_band"):
+        dedup.lsh_band_keys(F.col("sig"), num_bands, rows_per_band)
+
+
 def test_simhash_pairs(docs):
     # ground-truth distance between the near-identical docs 0 and 1
     s = docs.select("doc_id", dedup.simhash(F.col("text")).alias("sh")).collect()
