@@ -16,8 +16,10 @@ Beyond reference parity, the operators a 100 TB LLM-data pipeline needs:
   re-tokenized or shuffled).
 * :mod:`banded_index` / :mod:`vector_index` / :mod:`text_index` — the
   persisted-index trio (MinHash bands, IVF cells, BM25 postings):
-  partition-pruned probes, exactly-once batch + streaming ingestion,
-  merge-on-read deletes, rename-aside compaction.
+  partition-pruned probes over their own data shapes.
+* :mod:`lifecycle` — the persisted-index lifecycle those three share:
+  exactly-once batch + streaming ingestion, merge-on-read deletes,
+  rename-aside compaction and rebuild, the config pin and the pairs log.
 * :mod:`retrieval` — reciprocal-rank fusion over any (id, rank)
   frames (hybrid lexical + vector retrieval).
 * :mod:`multimodal` — opaque binary columns with typed metadata; decode /

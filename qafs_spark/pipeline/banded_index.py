@@ -30,7 +30,10 @@ set), and a completed batch is skipped outright via the ``applied_log``
 commit manifest (:mod:`manifest` — appended after the last dataset
 write, folded by compaction, so applied-set reads cost O(1) metadata ops
 instead of one ``_SUCCESS`` probe per uncompacted batch). No scrubs, no
-MERGE-capable table format needed.
+MERGE-capable table format needed. That protocol — with merge-on-read
+deletes, rename-aside compaction and rebuild, the config pin and the
+pairs log — is the persisted-index lifecycle shared with the sibling
+indexes, :mod:`lifecycle`.
 
 Pair-set parity: for the same (n, num_hashes, num_bands, seed, threshold,
 max_band_size) this path is bit-equal to
@@ -48,16 +51,16 @@ dedup is whole-corpus pandas/dask); this is the 100 TB extension surface.
 
 from __future__ import annotations
 
-import json
 from typing import Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import storage as fs_storage
-from . import lease, manifest, pairs_fold
+from . import lease
 from .dedup import DEFAULT_MAX_BAND_SIZE, lsh_band_keys
 from .incremental import minhash_index, minhash_index_with_tokens
+from .lifecycle import IndexLifecycle
 
 
 class BandedMinHashIndex:
@@ -102,144 +105,19 @@ class BandedMinHashIndex:
         self.seed = seed
         self.num_partitions = num_partitions
         self.store_tokens = bool(store_tokens)
-        j = fs_storage.join
-        self.docs_path = j(root, "docs")
-        self.bands_path = j(root, "bands")
-        self.counts_path = j(root, "band_counts")
-        self.pairs_path = j(root, "pairs")
-        self.meta_path = j(root, "meta")
-        self.watermark_path = j(root, "compacted_through")
-        self.deletes_path = j(root, "deletes")
-        self.rebuild_marker_path = j(root, "rebuild_commit")
-        self.applied_log_path = j(root, "applied_log")
-        self.pairs_hist_path = j(root, "pairs_hist")
-        self.pairs_folded_path = j(root, "pairs_folded")
-        self.pairs_fold_marker_path = j(root, "pairs_fold_commit")
+        self._lc = IndexLifecycle(
+            self, ("band_counts", "docs", "bands"), pairs_score="jaccard"
+        )
+        (
+            self.counts_path, self.docs_path, self.bands_path, self.pairs_path
+        ) = self._lc.datasets
         self._persisted: list[DataFrame] = []
-        # per-instance metadata caches: the compaction watermark, the
-        # tombstone set, and the meta-row validation are all tiny but
-        # re-read per micro-batch otherwise — at high batch frequency the
-        # fixed per-batch FS reads dominate. Invalidated by the mutating
-        # ops (delete_ids/compact); single-writer per instance is already
-        # this index's contract.
-        self._ct_cache: Optional[int] = None
-        self._tomb_cache = "unset"
-        self._tomb_sig = None
-        self._meta_checked = False
-        # (applied-ids set above the watermark, log-exists flag) — one
-        # cached commit-log read replaces the per-batch _SUCCESS probes
-        self._applied_cache: Optional[tuple] = None
-        self._pf_cache: Optional[int] = None  # pairs-fold watermark
-        # dataset-read cache (round 17): spark.read.parquet(<dataset>)
-        # re-lists every accumulated batch_id=/prefix directory and
-        # re-reads a footer for schema on EVERY call — dedup_batch probes
-        # each dataset up to twice per micro-batch, so the per-probe
-        # partition discovery grows O(uncompacted batches). The resolved
-        # DataFrame is cached per dataset path and dropped whenever the
-        # dataset's directories can change (apply_batch commit, compact,
-        # rebuild, refresh) — the same invalidation points as the
-        # applied-set cache. The probe-time filters (applied set,
-        # exclude_batch_id) still run per call against the cached
-        # listing, so visibility semantics are unchanged.
-        self._ds_cache: dict = {}
-
-    def _invalidate_meta_caches(self) -> None:
-        if isinstance(self._tomb_cache, DataFrame):
-            self._tomb_cache.unpersist()
-        self._tomb_cache = "unset"
-        self._ct_cache = None
-        self._applied_cache = None
-        self._pf_cache = None
-        self._ds_cache.clear()
-
-    def _sync_tombstones(self) -> None:
-        """Cross-instance delete visibility on a cheap signal: one
-        listing of the tiny ``deletes/`` dataset (bounded by delete_ids
-        calls since the last compact) compared against the signature
-        captured when the cached tombstone frame was built; a mismatch
-        drops just that cache. Called once per apply_batch, so a
-        long-lived WRITER (the streaming sinks hold one instance for the
-        stream's lifetime) observes delete_ids issued through other
-        instances at its next micro-batch. Plain READERS may serve a
-        cached tombstone set until :meth:`refresh` — which guarantees
-        the next read observes the delete."""
-        if self._tomb_cache == "unset":
-            return
-        if (
-            fs_storage.dir_signature(self.spark, self.deletes_path)
-            != self._tomb_sig
-        ):
-            if isinstance(self._tomb_cache, DataFrame):
-                self._tomb_cache.unpersist()
-            self._tomb_cache = "unset"
 
     def refresh(self) -> None:
-        """Drop every per-instance metadata cache (tombstones, compaction
-        watermark, applied-batch set) so the next read re-syncs with
-        mutations other instances committed — deletes, compactions,
-        applied batches. Single-writer per index is still the contract;
-        this is the reader-side lever."""
-        self._invalidate_meta_caches()
-
-    # -- applied-batch commit log ------------------------------------------
-
-    def _applied_set(self) -> set:
-        """Batch ids above the compaction watermark that durably
-        committed. One cached read of the ``applied_log`` manifest
-        (O(1) metadata ops per probe, independent of uncompacted-batch
-        count); a legacy index without a log falls back to one _SUCCESS
-        directory scan of the last-written dataset (band_counts)."""
-        if self._applied_cache is not None:
-            return self._applied_cache[0]
-        through = self._compacted_through()
-        logged = manifest.read_log(self.spark, self.applied_log_path)
-        if logged is None:
-            # require every per-batch dataset's marker, not just the
-            # serially-last-written one: a crashed CONCURRENT commit
-            # (round 16+) can leave any directory subset (round 17,
-            # ADVICE — intersection keeps a partial batch un-applied)
-            s = manifest.legacy_scan(
-                self.spark, self.counts_path, through,
-                require_all=(
-                    self.pairs_path, self.docs_path, self.bands_path,
-                ),
-            )
-            self._applied_cache = (s, False)
-        else:
-            s = {b for b in logged if b > through}
-            self._applied_cache = (s, True)
-        return s
-
-    def _ensure_log(self) -> None:
-        """Materialize the applied-log manifest (with the legacy-scan
-        backfill) if this index predates it or is brand new — round 16:
-        apply_batch's dataset writes now run CONCURRENTLY, which breaks
-        the legacy fallback's "last-written dataset is the marker"
-        assumption, so the log must exist before the first such commit.
-        One driver-side file create, once per index lifetime."""
-        s = self._applied_set()
-        if not self._applied_cache[1]:
-            manifest.ensure(self.spark, self.applied_log_path, s)
-            # flip the log-backed bit only after the log actually READS
-            # (round 17, ADVICE): if the backfill write raced a torn
-            # state, the next commit retries it instead of the cache
-            # claiming a log that read_log would reject
-            if manifest.read_log(
-                self.spark, self.applied_log_path
-            ) is not None:
-                self._applied_cache = (s, True)
-
-    def _log_applied(self, batch_id: int) -> None:
-        """Record a completed commit in the manifest (backfilling a
-        legacy index's applied set on the first logged batch)."""
-        s = self._applied_set()
-        new = {int(batch_id)}
-        if not self._applied_cache[1]:
-            new |= s
-        manifest.append(self.spark, self.applied_log_path, new)
-        self._applied_cache = (s | {int(batch_id)}, True)
-
-    # -- config pinning ----------------------------------------------------
+        """Drop every per-instance metadata cache so the next read
+        re-syncs with mutations other instances committed
+        (:meth:`lifecycle.IndexLifecycle.invalidate`)."""
+        self._lc.invalidate()
 
     def _config(self) -> dict:
         return {
@@ -250,36 +128,6 @@ class BandedMinHashIndex:
             "num_partitions": self.num_partitions,
             "store_tokens": self.store_tokens,
         }
-
-    def _check_meta(self) -> None:
-        if self._meta_checked:
-            return
-        if fs_storage.path_exists(self.spark, self.meta_path):
-            stored = json.loads(
-                self.spark.read.parquet(self.meta_path).first()["config"]
-            )
-            # indexes written before store_tokens existed have no key:
-            # they hold no toks column, i.e. store_tokens=False
-            stored.setdefault("store_tokens", False)
-            if stored != self._config():
-                raise ValueError(
-                    f"index at {self.root} was built with {stored}, "
-                    f"got {self._config()} — hashing/partitioning params are "
-                    "immutable for an index's lifetime"
-                )
-        else:
-            self._write_meta()
-        self._meta_checked = True
-
-    def _write_meta(self) -> None:
-        # driver-side one-row write (round 16) — same crash window as the
-        # job-based mode("overwrite") (delete, then write), minus a full
-        # Spark job submit per index creation
-        fs_storage.write_small_parquet(
-            self.spark, self.meta_path,
-            [(json.dumps(self._config()),)], [("config", "string")],
-            overwrite=True,
-        )
 
     # -- helpers -----------------------------------------------------------
 
@@ -311,21 +159,14 @@ class BandedMinHashIndex:
         must not perturb probe pair sets)."""
         if not fs_storage.path_exists(self.spark, path) or not pfxs:
             return empty_like.select(*cols).limit(0)
-        df = self._ds_cache.get(path)
+        df = self._lc.read_cached(path)
         if df is None:
-            try:
-                df = self.spark.read.parquet(path)
-            except Exception:
-                # dirs whose batches were all empty hold no part files, so
-                # schema inference fails — semantically an empty dataset
-                # (not cached: a later batch may add the first part file)
-                return empty_like.select(*cols).limit(0)
-            self._ds_cache[path] = df
+            return empty_like.select(*cols).limit(0)
         # partition dirs read back as strings (type inference is off)
         df = df.filter(F.col(pfx_col).isin([str(p) for p in pfxs]))
         if exclude_batch_id is not None:
             df = df.filter(F.col("batch_id") != str(exclude_batch_id))
-        return df.filter(self._applied_cond()).select(*cols)
+        return df.filter(self._lc.applied_cond()).select(*cols)
 
     # -- merge-on-read deletes ---------------------------------------------
 
@@ -344,50 +185,7 @@ class BandedMinHashIndex:
 
         ``ids`` is a list of ids or a one-column DataFrame. Returns the
         number of tombstones appended."""
-        # round 11: refuse new writes while a maintenance writer
-        # holds the root's lease (lease.py) — maintenance renames
-        # live datasets aside; a batch landing mid-swap could be
-        # orphaned. One small-file read per batch.
-        if getattr(self, "_lease_depth", 0) == 0:
-            lease.refuse_if_held(self.spark, self.root, "delete_ids")
-        if isinstance(ids, DataFrame):
-            df = ids.toDF("id").distinct()
-        else:
-            if not ids:
-                return 0
-            df = self.spark.createDataFrame([(i,) for i in ids], ["id"]).distinct()
-        df.repartition(1).write.mode("append").parquet(self.deletes_path)
-        n = df.count()
-        self._invalidate_meta_caches()
-        return n
-
-    def _tombstones(self) -> Optional[DataFrame]:
-        if self._tomb_cache != "unset":
-            return self._tomb_cache
-        self._tomb_sig = fs_storage.dir_signature(self.spark, self.deletes_path)
-        if self._tomb_sig is None:
-            self._tomb_cache = None
-            return None
-        try:
-            tomb = self.spark.read.parquet(self.deletes_path).select("id")
-            # materialized once: every probe's anti-join re-reads the
-            # tombstone parquet otherwise — one fixed read per action
-            tomb = tomb.persist()
-            tomb.count()
-        except Exception:
-            tomb = None
-        self._tomb_cache = tomb
-        return tomb
-
-    def _minus_deleted(self, df: DataFrame, id_cols=("id",)) -> DataFrame:
-        tomb = self._tombstones()
-        if tomb is None:
-            return df
-        for c in id_cols:
-            df = df.join(
-                F.broadcast(tomb.select(F.col("id").alias(c))), c, "left_anti"
-            )
-        return df
+        return self._lc.delete_ids(ids)
 
     # -- core --------------------------------------------------------------
 
@@ -438,7 +236,7 @@ class BandedMinHashIndex:
             # parallel with the candidate/verify chain built below
             _on_new_rows(new_rows)
 
-        ob = self._minus_deleted(
+        ob = self._lc.minus_deleted(
             self._read_pruned(
                 self.bands_path, "band_pfx", batch_pfx, exclude_batch_id,
                 empty_like=nb, cols=["id", "band"],
@@ -456,7 +254,7 @@ class BandedMinHashIndex:
                 ),
                 cols=["band", "cnt"],
             ).join(F.broadcast(nb_counts.select("band")), "band", "leftsemi")
-            tomb = self._tombstones()
+            tomb = self._lc.tombstones()
             if tomb is not None:
                 # stored count deltas include tombstoned rows until
                 # compact(); their band rows live in the SAME pruned
@@ -518,7 +316,7 @@ class BandedMinHashIndex:
             .distinct()
             .collect()
         ]
-        old_sh = self._minus_deleted(
+        old_sh = self._lc.minus_deleted(
             self._read_pruned(
                 self.docs_path, "id_pfx", id_pfx, exclude_batch_id,
                 empty_like=new_rows, cols=["id", "sh"],
@@ -550,80 +348,10 @@ class BandedMinHashIndex:
 
     # -- exactly-once batch application ------------------------------------
 
-    def _compacted_through(self) -> int:
-        """Highest batch id folded into a compaction (-1 if never
-        compacted) — batches at or below it lost their per-batch marker
-        directories but are durably applied. Cached in the instance (it
-        only moves when THIS instance compacts)."""
-        if self._ct_cache is not None:
-            return self._ct_cache
-        if not fs_storage.path_exists(self.spark, self.watermark_path):
-            self._ct_cache = -1
-        else:
-            self._ct_cache = int(
-                self.spark.read.parquet(self.watermark_path).first()["through"]
-            )
-        return self._ct_cache
-
     def batch_applied(self, batch_id: int) -> bool:
-        """A batch is durably applied iff it is at or below the
-        compaction watermark or recorded in the ``applied_log`` manifest
-        (appended after the last dataset write, so an entry witnesses a
-        complete commit). A crash between the final write and the log
-        append reads as not-applied: the replay re-commits byte-identical
-        directories and then logs — exactly-once output is preserved."""
-        if int(batch_id) <= self._compacted_through():
-            return True
-        return int(batch_id) in self._applied_set()
-
-    def _fold_targets(self) -> list:
-        """Applied batch ids eligible for folding — the compaction/
-        rebuild source set. Raises if an UNAPPLIED batch directory sits
-        below the fold target: folding would advance the watermark over
-        it and its replay would then be skipped as already-applied
-        (impossible under in-order streaming, where the only crashed
-        batch is the latest; a manual out-of-order apply_batch must be
-        replayed or its directories deleted first).
-
-        The scan covers the PAIRS dataset too (round 10): a batch that
-        crashed after its pairs write but before any other dataset write
-        leaves a pairs-only directory no marker-dataset scan can see;
-        letting the watermark advance over it would make a later
-        compact_pairs() fold those phantom pairs into ``pairs_hist``
-        permanently (and skip the batch's replay) — so it is refused
-        here, while the applied log still has per-batch fidelity.
-
-        Round 16: the scan covers ALL FOUR datasets — apply_batch's
-        writes run concurrently now, so a crashed batch can leave any
-        subset of (pairs, docs, bands, counts) directories, not just a
-        prefix of the old serial order; the refusal must see every
-        shape."""
-        dirs = []
-        for d in fs_storage.list_dirs(self.spark, self.counts_path):
-            if d.startswith("batch_id="):
-                dirs.append(int(d.split("=", 1)[1]))
-        other_dirs = [
-            int(d.split("=", 1)[1])
-            for path in (self.pairs_path, self.docs_path, self.bands_path)
-            for d in fs_storage.list_dirs(self.spark, path)
-            if d.startswith("batch_id=")
-        ]
-        through = self._compacted_through()
-        marked = self._applied_set()
-        applied = [b for b in dirs if b <= through or b in marked]
-        unapplied = sorted(
-            b
-            for b in set(dirs) | set(other_dirs)
-            if not (b <= through or b in marked)
-        )
-        if applied and unapplied and min(unapplied) < max(applied):
-            raise ValueError(
-                f"batch dirs {unapplied} at {self.root} never durably "
-                f"committed but sit below the fold target {max(applied)}"
-                " — replay them (or delete their directories) before "
-                "compact/rebuild"
-            )
-        return applied
+        """Whether ``batch_id`` durably committed
+        (:meth:`lifecycle.IndexLifecycle.batch_applied`)."""
+        return self._lc.batch_applied(batch_id)
 
     def apply_batch(
         self,
@@ -644,30 +372,23 @@ class BandedMinHashIndex:
         ``batch_id=N`` directory, and all probe reads exclude it, so a
         replay after any partial failure reproduces identical output.
         """
-        # round 11 entry probe + round 12 fence capture: the token is
-        # re-verified just before the applied-log append, so maintenance
-        # acquiring mid-batch aborts the commit loudly (lease.py) and
-        # the batch stays replayable. Token FIRST, held-probe second
-        # (round 13): an acquire between the two reads then bumps the
-        # token after the capture and the commit check aborts, instead
-        # of the batch capturing the post-bump token and committing
-        # inside the maintenance window.
-        start_fence = None
-        if getattr(self, "_lease_depth", 0) == 0:
-            start_fence = lease.fence_token(self.spark, self.root)
-            lease.refuse_if_held(self.spark, self.root, "apply_batch")
-        self._recover_compaction()
-        self._sync_tombstones()
-        if self.batch_applied(batch_id):
+        fence = self._lc.open_batch()
+        if self._lc.batch_applied(batch_id):
             return False
-        self._check_meta()
+        # indexes written before store_tokens existed have no key:
+        # they hold no toks column, i.e. store_tokens=False
+        self._lc.check_meta(
+            "hashing/partitioning params are immutable for an index's "
+            "lifetime",
+            store_tokens=False,
+        )
         j = fs_storage.join
         bdir = f"batch_id={int(batch_id)}"
         # Concurrent commits (round 16) break the legacy fallback's
         # "counts written last" marker assumption — materialize the
         # applied log (with the legacy backfill) BEFORE the first such
         # commit so the fallback never engages again on this index.
-        self._ensure_log()
+        self._lc.ensure_log()
         # The four dataset writes are mutually independent Spark jobs:
         # only the applied-log append — after ALL of them — makes the
         # batch durable, and every probe read filters to applied
@@ -730,11 +451,7 @@ class BandedMinHashIndex:
             pairs.write.mode("overwrite").parquet(j(self.pairs_path, bdir))
             for w in waiters:
                 w()
-            if getattr(self, "_lease_depth", 0) == 0:
-                lease.verify_commit_fence(
-                    self.spark, self.root, start_fence, "apply_batch"
-                )
-            self._log_applied(int(batch_id))
+            self._lc.commit_batch(batch_id, fence)
         finally:
             # wait for any in-flight write before releasing the caches
             # it reads (a failed batch's partial directories are replay-
@@ -746,81 +463,19 @@ class BandedMinHashIndex:
                 except Exception:
                     pass
             self.unpersist_intermediates()
-            # this batch added batch_id= directories the cached dataset
-            # listings cannot see — the next probe must re-list
-            self._ds_cache.clear()
+            self._lc.forget_listings()
         return True
 
-    # -- compaction --------------------------------------------------------
+    # -- crash recovery and parameter rebuild (re-banding / re-hashing) ----
 
     def _recover_compaction(self) -> None:
-        """A crash between a compaction's two renames leaves the dataset
-        at ``<ds>.__old__`` and no live directory — restore it (same
-        protocol as the feature-store compaction,
-        sources/feature_dataset.py)."""
-        for path in (
-            self.docs_path, self.bands_path, self.counts_path,
-            self.pairs_path, self.pairs_hist_path,
-        ):
-            old = path.rstrip("/") + ".__old__"
-            if not fs_storage.path_exists(self.spark, path) and (
-                fs_storage.path_exists(self.spark, old)
-            ):
-                fs_storage.rename_path(self.spark, old, path)
-        if pairs_fold.recover(
-            self.spark, self.pairs_path, self.pairs_hist_path,
-            self.pairs_folded_path, self.pairs_fold_marker_path,
-        ):
-            self._pf_cache = None
+        self._lc.recover()
         self._recover_rebuild()
-
-    # -- parameter rebuild (re-banding / re-hashing) -----------------------
-
-    def _swap_in(self, path: str, staging_suffix: str) -> None:
-        """Rename-aside swap of a fully-staged dataset; idempotent (a
-        missing staging dir means the swap already happened)."""
-        staging = path.rstrip("/") + staging_suffix
-        if not fs_storage.path_exists(self.spark, staging):
-            return
-        old = path.rstrip("/") + ".__old__"
-        fs_storage.delete_path(self.spark, old)
-        if fs_storage.path_exists(self.spark, path):
-            fs_storage.rename_path(self.spark, path, old)
-        fs_storage.rename_path(self.spark, staging, path)
-        fs_storage.delete_path(self.spark, old)
 
     def _recover_rebuild(self) -> None:
         """Finish a rebuild whose intent marker committed — the staged
-        docs/bands/counts are complete, so the swaps, meta write, and
-        cleanup replay safely from any crash point. The marker carries
-        the rebuild's CONFIG so even an instance constructed with the
-        pre-rebuild params writes the correct meta and adopts the new
-        ones."""
-        if not fs_storage.path_exists(self.spark, self.rebuild_marker_path):
-            return
-        marker = self.spark.read.parquet(self.rebuild_marker_path).first()
-        for path in (self.docs_path, self.bands_path, self.counts_path):
-            self._swap_in(path, ".__rebuild__")
-        try:
-            cfg = json.loads(marker["config"])
-        except Exception:
-            cfg = self._config()
-        self.num_hashes = int(cfg.get("num_hashes", self.num_hashes))
-        self.num_bands = int(cfg.get("num_bands", self.num_bands))
-        self.seed = int(cfg.get("seed", self.seed))
-        self.num_partitions = int(
-            cfg.get("num_partitions", self.num_partitions)
-        )
-        self.n = int(cfg.get("n", self.n))
-        self._write_meta()
-        fs_storage.delete_path(self.spark, self.deletes_path)
-        fs_storage.delete_path(self.spark, self.rebuild_marker_path)
-        self._invalidate_meta_caches()
-        self._meta_checked = False
-        manifest.reset(
-            self.spark, self.applied_log_path, self._compacted_through()
-        )
-        self._applied_cache = (set(), True)
+        docs/bands/counts swap in (:meth:`lifecycle.IndexLifecycle.finish_rebuild`)."""
+        self._lc.finish_rebuild()
 
     @lease.maintenance_op("rebuild")
     def rebuild(
@@ -863,10 +518,10 @@ class BandedMinHashIndex:
         directories, a write-ahead intent marker (carrying the new
         config) commits the rebuild, the three datasets swap in via
         rename-aside, the meta row updates, tombstones (folded out of
-        the staging) clear. Crash-finishable from any point by any
-        public entry; **run quiesced**. From then on, instances must be
-        constructed with the new params. Returns the number of live
-        documents re-indexed."""
+        the staging) clear (:mod:`lifecycle`). Crash-finishable from any
+        point by any public entry; **run quiesced**. From then on,
+        instances must be constructed with the new params. Returns the
+        number of live documents re-indexed."""
         from .dedup import minhash_signature_from_hashes, shingle_hashes
         from .incremental import _grams_from_tokens
 
@@ -894,21 +549,14 @@ class BandedMinHashIndex:
         )
         if new_cfg["num_hashes"] % new_cfg["num_bands"] != 0:
             raise ValueError("num_bands must divide num_hashes")
-        applied = self._fold_targets()
-        if not applied:
-            raise ValueError(f"no index at {self.root}")
-        target = max(applied)
+        target = self._lc.fold_target()
         reshingle = new_cfg["n"] != self.n
 
         doc_cols = ["id", "sh"] + (["toks"] if self.store_tokens else [])
-        live = self._minus_deleted(
-            self.spark.read.parquet(self.docs_path)
-            # a crashed, never-committed batch's partial docs must not be
-            # folded under the rebuilt batch_id=target (its stream replay
-            # would then ingest the rows a second time)
-            .filter(self._applied_cond())
-            .select(*doc_cols)
-        )
+        # applied-only: a crashed, never-committed batch's partial docs
+        # must not be folded under the rebuilt batch_id=target (its stream
+        # replay would then ingest the rows a second time)
+        live = self._lc.live(self.docs_path, *doc_cols)
         if reshingle and docs is not None:
             # validate the source frame BEFORE any instance mutation — a
             # refused rebuild must leave the instance (and a retry's
@@ -937,8 +585,6 @@ class BandedMinHashIndex:
             # re-shingle from the caller-provided source corpus (the
             # no-stored-tokens path): the SAME ingest tokenization,
             # restricted to the stored live ids
-            from .incremental import minhash_index, minhash_index_with_tokens
-
             index_fn = (
                 minhash_index_with_tokens if self.store_tokens
                 else minhash_index
@@ -975,55 +621,31 @@ class BandedMinHashIndex:
             *(["toks"] if self.store_tokens else []),
         ).persist()
         n_live = rows.count()
-        bid = F.lit(str(target))
+        stage = self._lc.staged
         try:
-            (
-                rows.withColumn("id_pfx", self._pfx(F.col("id")))
-                .withColumn("batch_id", bid)
-                .repartition(F.col("id_pfx"))
-                .write.partitionBy("batch_id", "id_pfx")
-                .mode("overwrite")
-                .parquet(self.docs_path.rstrip("/") + ".__rebuild__")
+            self._lc.write_folded(
+                rows.withColumn("id_pfx", self._pfx(F.col("id"))),
+                stage(self.docs_path), target, ["id_pfx"],
             )
             nb = self._banded(rows).withColumn(
                 "band_pfx", self._pfx(F.col("band"))
             )
-            (
-                nb.withColumn("batch_id", bid)
-                .repartition(F.col("band_pfx"))
-                .sortWithinPartitions("band")
-                .write.partitionBy("batch_id", "band_pfx")
-                .mode("overwrite")
-                .parquet(self.bands_path.rstrip("/") + ".__rebuild__")
+            self._lc.write_folded(
+                nb, stage(self.bands_path), target, ["band_pfx"], sort="band"
             )
-            (
-                nb.groupBy("band", "band_pfx")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .withColumn("batch_id", bid)
-                .repartition(F.col("band_pfx"))
-                .write.partitionBy("batch_id", "band_pfx")
-                .mode("overwrite")
-                .parquet(self.counts_path.rstrip("/") + ".__rebuild__")
+            self._lc.write_folded(
+                nb.groupBy("band", "band_pfx").agg(
+                    F.count(F.lit(1)).alias("cnt")
+                ),
+                stage(self.counts_path), target, ["band_pfx"],
             )
         finally:
             rows.unpersist()
-        # staging done — extend the lease before committing (round 12)
-        lease.renew_active(self)
-        # watermark first (asserts what is already true), then the marker
-        # makes the staged rebuild the committed state — both driver-side
-        # one-row writes (round 16), same crash windows as the job form
-        fs_storage.write_small_parquet(
-            self.spark, self.watermark_path,
-            [(int(target),)], [("through", "int64")], overwrite=True,
-        )
-        fs_storage.write_small_parquet(
-            self.spark, self.rebuild_marker_path,
-            [(json.dumps(self._config()),)], [("config", "string")],
-            overwrite=True,
-        )
+        self._lc.commit_rebuild(target)
         self._recover_rebuild()
-        self._ct_cache = int(target)
         return n_live
+
+    # -- compaction --------------------------------------------------------
 
     @lease.maintenance_op("compact")
     def compact(self) -> int:
@@ -1037,69 +659,28 @@ class BandedMinHashIndex:
         accretes one count-delta row per batch. Compaction rewrites
         docs/bands into a single ``batch_id=<max>`` directory tree (rows
         unchanged, probes and pair sets bit-identical — parity-tested)
-        and band_counts into one summed row per band.
+        and band_counts into one summed row per band. Protocol, crash
+        safety and the run-quiesced rule:
+        :meth:`lifecycle.IndexLifecycle.compact`."""
+        return self._lc.compact(self._fold)
 
-        **Run quiesced** (stream stopped), like the feature-store
-        compaction: concurrent writers could land a batch in a directory
-        that gets renamed aside. Crash safety: the applied watermark
-        advances FIRST (it only asserts what is already true), each
-        dataset then swaps via the rename-aside protocol
-        (stage → live→.__old__ → stage→live → delete), and
-        :meth:`apply_batch`/:meth:`compact` restore a half-swapped
-        dataset before touching anything. The pairs log is untouched —
-        it is the per-batch OUTPUT record, not probe state.
-        """
-        self._recover_compaction()
-        applied = self._fold_targets()
-        has_tombstones = self._tombstones() is not None
-        if len(applied) <= 1 and not has_tombstones:
-            return 0
-        if not applied:
-            return 0
-        target = max(applied)
-        # watermark first: every batch being folded IS durably applied
-        # (driver-side one-row write, round 16)
-        fs_storage.write_small_parquet(
-            self.spark, self.watermark_path,
-            [(int(target),)], [("through", "int64")], overwrite=True,
-        )
-
-        def swap(path: str, df, part_cols: list) -> None:
-            staging = path.rstrip("/") + ".__compact__"
-            old = path.rstrip("/") + ".__old__"
-            fs_storage.delete_path(self.spark, staging)
-            (
-                df.withColumn("batch_id", F.lit(str(target)))
-                .repartition(*[F.col(c) for c in part_cols])
-                .write.partitionBy("batch_id", *part_cols)
-                .mode("overwrite")
-                .parquet(staging)
-            )
-            # staging done — extend the lease before each swap (round 12)
-            lease.renew_active(self)
-            fs_storage.delete_path(self.spark, old)
-            fs_storage.rename_path(self.spark, path, old)
-            fs_storage.rename_path(self.spark, staging, path)
-            fs_storage.delete_path(self.spark, old)
-
+    def _fold(self, target: int) -> None:
         # applied-only: a crashed, never-committed batch's partial rows
         # must not be folded under batch_id=target (the swap drops its
         # directories; its stream replay re-commits it cleanly)
         doc_cols = ["id", "sig", "sh"] + (
             ["toks"] if self.store_tokens else []
         )
-        docs = self._minus_deleted(
-            self.spark.read.parquet(self.docs_path)
-            .filter(self._applied_cond())
-            .select(*doc_cols, "id_pfx")
+        self._lc.swap_folded(
+            self.docs_path,
+            self._lc.live(self.docs_path, *doc_cols, "id_pfx"),
+            target, ["id_pfx"],
         )
-        swap(self.docs_path, docs, ["id_pfx"])
-        bands = self._minus_deleted(
-            self.spark.read.parquet(self.bands_path)
-            .filter(self._applied_cond())
-            .select("id", "band", "band_pfx")
+        self._lc.swap_folded(
+            self.bands_path,
+            self._lc.live(self.bands_path, "id", "band", "band_pfx"),
+            target, ["band_pfx"],
         )
-        swap(self.bands_path, bands, ["band_pfx"])
         # counts RECOMPUTED from the surviving band rows (not summed from
         # deltas): tombstoned rows leave the counts exactly here
         counts = (
@@ -1107,154 +688,31 @@ class BandedMinHashIndex:
             .groupBy("band", "band_pfx")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        swap(self.counts_path, counts, ["band_pfx"])
-        # tombstones are physically applied now; clearing them LAST keeps
-        # any crash window correct (rows gone + tombstones present is a
-        # harmless no-op anti-join)
-        fs_storage.delete_path(self.spark, self.deletes_path)
-        manifest.reset(self.spark, self.applied_log_path, int(target))
-        self._invalidate_meta_caches()
-        self._ct_cache = int(target)
-        self._applied_cache = (set(), True)
-        return len(applied) - 1
+        self._lc.swap_folded(self.counts_path, counts, target, ["band_pfx"])
 
     # -- readers -----------------------------------------------------------
 
-    def _applied_cond(self):
-        """Predicate selecting rows of durably-applied batches: batch_id
-        at or below the compaction watermark (those dirs may have been
-        folded, e.g. the pairs log keeps per-batch dirs compaction never
-        rewrites), or recorded in the applied-log manifest. Costs zero
-        FS ops on a warm instance (both inputs are cached)."""
-        through = self._compacted_through()
-        marked = [str(b) for b in self._applied_set()]
-        return (F.col("batch_id").cast("long") <= F.lit(through)) | (
-            F.col("batch_id").isin(marked)
-        )
-
-    def _pairs_folded(self) -> int:
-        """Highest batch id folded into ``pairs_hist`` (-1 if never);
-        cached — it only moves when this instance folds."""
-        if self._pf_cache is None:
-            self._pf_cache = pairs_fold.folded_through(
-                self.spark, self.pairs_folded_path
-            )
-        return self._pf_cache
-
     def pairs(self) -> DataFrame:
         """Accumulated (id_a, id_b, jaccard, batch_id) over all APPLIED
-        batches (empty long-id frame if no batch ever produced a pair).
-        Pairs are written before the applied marker, so an in-flight or
-        crashed batch's pairs are filtered out here — they reappear,
-        byte-identical, once its replay commits. Batches folded by
-        :meth:`compact_pairs` read from the consolidated history dataset
-        (batch_id preserved as a data column — same rows, same schema).
-
-        Recovery (incl. finishing a marker-committed fold) runs on the
-        COLD read only — the fold watermark cache doubles as the
-        checked-flag, so warm repeated pairs() reads cost zero extra FS
-        ops, and every mutating op invalidates the cache and re-arms
-        the check."""
-        if self._pf_cache is None:
-            self._recover_compaction()
-        return pairs_fold.read_all(
-            self.spark, self.pairs_path, self.pairs_hist_path,
-            self._pairs_folded(), self._applied_cond(),
-            ["id_a", "id_b", "jaccard", "batch_id"],
-            "id_a long, id_b long, jaccard double, batch_id long",
-        )
+        batches (:meth:`lifecycle.IndexLifecycle.pairs`)."""
+        return self._lc.pairs()
 
     @lease.maintenance_op("compact_pairs")
     def compact_pairs(self) -> int:
-        """Fold the pairs log's per-batch directories at or below the
-        compaction watermark into ``pairs_hist`` (batch_id kept as a
-        data column — :meth:`pairs` output is bit-identical). Bounds the
-        pairs-read listing to the batches since the last fold, the same
-        O(batches) metadata term the applied-log manifest removed from
-        the probe path; :meth:`compact` leaves the pairs log alone
-        precisely so per-batch provenance survives, and this fold keeps
-        that provenance while dropping the directory-per-batch layout.
-        Marker-committed and crash-finishable (:mod:`pairs_fold`);
-        **run quiesced**, like compact. Returns directories folded."""
-        self._recover_compaction()
-        # validates that no phantom (pairs-only, never-committed) batch
-        # dir sits below the fold target — folding it into pairs_hist
-        # would be permanent (round 10, defense-in-depth: compact()
-        # refuses to advance the watermark over one in the first place)
-        self._fold_targets()
-        n = pairs_fold.fold(
-            self.spark, self.pairs_path, self.pairs_hist_path,
-            self.pairs_folded_path, self.pairs_fold_marker_path,
-            self._compacted_through(),
-            ["id_a", "id_b", "jaccard", "batch_id"],
-        )
-        self._pf_cache = None
-        return n
+        """Fold the pairs log's batch directories at or below the
+        compaction watermark into ``pairs_hist``; :meth:`pairs` output is
+        bit-identical (:meth:`lifecycle.IndexLifecycle.compact_pairs`).
+        **Run quiesced**. Returns directories folded."""
+        return self._lc.compact_pairs()
 
     def doc_rows(self) -> DataFrame:
         """All live (id, sig, sh) rows of APPLIED batches — tombstoned
         docs excluded (full scan — audits only)."""
-        return self._minus_deleted(
-            self.spark.read.parquet(self.docs_path)
-            .filter(self._applied_cond())
-            .select("id", "sig", "sh")
-        )
+        return self._lc.live(self.docs_path, "id", "sig", "sh")
 
     @lease.maintenance_op("scrub_pairs")
     def scrub_pairs(self, ids) -> int:
-        """GDPR-complete removal from the pairs LOG: rewrite it dropping
-        every pair touching ``ids`` (a list or one-column DataFrame).
-
-        :meth:`delete_ids` + :meth:`compact` remove a document's index
-        rows, but the pairs log is ordinarily an immutable historical
-        record — a right-to-be-forgotten request must also scrub the
-        pairs that mention the id. One filtered rewrite preserving the
-        per-batch directory layout, swapped in with the rename-aside
-        protocol (crash-recoverable; run quiesced, like compact).
-        Returns the number of pair rows dropped."""
-        if isinstance(ids, DataFrame):
-            tomb = ids.toDF("id").distinct()
-        else:
-            if not ids:
-                return 0
-            tomb = self.spark.createDataFrame(
-                [(i,) for i in ids], ["id"]
-            ).distinct()
-        self._recover_compaction()
-        hist_dropped = pairs_fold.scrub_hist(
-            self.spark, self.pairs_hist_path, tomb,
-            ["id_a", "id_b", "jaccard", "batch_id"],
-        )
-        if not fs_storage.path_exists(self.spark, self.pairs_path):
-            return hist_dropped
-        try:
-            pairs = self.spark.read.parquet(self.pairs_path)
-        except Exception:
-            return hist_dropped
-        before = pairs.count()
-        kept = (
-            pairs.join(
-                F.broadcast(tomb.select(F.col("id").alias("id_a"))),
-                "id_a", "left_anti",
-            ).join(
-                F.broadcast(tomb.select(F.col("id").alias("id_b"))),
-                "id_b", "left_anti",
-            )
-        )
-        staging = self.pairs_path.rstrip("/") + ".__scrub__"
-        old = self.pairs_path.rstrip("/") + ".__old__"
-        fs_storage.delete_path(self.spark, staging)
-        (
-            kept.write.partitionBy("batch_id")
-            .mode("overwrite")
-            .parquet(staging)
-        )
-        fs_storage.delete_path(self.spark, old)
-        fs_storage.rename_path(self.spark, self.pairs_path, old)
-        fs_storage.rename_path(self.spark, staging, self.pairs_path)
-        fs_storage.delete_path(self.spark, old)
-        try:
-            after = self.spark.read.parquet(self.pairs_path).count()
-        except Exception:
-            after = 0  # every batch dir emptied
-        return hist_dropped + before - after
+        """GDPR-complete removal from the pairs LOG of every pair
+        touching ``ids`` (:meth:`lifecycle.IndexLifecycle.scrub_pairs`;
+        run quiesced). Returns the number of pair rows dropped."""
+        return self._lc.scrub_pairs(ids)

@@ -158,8 +158,15 @@ def lang_id(col: Column) -> Column:
     tokenize passes per row measured in the plan. Prefer
     :func:`lang_table` in hot paths (same staged-projection discipline
     as :func:`quality_table`)."""
-    scores = lang_scores(col)
-    langs = list(LANG_STOPWORDS.keys())
+    return _argmax_lang(lang_scores(col))
+
+
+def _argmax_lang(scores: Dict[str, Column]) -> Column:
+    """The language with the highest score; ties go to the earlier
+    language in ``scores`` order, and 'und' when no score is positive.
+    The one argmax :func:`lang_id` and :func:`lang_table` share, so
+    their parity holds by construction."""
+    langs = list(scores)
     best_lang = F.lit(langs[0])
     best_score = scores[langs[0]]
     for lang in langs[1:]:
@@ -194,13 +201,7 @@ def lang_table(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
             .alias(f"_s_{lang}")
         )
     s2 = s1.select("id", *score_cols)
-    best_lang = F.lit(langs[0])
-    best_score = F.col(f"_s_{langs[0]}")
-    for lang in langs[1:]:
-        is_better = F.col(f"_s_{lang}") > best_score
-        best_lang = F.when(is_better, F.lit(lang)).otherwise(best_lang)
-        best_score = F.when(is_better, F.col(f"_s_{lang}")).otherwise(best_score)
-    out = F.when(best_score <= 0, F.lit("und")).otherwise(best_lang)
+    out = _argmax_lang({lang: F.col(f"_s_{lang}") for lang in langs})
     return s2.select("id", out.alias("lang_guess"))
 
 

@@ -20,25 +20,25 @@ shapes, same micro-unit freeze), so a full-corpus index query replays the
 same DuckDB oracle — asserted by the ``bm25_index_topk`` catalog row and
 a bit-equality pytest against the on-the-fly operator.
 
-Exactly-once ingestion, merge-on-read deletes, and compaction use the
-same recipes as the sibling indexes (per-batch overwrite directories; an
-``applied_log`` manifest entry appended after the last dataset write as
-the applied marker — :mod:`manifest`, one cached read, O(1) metadata ops
-per search; broadcast tombstone anti-joins; rename-aside compaction
-swap). Same checkpoint/index lifecycle caveat as
-:mod:`streaming.dedup_lsh`.
+Exactly-once ingestion, merge-on-read deletes, compaction and rebuild
+are the persisted-index lifecycle shared with the sibling indexes,
+:mod:`lifecycle` (per-batch overwrite directories; an ``applied_log``
+manifest entry appended after the last dataset write as the applied
+marker — :mod:`manifest`, one cached read, O(1) metadata ops per search;
+broadcast tombstone anti-joins; rename-aside compaction swap). Same
+checkpoint/index lifecycle caveat as :mod:`streaming.dedup_lsh`.
 """
 
 from __future__ import annotations
 
-import json
-from typing import List, Optional
+from typing import List
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import storage as fs_storage
-from . import lease, manifest
+from . import lease
+from .lifecycle import IndexLifecycle
 from .text import tokens
 
 # doclens fold sizing: one row per live document (two narrow columns), so
@@ -63,211 +63,37 @@ class InvertedIndex:
         self.spark = spark
         self.root = root
         self.num_partitions = num_partitions
-        j = fs_storage.join
-        self.postings_path = j(root, "postings")
-        self.doclens_path = j(root, "doclens")
-        self.meta_path = j(root, "meta")
-        self.deletes_path = j(root, "deletes")
-        self.watermark_path = j(root, "compacted_through")
-        self.rebuild_marker_path = j(root, "rebuild_commit")
-        self.applied_log_path = j(root, "applied_log")
-        # per-instance metadata caches (watermark, tombstones, meta
-        # validation) — see banded_index for the rationale; invalidated
-        # by delete_ids/compact
-        self._ct_cache: Optional[int] = None
-        self._tomb_cache = "unset"
-        self._tomb_sig = None
-        self._meta_checked = False
-        # (applied-ids set above the watermark, log-exists flag) — one
-        # cached commit-log read replaces the per-batch _SUCCESS probes
-        self._applied_cache: Optional[tuple] = None
-
-    def _invalidate_meta_caches(self) -> None:
-        if isinstance(self._tomb_cache, DataFrame):
-            self._tomb_cache.unpersist()
-        self._tomb_cache = "unset"
-        self._ct_cache = None
-        self._applied_cache = None
-
-    def _sync_tombstones(self) -> None:
-        """Cross-instance delete visibility on a cheap signal: one
-        listing of the tiny ``deletes/`` dataset (bounded by delete_ids
-        calls since the last compact) compared against the signature
-        captured when the cached tombstone frame was built; a mismatch
-        drops just that cache. Called once per apply_batch, so a
-        long-lived WRITER (the streaming sinks hold one instance for the
-        stream's lifetime) observes delete_ids issued through other
-        instances at its next micro-batch. Plain READERS may serve a
-        cached tombstone set until :meth:`refresh` — which guarantees
-        the next read observes the delete."""
-        if self._tomb_cache == "unset":
-            return
-        if (
-            fs_storage.dir_signature(self.spark, self.deletes_path)
-            != self._tomb_sig
-        ):
-            if isinstance(self._tomb_cache, DataFrame):
-                self._tomb_cache.unpersist()
-            self._tomb_cache = "unset"
+        self._lc = IndexLifecycle(self, ("doclens", "postings"))
+        self.doclens_path, self.postings_path = self._lc.datasets
 
     def refresh(self) -> None:
-        """Drop every per-instance metadata cache (tombstones, compaction
-        watermark, applied-batch set) so the next read re-syncs with
-        mutations other instances committed — deletes, compactions,
-        applied batches. Single-writer per index is still the contract;
-        this is the reader-side lever."""
-        self._invalidate_meta_caches()
+        """Drop every per-instance metadata cache so the next read
+        re-syncs with mutations other instances committed
+        (:meth:`lifecycle.IndexLifecycle.invalidate`)."""
+        self._lc.invalidate()
+
+    def _config(self) -> dict:
+        return {"num_partitions": self.num_partitions}
 
     def _pfx(self, col):
         return F.pmod(F.xxhash64(col), F.lit(self.num_partitions))
-
-    def _check_meta(self) -> None:
-        if self._meta_checked:
-            return
-        cfg = {"num_partitions": self.num_partitions}
-        if fs_storage.path_exists(self.spark, self.meta_path):
-            stored = json.loads(
-                self.spark.read.parquet(self.meta_path).first()["config"]
-            )
-            if stored != cfg:
-                raise ValueError(
-                    f"index at {self.root} was built with {stored}, got "
-                    f"{cfg} — the prefix modulus is immutable"
-                )
-        else:
-            fs_storage.write_small_parquet(
-                self.spark, self.meta_path,
-                [(json.dumps(cfg),)], [("config", "string")],
-                overwrite=True,
-            )
-        self._meta_checked = True
 
     # -- merge-on-read deletes ---------------------------------------------
 
     def delete_ids(self, ids) -> int:
         """Tombstone documents; probes and corpus scalars exclude them
         immediately, :meth:`compact` drops their rows physically."""
-        # round 11: refuse new writes while a maintenance writer
-        # holds the root's lease (lease.py) — maintenance renames
-        # live datasets aside; a batch landing mid-swap could be
-        # orphaned. One small-file read per batch.
-        if getattr(self, "_lease_depth", 0) == 0:
-            lease.refuse_if_held(self.spark, self.root, "delete_ids")
-        if isinstance(ids, DataFrame):
-            df = ids.toDF("id").distinct()
-        else:
-            if not ids:
-                return 0
-            df = self.spark.createDataFrame([(i,) for i in ids], ["id"]).distinct()
-        df.repartition(1).write.mode("append").parquet(self.deletes_path)
-        n = df.count()
-        self._invalidate_meta_caches()
-        return n
-
-    def _tombstones(self) -> Optional[DataFrame]:
-        if self._tomb_cache != "unset":
-            return self._tomb_cache
-        self._tomb_sig = fs_storage.dir_signature(self.spark, self.deletes_path)
-        if self._tomb_sig is None:
-            self._tomb_cache = None
-            return None
-        try:
-            tomb = self.spark.read.parquet(self.deletes_path).select("id")
-            tomb = tomb.persist()
-            tomb.count()
-        except Exception:
-            tomb = None
-        self._tomb_cache = tomb
-        return tomb
-
-    def _minus_deleted(self, df: DataFrame) -> DataFrame:
-        tomb = self._tombstones()
-        if tomb is None:
-            return df
-        return df.join(F.broadcast(tomb), "id", "left_anti")
+        return self._lc.delete_ids(ids)
 
     # -- exactly-once ingestion --------------------------------------------
 
-    def _compacted_through(self) -> int:
-        if self._ct_cache is not None:
-            return self._ct_cache
-        if not fs_storage.path_exists(self.spark, self.watermark_path):
-            self._ct_cache = -1
-        else:
-            self._ct_cache = int(
-                self.spark.read.parquet(self.watermark_path).first()["through"]
-            )
-        return self._ct_cache
-
     def batch_applied(self, batch_id: int) -> bool:
-        """Applied iff at/below the compaction watermark or recorded in
-        the applied-log manifest (appended after the last dataset write;
-        a crash before the append reads as not-applied and the replay
-        re-commits byte-identical directories)."""
-        if int(batch_id) <= self._compacted_through():
-            return True
-        return int(batch_id) in self._applied_set()
-
-    def _applied_set(self) -> set:
-        """Batch ids above the compaction watermark whose ingestion
-        durably committed. One cached read of the ``applied_log``
-        manifest (O(1) metadata ops per search, independent of
-        uncompacted-batch count); a legacy index without a log falls
-        back to one _SUCCESS directory scan of the last-written dataset
-        (doclens). Search reads filter through this so a concurrent or
-        crashed apply_batch — whose postings land BEFORE its doclens —
-        can never skew n_docs/avgdl or surface partial postings."""
-        if self._applied_cache is not None:
-            return self._applied_cache[0]
-        through = self._compacted_through()
-        logged = manifest.read_log(self.spark, self.applied_log_path)
-        if logged is None:
-            s = manifest.legacy_scan(self.spark, self.doclens_path, through)
-            self._applied_cache = (s, False)
-        else:
-            s = {b for b in logged if b > through}
-            self._applied_cache = (s, True)
-        return s
-
-    def _log_applied(self, batch_id: int) -> None:
-        """Record a completed commit in the manifest (backfilling a
-        legacy index's applied set on the first logged batch)."""
-        s = self._applied_set()
-        new = {int(batch_id)}
-        if not self._applied_cache[1]:
-            new |= s
-        manifest.append(self.spark, self.applied_log_path, new)
-        self._applied_cache = (s | {int(batch_id)}, True)
-
-    def _applied_cond(self):
-        """Predicate selecting rows of durably-applied batches; zero FS
-        ops on a warm instance (watermark + applied set are cached)."""
-        through = self._compacted_through()
-        marked = [str(b) for b in self._applied_set()]
-        return (F.col("batch_id").cast("long") <= F.lit(through)) | (
-            F.col("batch_id").isin(marked)
-        )
-
-    def _fold_targets(self) -> list:
-        """Applied batch ids eligible for folding (compaction/rebuild
-        source set); raises on an unapplied batch dir below the fold
-        target — see BandedMinHashIndex._fold_targets."""
-        dirs = []
-        for d in fs_storage.list_dirs(self.spark, self.doclens_path):
-            if d.startswith("batch_id="):
-                dirs.append(int(d.split("=", 1)[1]))
-        through = self._compacted_through()
-        marked = self._applied_set()
-        applied = [b for b in dirs if b <= through or b in marked]
-        unapplied = sorted(set(dirs) - set(applied))
-        if applied and unapplied and min(unapplied) < max(applied):
-            raise ValueError(
-                f"batch dirs {unapplied} at {self.root} never durably "
-                f"committed but sit below the fold target {max(applied)}"
-                " — replay them (or delete their directories) before "
-                "compact/rebuild"
-            )
-        return applied
+        """Whether ``batch_id`` durably committed
+        (:meth:`lifecycle.IndexLifecycle.batch_applied`). Search reads
+        filter through the applied set, so a concurrent or crashed
+        apply_batch — whose postings land BEFORE its doclens — can never
+        skew n_docs/avgdl or surface partial postings."""
+        return self._lc.batch_applied(batch_id)
 
     def apply_batch(
         self,
@@ -281,23 +107,10 @@ class InvertedIndex:
         batch committed). Ids must be disjoint from stored ids.
         Zero-token documents contribute no rows (same contract as
         bm25_topk's token stream)."""
-        # round 11 entry probe + round 12 fence capture: the token is
-        # re-verified just before the applied-log append, so maintenance
-        # acquiring mid-batch aborts the commit loudly (lease.py) and
-        # the batch stays replayable. Token FIRST, held-probe second
-        # (round 13): an acquire between the two reads then bumps the
-        # token after the capture and the commit check aborts, instead
-        # of the batch capturing the post-bump token and committing
-        # inside the maintenance window.
-        start_fence = None
-        if getattr(self, "_lease_depth", 0) == 0:
-            start_fence = lease.fence_token(self.spark, self.root)
-            lease.refuse_if_held(self.spark, self.root, "apply_batch")
-        self._recover_compaction()
-        self._sync_tombstones()
-        if self.batch_applied(batch_id):
+        fence = self._lc.open_batch()
+        if self._lc.batch_applied(batch_id):
             return False
-        self._check_meta()
+        self._lc.check_meta("the prefix modulus is immutable")
         j = fs_storage.join
         bdir = f"batch_id={int(batch_id)}"
         tok = batch.select(
@@ -324,11 +137,7 @@ class InvertedIndex:
             )
             dl = tf.groupBy("id").agg(F.sum("tf").alias("dl"))
             dl.write.mode("overwrite").parquet(j(self.doclens_path, bdir))
-            if getattr(self, "_lease_depth", 0) == 0:
-                lease.verify_commit_fence(
-                    self.spark, self.root, start_fence, "apply_batch"
-                )
-            self._log_applied(int(batch_id))
+            self._lc.commit_batch(batch_id, fence)
         finally:
             tf.unpersist()
         return True
@@ -359,8 +168,8 @@ class InvertedIndex:
             and fs_storage.path_exists(self.spark, self.doclens_path)
         ):
             raise ValueError(f"no index at {self.root}")
-        applied_cond = self._applied_cond()
-        dl = self._minus_deleted(
+        applied_cond = self._lc.applied_cond()
+        dl = self._lc.minus_deleted(
             self.spark.read.parquet(self.doclens_path)
             .filter(applied_cond)
             .select("id", "dl")
@@ -386,7 +195,7 @@ class InvertedIndex:
             .filter(applied_cond)
             .filter(F.col("term_pfx").isin([str(p) for p in sorted(pfxs)]))
         )
-        tf = self._minus_deleted(
+        tf = self._lc.minus_deleted(
             post.filter(F.col("term").isin(terms)).select("id", "term", "tf")
         )
         stats = dl.agg(
@@ -421,59 +230,17 @@ class InvertedIndex:
         w = Window.orderBy(F.col("score_micro").desc(), F.col("doc").asc())
         return topk.withColumn("rank", F.row_number().over(w))
 
-    # -- compaction --------------------------------------------------------
+    # -- crash recovery and parameter rebuild (prefix-modulus change) ------
 
     def _recover_compaction(self) -> None:
-        for path in (self.postings_path, self.doclens_path):
-            old = path.rstrip("/") + ".__old__"
-            if not fs_storage.path_exists(self.spark, path) and (
-                fs_storage.path_exists(self.spark, old)
-            ):
-                fs_storage.rename_path(self.spark, old, path)
+        self._lc.recover()
         self._recover_rebuild()
 
-    # -- parameter rebuild (prefix-modulus change) -------------------------
-
-    def _swap_in(self, path: str, staging_suffix: str) -> None:
-        staging = path.rstrip("/") + staging_suffix
-        if not fs_storage.path_exists(self.spark, staging):
-            return
-        old = path.rstrip("/") + ".__old__"
-        fs_storage.delete_path(self.spark, old)
-        if fs_storage.path_exists(self.spark, path):
-            fs_storage.rename_path(self.spark, path, old)
-        fs_storage.rename_path(self.spark, staging, path)
-        fs_storage.delete_path(self.spark, old)
-
     def _recover_rebuild(self) -> None:
-        """Finish a committed rebuild (same config-carrying marker
-        protocol as the sibling indexes — replays safely from any crash
-        point, even by an instance constructed with the old modulus)."""
-        if not fs_storage.path_exists(self.spark, self.rebuild_marker_path):
-            return
-        marker = self.spark.read.parquet(self.rebuild_marker_path).first()
-        self._swap_in(self.postings_path, ".__rebuild__")
-        self._swap_in(self.doclens_path, ".__rebuild__")
-        try:
-            cfg = json.loads(marker["config"])
-            self.num_partitions = int(
-                cfg.get("num_partitions", self.num_partitions)
-            )
-        except Exception:
-            pass
-        fs_storage.write_small_parquet(
-            self.spark, self.meta_path,
-            [(json.dumps({"num_partitions": self.num_partitions}),)],
-            [("config", "string")], overwrite=True,
-        )
-        fs_storage.delete_path(self.spark, self.deletes_path)
-        fs_storage.delete_path(self.spark, self.rebuild_marker_path)
-        self._invalidate_meta_caches()
-        self._meta_checked = False
-        manifest.reset(
-            self.spark, self.applied_log_path, self._compacted_through()
-        )
-        self._applied_cache = (set(), True)
+        """Finish a committed rebuild — replays safely from any crash
+        point, even by an instance constructed with the old modulus
+        (:meth:`lifecycle.IndexLifecycle.finish_rebuild`)."""
+        self._lc.finish_rebuild()
 
     @lease.maintenance_op("rebuild")
     def rebuild(self, num_partitions: int) -> int:
@@ -486,127 +253,53 @@ class InvertedIndex:
         quiesced**; instances must use the new modulus afterwards.
         Returns the number of live documents re-indexed."""
         self._recover_compaction()
-        applied = self._fold_targets()
-        if not applied:
-            raise ValueError(f"no index at {self.root}")
-        target = max(applied)
-        # applied-cond captured BEFORE num_partitions mutates (it only
-        # depends on the watermark/applied caches, but capture early for
-        # clarity); a crashed batch's partial postings must not be folded
-        # under batch_id=target — its stream replay re-ingests it cleanly
-        applied_cond = self._applied_cond()
+        target = self._lc.fold_target()
+        # applied-only rows captured BEFORE num_partitions mutates (they
+        # only depend on the watermark/applied caches, but capture early
+        # for clarity); a crashed batch's partial postings must not be
+        # folded under batch_id=target — its stream replay re-ingests it
+        # cleanly
+        post = self._lc.live(self.postings_path, "id", "term", "tf")
+        dl = self._lc.live(self.doclens_path, "id", "dl")
         self.num_partitions = int(num_partitions)
-        bid = F.lit(str(target))
-        post = self._minus_deleted(
-            self.spark.read.parquet(self.postings_path)
-            .filter(applied_cond)
-            .select("id", "term", "tf")
-        )
-        (
-            post.withColumn("term_pfx", self._pfx(F.col("term")))
-            .withColumn("batch_id", bid)
-            .repartition(F.col("term_pfx"))
-            .sortWithinPartitions("term")
-            .write.partitionBy("batch_id", "term_pfx")
-            .mode("overwrite")
-            .parquet(self.postings_path.rstrip("/") + ".__rebuild__")
-        )
-        dl = self._minus_deleted(
-            self.spark.read.parquet(self.doclens_path)
-            .filter(applied_cond)
-            .select("id", "dl")
+        self._lc.write_folded(
+            post.withColumn("term_pfx", self._pfx(F.col("term"))),
+            self._lc.staged(self.postings_path), target, ["term_pfx"],
+            sort="term",
         )
         n_live = dl.count()
         # doclens is CORPUS-sized (one row per live document): spread the
         # fold across hash-of-id tasks scaled to the row count — never a
         # single-task write of a multi-GB table (round-10 fix; small
         # corpora still produce one file)
-        (
-            dl.withColumn("batch_id", bid)
-            .repartition(_doclens_partitions(n_live), F.col("id"))
-            .write.partitionBy("batch_id")
-            .mode("overwrite")
-            .parquet(self.doclens_path.rstrip("/") + ".__rebuild__")
+        self._lc.write_folded(
+            dl, self._lc.staged(self.doclens_path), target,
+            by=[_doclens_partitions(n_live), F.col("id")],
         )
-        # staging done — extend the lease before committing (round 12)
-        lease.renew_active(self)
-        fs_storage.write_small_parquet(
-            self.spark, self.watermark_path,
-            [(int(target),)], [("through", "int64")], overwrite=True,
-        )
-        fs_storage.write_small_parquet(
-            self.spark, self.rebuild_marker_path,
-            [(json.dumps({"num_partitions": self.num_partitions}),)],
-            [("config", "string")], overwrite=True,
-        )
+        self._lc.commit_rebuild(target)
         self._recover_rebuild()
-        self._ct_cache = int(target)
         return n_live
+
+    # -- compaction --------------------------------------------------------
 
     @lease.maintenance_op("compact")
     def compact(self) -> int:
         """Fold applied batch directories into one and drop tombstoned
-        documents physically (rename-aside swap, crash-recoverable; run
-        quiesced — same protocol as the sibling indexes)."""
-        self._recover_compaction()
-        applied = self._fold_targets()
-        has_tombstones = fs_storage.path_exists(self.spark, self.deletes_path)
-        if not applied or (len(applied) <= 1 and not has_tombstones):
-            return 0
-        target = max(applied)
-        applied_cond = self._applied_cond()
-        fs_storage.write_small_parquet(
-            self.spark, self.watermark_path,
-            [(int(target),)], [("through", "int64")], overwrite=True,
-        )
+        documents physically (:meth:`lifecycle.IndexLifecycle.compact`;
+        run quiesced). Returns the number of batch directories
+        removed."""
+        return self._lc.compact(self._fold)
 
-        def swap(path: str, df, part_cols: list) -> None:
-            staging = path.rstrip("/") + ".__compact__"
-            old = path.rstrip("/") + ".__old__"
-            fs_storage.delete_path(self.spark, staging)
-            out = df.withColumn("batch_id", F.lit(str(target)))
-            if part_cols:
-                out = out.repartition(*[F.col(c) for c in part_cols])
-            else:
-                # the no-part-cols dataset is doclens — corpus-sized;
-                # scale the fold's task count to its row count instead of
-                # folding through one task (round-10 fix)
-                out = out.repartition(
-                    _doclens_partitions(df.count()), F.col("id")
-                )
-            (
-                out.write.partitionBy("batch_id", *part_cols)
-                .mode("overwrite")
-                .parquet(staging)
-            )
-            # staging done — extend the lease before each swap (round 12)
-            lease.renew_active(self)
-            fs_storage.delete_path(self.spark, old)
-            fs_storage.rename_path(self.spark, path, old)
-            fs_storage.rename_path(self.spark, staging, path)
-            fs_storage.delete_path(self.spark, old)
-
-        swap(
+    def _fold(self, target: int) -> None:
+        self._lc.swap_folded(
             self.postings_path,
-            self._minus_deleted(
-                self.spark.read.parquet(self.postings_path)
-                .filter(applied_cond)
-                .select("id", "term", "tf", "term_pfx")
-            ),
-            ["term_pfx"],
+            self._lc.live(self.postings_path, "id", "term", "tf", "term_pfx"),
+            target, ["term_pfx"],
         )
-        swap(
-            self.doclens_path,
-            self._minus_deleted(
-                self.spark.read.parquet(self.doclens_path)
-                .filter(applied_cond)
-                .select("id", "dl")
-            ),
-            [],
+        dl = self._lc.live(self.doclens_path, "id", "dl")
+        # doclens is corpus-sized; scale the fold's task count to its row
+        # count instead of folding through one task (round-10 fix)
+        self._lc.swap_folded(
+            self.doclens_path, dl, target,
+            by=[_doclens_partitions(dl.count()), F.col("id")],
         )
-        fs_storage.delete_path(self.spark, self.deletes_path)
-        manifest.reset(self.spark, self.applied_log_path, int(target))
-        self._invalidate_meta_caches()
-        self._ct_cache = int(target)
-        self._applied_cache = (set(), True)
-        return len(applied) - 1

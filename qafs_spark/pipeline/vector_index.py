@@ -15,7 +15,8 @@ vector once, under its IVF cell:
   practice — train once on a sample, assign forever).
 - ``pairs/batch_id=N/`` — each batch's near-dup pairs.
 
-Exactly-once: same recipe as :mod:`banded_index` — per-batch directories
+Exactly-once: the persisted-index lifecycle shared with
+:mod:`banded_index`, :mod:`lifecycle` — per-batch directories
 committed with overwrite semantics, probe reads exclude the in-flight
 batch, and an ``applied_log`` manifest entry appended after the last
 dataset write is the applied marker (:mod:`manifest` — one cached read,
@@ -48,7 +49,6 @@ the mandated LLM-training-data extension alongside semdedup/similarity.
 
 from __future__ import annotations
 
-import json
 import threading
 from typing import List, Optional, Tuple
 
@@ -56,7 +56,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import storage as fs_storage
-from . import lease, manifest, pairs_fold
+from . import lease
+from .lifecycle import IndexLifecycle
 
 # Ingest-dedup cell cap: a cell past this size gets sub-bucketed by
 # hyperplane sign patterns before the within-cell pair join, capping the
@@ -479,18 +480,12 @@ class CellVectorIndex:
             int(node_budget_bytes) if node_budget_bytes
             else NODE_ARTIFACT_BUDGET_BYTES
         )
-        j = fs_storage.join
-        self.vectors_path = j(root, "vectors")
-        self.centroids_path = j(root, "centroids")
-        self.pairs_path = j(root, "pairs")
-        self.meta_path = j(root, "meta")
-        self.deletes_path = j(root, "deletes")
-        self.watermark_path = j(root, "compacted_through")
-        self.retrain_marker_path = j(root, "retrain_commit")
-        self.applied_log_path = j(root, "applied_log")
-        self.pairs_hist_path = j(root, "pairs_hist")
-        self.pairs_folded_path = j(root, "pairs_folded")
-        self.pairs_fold_marker_path = j(root, "pairs_fold_commit")
+        self._lc = IndexLifecycle(
+            self, ("vectors",), op="retrain", pairs_score="cosine",
+            rebuilt=("centroids",),
+        )
+        self.vectors_path, self.pairs_path = self._lc.datasets
+        self.centroids_path = fs_storage.join(root, "centroids")
         self._persisted: list = []
         self._shared_blocks: list = []  # _SharedBlocks artifacts (r12)
         # round-14 slot pool for shared-block artifact names: fixed
@@ -507,62 +502,15 @@ class CellVectorIndex:
         # concurrent _collect_blocks on one index would otherwise take
         # the same slot id and overwrite each other's artifacts
         self._blk_lock = threading.Lock()
-        # per-instance metadata caches (watermark, tombstones, quantizer,
-        # meta validation): tiny fixed parquet reads otherwise repeated
-        # every micro-batch — see banded_index for the rationale.
-        # Invalidated by delete_ids/compact/retrain.
-        self._ct_cache: Optional[int] = None
-        self._tomb_cache = "unset"
-        self._tomb_sig = None
+        # the frozen quantizer, re-read per micro-batch otherwise;
+        # dropped by retrain
         self._cents_cache: Optional[List[List[float]]] = None
-        self._meta_checked = False
-        # (applied-ids set above the watermark, log-exists flag) — one
-        # cached commit-log read replaces the per-batch _SUCCESS probes
-        self._applied_cache: Optional[tuple] = None
-        self._pf_cache: Optional[int] = None  # pairs-fold watermark
-        # dataset-read cache (round 17, same idiom as the banded index):
-        # spark.read.parquet(vectors/) re-lists every accumulated
-        # batch_id=/cell= directory per probe; cache the resolved frame,
-        # dropped whenever the dataset's directories can change
-        self._ds_cache: dict = {}
-
-    def _invalidate_meta_caches(self) -> None:
-        if isinstance(self._tomb_cache, DataFrame):
-            self._tomb_cache.unpersist()
-        self._tomb_cache = "unset"
-        self._ct_cache = None
-        self._applied_cache = None
-        self._pf_cache = None
-        self._ds_cache.clear()
-
-    def _sync_tombstones(self) -> None:
-        """Cross-instance delete visibility on a cheap signal: one
-        listing of the tiny ``deletes/`` dataset (bounded by delete_ids
-        calls since the last compact) compared against the signature
-        captured when the cached tombstone frame was built; a mismatch
-        drops just that cache. Called once per apply_batch, so a
-        long-lived WRITER (the streaming sinks hold one instance for the
-        stream's lifetime) observes delete_ids issued through other
-        instances at its next micro-batch. Plain READERS may serve a
-        cached tombstone set until :meth:`refresh` — which guarantees
-        the next read observes the delete."""
-        if self._tomb_cache == "unset":
-            return
-        if (
-            fs_storage.dir_signature(self.spark, self.deletes_path)
-            != self._tomb_sig
-        ):
-            if isinstance(self._tomb_cache, DataFrame):
-                self._tomb_cache.unpersist()
-            self._tomb_cache = "unset"
 
     def refresh(self) -> None:
-        """Drop every per-instance metadata cache (tombstones, compaction
-        watermark, applied-batch set) so the next read re-syncs with
-        mutations other instances committed — deletes, compactions,
-        applied batches. Single-writer per index is still the contract;
-        this is the reader-side lever."""
-        self._invalidate_meta_caches()
+        """Drop every per-instance metadata cache so the next read
+        re-syncs with mutations other instances committed
+        (:meth:`lifecycle.IndexLifecycle.invalidate`)."""
+        self._lc.invalidate()
 
     # -- quantizer ---------------------------------------------------------
 
@@ -594,167 +542,56 @@ class CellVectorIndex:
                 batch, nlist=self.nlist, iters=self.train_iters,
                 data_id=id_col, data_vec=vec_col,
             )
-            self.spark.createDataFrame(
-                [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-                "cell int, centroid array<double>",
-            ).repartition(1).write.mode("overwrite").parquet(self.centroids_path)
-            self._write_meta(version=1)
+            self._write_centroids(cents, self.centroids_path)
+            self._lc.write_meta(version=1)
             self._cents_cache = [[float(x) for x in c] for c in cents]
-        elif not self._meta_checked:
-            if not fs_storage.path_exists(self.spark, self.meta_path):
-                # crash window between the first batch's centroid write
-                # and its meta write: the quantizer is the truth, re-pin
-                # the config row it was trained under
-                self._write_meta(version=1)
-            stored = {
-                k: v for k, v in self._read_meta().items() if k != "version"
-            }
-            if stored != self._config():
-                raise ValueError(
-                    f"index at {self.root} was built with {stored}, got "
-                    f"{self._config()} — quantizer params are immutable"
-                )
-            self._meta_checked = True
+        else:
+            # a missing meta row is the crash window between the first
+            # batch's centroid write and its meta write: the quantizer is
+            # the truth, and the check re-pins the config row it was
+            # trained under
+            self._lc.check_meta("quantizer params are immutable")
         return cents
 
-    def _write_meta(self, version: int) -> None:
-        # driver-side one-row write (round 16) — same crash window as the
-        # job-based mode("overwrite"), minus a Spark job per train/retrain
-        fs_storage.write_small_parquet(
-            self.spark, self.meta_path,
-            [(json.dumps({**self._config(), "version": int(version)}),)],
-            [("config", "string")], overwrite=True,
-        )
-
-    def _read_meta(self) -> dict:
-        return json.loads(
-            self.spark.read.parquet(self.meta_path).first()["config"]
-        )
+    def _write_centroids(self, cents, path: str) -> None:
+        self.spark.createDataFrame(
+            [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
+            "cell int, centroid array<double>",
+        ).repartition(1).write.mode("overwrite").parquet(path)
 
     def version(self) -> int:
         """Quantizer version: 1 at first train, bumped by each
         :meth:`retrain` (0 if the index does not exist yet)."""
-        if not fs_storage.path_exists(self.spark, self.meta_path):
+        if not fs_storage.path_exists(self.spark, self._lc.meta_path):
             return 0
-        return int(self._read_meta().get("version", 1))
+        return int(self._lc.read_meta().get("version", 1))
 
     # -- readers -----------------------------------------------------------
-
-    def _applied_set(self) -> set:
-        """Batch ids above the compaction watermark that durably
-        committed. One cached read of the ``applied_log`` manifest
-        (O(1) metadata ops per search, independent of uncompacted-batch
-        count); a legacy index without a log falls back to one _SUCCESS
-        directory scan of the last-written dataset (vectors)."""
-        if self._applied_cache is not None:
-            return self._applied_cache[0]
-        through = self._compacted_through()
-        logged = manifest.read_log(self.spark, self.applied_log_path)
-        if logged is None:
-            # intersection across both per-batch datasets — a crashed
-            # CONCURRENT commit (round 16+) can leave either directory
-            # alone (round 17, ADVICE)
-            s = manifest.legacy_scan(
-                self.spark, self.vectors_path, through,
-                require_all=(self.pairs_path,),
-            )
-            self._applied_cache = (s, False)
-        else:
-            s = {b for b in logged if b > through}
-            self._applied_cache = (s, True)
-        return s
-
-    def _log_applied(self, batch_id: int) -> None:
-        """Record a completed commit in the manifest (backfilling a
-        legacy index's applied set on the first logged batch)."""
-        s = self._applied_set()
-        new = {int(batch_id)}
-        if not self._applied_cache[1]:
-            new |= s
-        manifest.append(self.spark, self.applied_log_path, new)
-        self._applied_cache = (s | {int(batch_id)}, True)
-
-    def _ensure_log(self) -> None:
-        """Materialize the applied-log manifest (with the legacy-scan
-        backfill) before the first CONCURRENT dataset commit — the
-        legacy fallback's "vectors written last" marker assumption no
-        longer holds once apply_batch overlaps its writes (round 16).
-        One driver-side file create, once per index lifetime."""
-        s = self._applied_set()
-        if not self._applied_cache[1]:
-            manifest.ensure(self.spark, self.applied_log_path, s)
-            # flip the log-backed bit only after the log actually READS
-            # (round 17, ADVICE) — otherwise retry at the next commit
-            if manifest.read_log(
-                self.spark, self.applied_log_path
-            ) is not None:
-                self._applied_cache = (s, True)
-
-    def _fold_targets(self) -> list:
-        """Applied batch ids eligible for folding (compaction/retrain
-        source set); raises on an unapplied batch dir below the fold
-        target — see BandedMinHashIndex._fold_targets. Scans the pairs
-        dataset too (round 10): a pairs-only crashed batch is invisible
-        to the vectors scan but must not be overtaken by the watermark
-        (compact_pairs would fold its phantom pairs permanently)."""
-        dirs = []
-        for d in fs_storage.list_dirs(self.spark, self.vectors_path):
-            if d.startswith("batch_id="):
-                dirs.append(int(d.split("=", 1)[1]))
-        pairs_dirs = [
-            int(d.split("=", 1)[1])
-            for d in fs_storage.list_dirs(self.spark, self.pairs_path)
-            if d.startswith("batch_id=")
-        ]
-        through = self._compacted_through()
-        marked = self._applied_set()
-        applied = [b for b in dirs if b <= through or b in marked]
-        unapplied = sorted(
-            b
-            for b in set(dirs) | set(pairs_dirs)
-            if not (b <= through or b in marked)
-        )
-        if applied and unapplied and min(unapplied) < max(applied):
-            raise ValueError(
-                f"batch dirs {unapplied} at {self.root} never durably "
-                f"committed but sit below the fold target {max(applied)}"
-                " — replay them (or delete their directories) before "
-                "compact/retrain"
-            )
-        return applied
 
     def _stored(
         self,
         cells: Optional[list],
         exclude_batch_id: Optional[int],
         empty_like: DataFrame,
-        applied_only: bool = True,
     ) -> DataFrame:
-        """(id, vec, cell) from the cell partitions in ``cells`` (None =
-        all), excluding the in-flight batch. Partition dirs read back as
-        strings; cell is cast back to int for the equi-join."""
+        """(id, vec, cell) from the applied cell partitions in ``cells``
+        (None = all), excluding the in-flight batch. Partition dirs read
+        back as strings; cell is cast back to int for the equi-join."""
         if not fs_storage.path_exists(self.spark, self.vectors_path) or (
             cells is not None and not cells
         ):
             return empty_like.limit(0)
-        df = self._ds_cache.get(self.vectors_path)
+        df = self._lc.read_cached(self.vectors_path)
         if df is None:
-            try:
-                df = self.spark.read.parquet(self.vectors_path)
-            except Exception:
-                # not cached: a later batch may add the first part file
-                return empty_like.limit(0)
-            self._ds_cache[self.vectors_path] = df
+            return empty_like.limit(0)
         if cells is not None:
             df = df.filter(F.col("cell").isin([str(c) for c in cells]))
         if exclude_batch_id is not None:
             df = df.filter(F.col("batch_id") != str(int(exclude_batch_id)))
-        if applied_only:
-            df = df.filter(self._applied_cond())
-        out = df.select(
+        out = df.filter(self._lc.applied_cond()).select(
             "id", "vec", "__n", F.col("cell").cast("int").alias("cell")
         )
-        return self._minus_deleted(out)
+        return self._lc.minus_deleted(out)
 
     # -- merge-on-read deletes ---------------------------------------------
 
@@ -763,108 +600,23 @@ class CellVectorIndex:
         :meth:`banded_index.BandedMinHashIndex.delete_ids`): probes
         anti-join the broadcast tombstone set immediately; :meth:`compact`
         removes the rows physically and clears the tombstones."""
-        # round 11: refuse new writes while a maintenance writer
-        # holds the root's lease (lease.py) — maintenance renames
-        # live datasets aside; a batch landing mid-swap could be
-        # orphaned. One small-file read per batch.
-        if getattr(self, "_lease_depth", 0) == 0:
-            lease.refuse_if_held(self.spark, self.root, "delete_ids")
-        if isinstance(ids, DataFrame):
-            df = ids.toDF("id").distinct()
-        else:
-            if not ids:
-                return 0
-            df = self.spark.createDataFrame([(i,) for i in ids], ["id"]).distinct()
-        df.repartition(1).write.mode("append").parquet(self.deletes_path)
-        n = df.count()
-        self._invalidate_meta_caches()
-        return n
+        return self._lc.delete_ids(ids)
 
-    def _tombstones(self) -> Optional[DataFrame]:
-        if self._tomb_cache != "unset":
-            return self._tomb_cache
-        self._tomb_sig = fs_storage.dir_signature(self.spark, self.deletes_path)
-        if self._tomb_sig is None:
-            self._tomb_cache = None
-            return None
-        try:
-            tomb = self.spark.read.parquet(self.deletes_path).select("id")
-            tomb = tomb.persist()
-            tomb.count()
-        except Exception:
-            tomb = None
-        self._tomb_cache = tomb
-        return tomb
-
-    def _minus_deleted(self, df: DataFrame) -> DataFrame:
-        tomb = self._tombstones()
-        if tomb is None:
-            return df
-        return df.join(F.broadcast(tomb), "id", "left_anti")
-
-    # -- compaction --------------------------------------------------------
+    # -- crash recovery and quantizer retrain (drift remedy) ---------------
 
     def _recover_compaction(self) -> None:
-        for path in (
-            self.vectors_path, self.centroids_path, self.pairs_path,
-            self.pairs_hist_path,
-        ):
-            old = path.rstrip("/") + ".__old__"
-            if not fs_storage.path_exists(self.spark, path) and (
-                fs_storage.path_exists(self.spark, old)
-            ):
-                fs_storage.rename_path(self.spark, old, path)
-        if pairs_fold.recover(
-            self.spark, self.pairs_path, self.pairs_hist_path,
-            self.pairs_folded_path, self.pairs_fold_marker_path,
-        ):
-            self._pf_cache = None
+        self._lc.recover()
         self._recover_retrain()
-
-    # -- quantizer retrain (drift remedy) ----------------------------------
-
-    def _swap_in(self, path: str, staging_suffix: str) -> None:
-        """Rename-aside swap of a fully-staged dataset; idempotent (a
-        missing staging dir means the swap already happened)."""
-        staging = path.rstrip("/") + staging_suffix
-        if not fs_storage.path_exists(self.spark, staging):
-            return
-        old = path.rstrip("/") + ".__old__"
-        fs_storage.delete_path(self.spark, old)
-        if fs_storage.path_exists(self.spark, path):
-            fs_storage.rename_path(self.spark, path, old)
-        fs_storage.rename_path(self.spark, staging, path)
-        fs_storage.delete_path(self.spark, old)
 
     def _recover_retrain(self) -> None:
         """Finish a retrain whose intent marker committed: the staged
-        vectors/centroids are complete, so the swaps, meta write, and
-        cleanup below are safe to replay from any crash point. The
-        marker carries the retrain's CONFIG (a retrain may grow nlist),
-        so recovery from an instance constructed with the pre-retrain
+        vectors/centroids swap in. The marker carries the retrain's
+        CONFIG (a retrain may grow nlist) and quantizer version, so
+        recovery from an instance constructed with the pre-retrain
         params still writes the correct meta — and adopts the new params
-        itself."""
-        if not fs_storage.path_exists(self.spark, self.retrain_marker_path):
-            return
-        marker = self.spark.read.parquet(self.retrain_marker_path).first()
-        self._swap_in(self.vectors_path, ".__retrain__")
-        self._swap_in(self.centroids_path, ".__retrain__")
-        try:
-            cfg = json.loads(marker["config"])
-        except Exception:
-            cfg = self._config()
-        self.nlist = int(cfg.get("nlist", self.nlist))
-        self.train_iters = int(cfg.get("train_iters", self.train_iters))
-        self._write_meta(version=int(marker["version"]))
-        fs_storage.delete_path(self.spark, self.deletes_path)
-        fs_storage.delete_path(self.spark, self.retrain_marker_path)
-        self._invalidate_meta_caches()
-        self._cents_cache = None
-        self._meta_checked = False
-        manifest.reset(
-            self.spark, self.applied_log_path, self._compacted_through()
-        )
-        self._applied_cache = (set(), True)
+        itself (:meth:`lifecycle.IndexLifecycle.finish_rebuild`)."""
+        if self._lc.finish_rebuild():
+            self._cents_cache = None
 
     @lease.maintenance_op("retrain")
     def retrain(self, nlist: Optional[int] = None) -> int:
@@ -885,12 +637,13 @@ class CellVectorIndex:
         vectors and new centroids are FULLY staged first, then a
         write-ahead intent marker commits the retrain, then both datasets
         swap in via the rename-aside protocol, the meta version bumps,
-        and tombstones (already folded out of the staging) clear. A crash
-        before the marker leaves the index untouched; after it, every
-        public entry point replays :meth:`_recover_retrain` to finish the
-        identical swaps — readers never observe mixed centroids/cells.
-        **Run quiesced** (stream stopped), like :meth:`compact` — the
-        batch directories fold into one, so the watermark advances.
+        and tombstones (already folded out of the staging) clear
+        (:mod:`lifecycle`). A crash before the marker leaves the index
+        untouched; after it, every public entry point replays
+        :meth:`_recover_retrain` to finish the identical swaps — readers
+        never observe mixed centroids/cells. **Run quiesced** (stream
+        stopped), like :meth:`compact` — the batch directories fold into
+        one, so the watermark advances.
 
         Returns the number of live vectors reassigned."""
         from .similarity import _cell_assigner, ivf_train
@@ -898,18 +651,11 @@ class CellVectorIndex:
         self._recover_compaction()
         if nlist is not None:
             self.nlist = int(nlist)
-        applied = self._fold_targets()
-        if not applied:
-            raise ValueError(f"no index at {self.root}")
-        target = max(applied)
-        live = self._minus_deleted(
-            self.spark.read.parquet(self.vectors_path)
-            # a crashed, never-committed batch's partial vectors must not
-            # be folded under the retrained batch_id=target (its stream
-            # replay would then ingest them a second time)
-            .filter(self._applied_cond())
-            .select("id", "vec", "__n")
-        ).persist()
+        target = self._lc.fold_target()
+        # a crashed, never-committed batch's partial vectors must not be
+        # folded under the retrained batch_id=target (its stream replay
+        # would then ingest them a second time)
+        live = self._lc.live(self.vectors_path, "id", "vec", "__n").persist()
         n_live = live.count()
         if n_live == 0:
             live.unpersist()
@@ -919,219 +665,58 @@ class CellVectorIndex:
             data_id="id", data_vec="vec",
         )
         assign = _cell_assigner(cents)
-        vstage = self.vectors_path.rstrip("/") + ".__retrain__"
-        cstage = self.centroids_path.rstrip("/") + ".__retrain__"
+        vstage = self._lc.staged(self.vectors_path)
+        cstage = self._lc.staged(self.centroids_path)
         fs_storage.delete_path(self.spark, vstage)
         fs_storage.delete_path(self.spark, cstage)
-        (
-            live.withColumn("cell", assign(F.col("vec")))
-            .withColumn("batch_id", F.lit(str(target)))
-            .repartition(F.col("cell"))
-            .write.partitionBy("batch_id", "cell")
-            .mode("overwrite")
-            .parquet(vstage)
+        self._lc.write_folded(
+            live.withColumn("cell", assign(F.col("vec"))),
+            vstage, target, ["cell"],
         )
         live.unpersist()
-        self.spark.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-            "cell int, centroid array<double>",
-        ).repartition(1).write.mode("overwrite").parquet(cstage)
-        # staging (the hours-at-scale phase) is done — extend the lease
-        # before committing, so a run slower than the TTL still swaps
-        # under a live lease (round 12; raises BEFORE mutating if the
-        # lease was already lost to takeover)
-        lease.renew_active(self)
-        # watermark first (it only asserts what is already true), then the
-        # intent marker makes the staged retrain the committed state —
-        # driver-side one-row writes (round 16), same crash windows
-        fs_storage.write_small_parquet(
-            self.spark, self.watermark_path,
-            [(int(target),)], [("through", "int64")], overwrite=True,
-        )
-        new_version = self.version() + 1
-        fs_storage.write_small_parquet(
-            self.spark, self.retrain_marker_path,
-            [(int(new_version), json.dumps(self._config()))],
-            [("version", "int64"), ("config", "string")], overwrite=True,
-        )
+        self._write_centroids(cents, cstage)
+        self._lc.commit_rebuild(target, version=self.version() + 1)
         self._recover_retrain()
-        self._ct_cache = int(target)
         return n_live
 
     def _compacted_through(self) -> int:
-        if self._ct_cache is not None:
-            return self._ct_cache
-        if not fs_storage.path_exists(self.spark, self.watermark_path):
-            self._ct_cache = -1
-        else:
-            self._ct_cache = int(
-                self.spark.read.parquet(self.watermark_path).first()["through"]
-            )
-        return self._ct_cache
+        return self._lc.compacted_through()
 
     @lease.maintenance_op("compact")
     def compact(self) -> int:
         """Fold all applied batch directories into one and drop
-        tombstoned vectors physically (rename-aside swap with crash
-        recovery; run quiesced — same protocol and caveats as the banded
-        index's compact). Returns the number of batch directories
+        tombstoned vectors physically (:meth:`lifecycle.IndexLifecycle.compact`;
+        run quiesced). Returns the number of batch directories
         removed."""
-        self._recover_compaction()
-        applied = self._fold_targets()
-        has_tombstones = fs_storage.path_exists(self.spark, self.deletes_path)
-        if not applied or (len(applied) <= 1 and not has_tombstones):
-            return 0
-        target = max(applied)
-        # applied-cond captured BEFORE the watermark advances (the
-        # instance caches make this naturally so)
-        applied_cond = self._applied_cond()
-        fs_storage.write_small_parquet(
-            self.spark, self.watermark_path,
-            [(int(target),)], [("through", "int64")], overwrite=True,
-        )
-        staging = self.vectors_path.rstrip("/") + ".__compact__"
-        old = self.vectors_path.rstrip("/") + ".__old__"
-        fs_storage.delete_path(self.spark, staging)
-        live = self._minus_deleted(
-            self.spark.read.parquet(self.vectors_path)
-            .filter(applied_cond)
-            .select("id", "vec", "__n", "cell")
-        )
-        (
-            live.withColumn("batch_id", F.lit(str(target)))
-            .repartition(F.col("cell"))
-            .write.partitionBy("batch_id", "cell")
-            .mode("overwrite")
-            .parquet(staging)
-        )
-        # staging done — extend the lease before the swap (round 12)
-        lease.renew_active(self)
-        fs_storage.delete_path(self.spark, old)
-        fs_storage.rename_path(self.spark, self.vectors_path, old)
-        fs_storage.rename_path(self.spark, staging, self.vectors_path)
-        fs_storage.delete_path(self.spark, old)
-        fs_storage.delete_path(self.spark, self.deletes_path)
-        manifest.reset(self.spark, self.applied_log_path, int(target))
-        self._invalidate_meta_caches()
-        self._ct_cache = int(target)
-        self._applied_cache = (set(), True)
-        return len(applied) - 1
-
-    def _applied_cond(self):
-        """Predicate selecting rows of durably-applied batches — batch_id
-        at or below the compaction watermark (the pairs log keeps
-        per-batch dirs compaction never rewrites) or recorded in the
-        applied-log manifest. Zero FS ops on a warm instance."""
-        through = self._compacted_through()
-        marked = [str(b) for b in self._applied_set()]
-        return (F.col("batch_id").cast("long") <= F.lit(through)) | (
-            F.col("batch_id").isin(marked)
-        )
-
-    def _pairs_folded(self) -> int:
-        """Highest batch id folded into ``pairs_hist`` (-1 if never);
-        cached — it only moves when this instance folds."""
-        if self._pf_cache is None:
-            self._pf_cache = pairs_fold.folded_through(
-                self.spark, self.pairs_folded_path
+        return self._lc.compact(
+            lambda target: self._lc.swap_folded(
+                self.vectors_path,
+                self._lc.live(self.vectors_path, "id", "vec", "__n", "cell"),
+                target, ["cell"],
             )
-        return self._pf_cache
+        )
 
     def pairs(self) -> DataFrame:
         """Accumulated (id_a, id_b, cosine, batch_id) over all APPLIED
-        batches. Pairs commit before the applied marker, so an in-flight
-        or crashed batch's pairs stay invisible until its replay
-        commits (same isolation rule as search). Batches folded by
-        :meth:`compact_pairs` read from the consolidated history dataset
-        (batch_id preserved as a data column — same rows, same schema).
-
-        Recovery (incl. finishing a marker-committed fold) runs on the
-        COLD read only — the fold watermark cache doubles as the
-        checked-flag, so warm repeated pairs() reads cost zero extra FS
-        ops, and every mutating op invalidates the cache and re-arms
-        the check."""
-        if self._pf_cache is None:
-            self._recover_compaction()
-        return pairs_fold.read_all(
-            self.spark, self.pairs_path, self.pairs_hist_path,
-            self._pairs_folded(), self._applied_cond(),
-            ["id_a", "id_b", "cosine", "batch_id"],
-            "id_a long, id_b long, cosine double, batch_id long",
-        )
+        batches — same isolation rule as search
+        (:meth:`lifecycle.IndexLifecycle.pairs`)."""
+        return self._lc.pairs()
 
     @lease.maintenance_op("compact_pairs")
     def compact_pairs(self) -> int:
         """Fold pairs-log batch directories at or below the compaction
-        watermark into ``pairs_hist`` — same contract, protocol, and
-        rationale as
-        :meth:`banded_index.BandedMinHashIndex.compact_pairs` (marker-
-        committed, crash-finishable, output bit-identical; **run
-        quiesced**). Returns directories folded."""
-        self._recover_compaction()
-        # phantom-pairs-dir validation, matching the banded index
-        # (round 10 — see BandedMinHashIndex.compact_pairs)
-        self._fold_targets()
-        n = pairs_fold.fold(
-            self.spark, self.pairs_path, self.pairs_hist_path,
-            self.pairs_folded_path, self.pairs_fold_marker_path,
-            self._compacted_through(),
-            ["id_a", "id_b", "cosine", "batch_id"],
-        )
-        self._pf_cache = None
-        return n
+        watermark into ``pairs_hist`` (marker-committed, crash-finishable,
+        output bit-identical; **run quiesced** —
+        :meth:`lifecycle.IndexLifecycle.compact_pairs`). Returns
+        directories folded."""
+        return self._lc.compact_pairs()
 
     @lease.maintenance_op("scrub_pairs")
     def scrub_pairs(self, ids) -> int:
-        """GDPR-complete removal from the pairs log — same contract and
-        rename-aside rewrite as
-        :meth:`banded_index.BandedMinHashIndex.scrub_pairs` (run
-        quiesced). Returns the number of pair rows dropped."""
-        if isinstance(ids, DataFrame):
-            tomb = ids.toDF("id").distinct()
-        else:
-            if not ids:
-                return 0
-            tomb = self.spark.createDataFrame(
-                [(i,) for i in ids], ["id"]
-            ).distinct()
-        self._recover_compaction()
-        hist_dropped = pairs_fold.scrub_hist(
-            self.spark, self.pairs_hist_path, tomb,
-            ["id_a", "id_b", "cosine", "batch_id"],
-        )
-        if not fs_storage.path_exists(self.spark, self.pairs_path):
-            return hist_dropped
-        try:
-            pairs = self.spark.read.parquet(self.pairs_path)
-        except Exception:
-            return hist_dropped
-        before = pairs.count()
-        kept = (
-            pairs.join(
-                F.broadcast(tomb.select(F.col("id").alias("id_a"))),
-                "id_a", "left_anti",
-            ).join(
-                F.broadcast(tomb.select(F.col("id").alias("id_b"))),
-                "id_b", "left_anti",
-            )
-        )
-        staging = self.pairs_path.rstrip("/") + ".__scrub__"
-        old = self.pairs_path.rstrip("/") + ".__old__"
-        fs_storage.delete_path(self.spark, staging)
-        (
-            kept.write.partitionBy("batch_id")
-            .mode("overwrite")
-            .parquet(staging)
-        )
-        fs_storage.delete_path(self.spark, old)
-        fs_storage.rename_path(self.spark, self.pairs_path, old)
-        fs_storage.rename_path(self.spark, staging, self.pairs_path)
-        fs_storage.delete_path(self.spark, old)
-        try:
-            after = self.spark.read.parquet(self.pairs_path).count()
-        except Exception:
-            after = 0
-        return hist_dropped + before - after
+        """GDPR-complete removal from the pairs log
+        (:meth:`lifecycle.IndexLifecycle.scrub_pairs`; run quiesced).
+        Returns the number of pair rows dropped."""
+        return self._lc.scrub_pairs(ids)
 
     # -- core --------------------------------------------------------------
 
@@ -1966,13 +1551,9 @@ class CellVectorIndex:
     # -- exactly-once batch application ------------------------------------
 
     def batch_applied(self, batch_id: int) -> bool:
-        """Applied iff at/below the compaction watermark or recorded in
-        the applied-log manifest (appended after the last dataset write;
-        a crash before the append reads as not-applied and the replay
-        re-commits byte-identical directories)."""
-        if int(batch_id) <= self._compacted_through():
-            return True
-        return int(batch_id) in self._applied_set()
+        """Whether ``batch_id`` durably committed
+        (:meth:`lifecycle.IndexLifecycle.batch_applied`)."""
+        return self._lc.batch_applied(batch_id)
 
     def apply_batch(
         self,
@@ -1999,24 +1580,12 @@ class CellVectorIndex:
         in a tree maintenance is renaming aside. The aborted batch's
         directories are replay-overwritten byte-identically by the next
         apply_batch call with the same batch_id."""
-        # round 11 entry probe + round 12 fence capture: one or two
-        # small-file reads per batch, apply_batch cadence not row cadence.
-        # Token FIRST, held-probe second (round 13): an acquire landing
-        # between the two reads bumps the token AFTER the capture, so the
-        # commit re-verify aborts; the reverse order could capture the
-        # post-bump token and commit a batch that ran entirely inside the
-        # maintenance window it was meant to detect.
-        start_fence = None
-        if getattr(self, "_lease_depth", 0) == 0:
-            start_fence = lease.fence_token(self.spark, self.root)
-            lease.refuse_if_held(self.spark, self.root, "apply_batch")
-        self._recover_compaction()
-        self._sync_tombstones()
-        if self.batch_applied(batch_id):
+        fence = self._lc.open_batch()
+        if self._lc.batch_applied(batch_id):
             return False
         j = fs_storage.join
         bdir = f"batch_id={int(batch_id)}"
-        self._ensure_log()
+        self._lc.ensure_log()
         pairs, assigned = self.dedup_batch(
             batch, vec_col, id_col, threshold, tier, nprobe,
             exclude_batch_id=int(batch_id), max_cell_size=max_cell_size,
@@ -2038,16 +1607,10 @@ class CellVectorIndex:
                     .parquet(j(self.vectors_path, bdir))
                 ),
             ])
-            if getattr(self, "_lease_depth", 0) == 0:
-                lease.verify_commit_fence(
-                    self.spark, self.root, start_fence, "apply_batch"
-                )
-            self._log_applied(int(batch_id))
+            self._lc.commit_batch(batch_id, fence)
         finally:
             self.unpersist_intermediates()
-            # this batch added batch_id= directories the cached dataset
-            # listing cannot see — the next probe must re-list
-            self._ds_cache.clear()
+            self._lc.forget_listings()
         return True
 
     # -- ANN serving -------------------------------------------------------
@@ -2078,7 +1641,7 @@ class CellVectorIndex:
         cell_rows = q.groupBy("cell").count().collect()
         cells = [r["cell"] for r in cell_rows]
         n_probe_rows = sum(r["count"] for r in cell_rows)
-        stored = self._stored(cells, None, empty_like=q, applied_only=True)
+        stored = self._stored(cells, None, empty_like=q)
         # Blocked scoring (round 11, same shape as dedup_batch's scale
         # tier; round 12: the query blocks ship once per NODE as
         # mmap-able artifacts, reclaimed at this instance's next

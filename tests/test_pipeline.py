@@ -5375,44 +5375,82 @@ def test_banded_rebuild_changes_shingle_size_from_docs(spark, tmp_path):
     assert (3, 200, 1.0) in batch2_pairs(ix)
 
 
-def test_fold_targets_refuse_phantom_pairs_dir(inc_corpus, tmp_path):
-    """A batch that crashed after its PAIRS write but before any other
-    dataset write is invisible to the marker-dataset scan; the watermark
-    must not advance over it (compact_pairs would fold the phantom pairs
-    into pairs_hist permanently and the batch's replay would be skipped).
-    compact()/compact_pairs() refuse until the batch is replayed or its
-    directory deleted (round 10, ADVICE)."""
+@pytest.mark.parametrize("kind", ["banded", "text", "vector"])
+def test_fold_targets_refuse_phantom_pairs_dir(inc_corpus, tmp_path, kind):
+    """A batch that crashed after its FIRST dataset write but before the
+    others is invisible to the marker-dataset scan; the watermark must
+    not advance over it (compact_pairs would fold phantom pairs into
+    pairs_hist permanently, and the batch's replay would be skipped as
+    already applied). compact()/compact_pairs() refuse until the batch
+    is replayed or its directory deleted (round 10, ADVICE). The banded
+    and vector phantoms are pairs-only directories; the text index's is
+    a postings-only one (its postings land before its doclens)."""
+    import random
+
     from qafs_spark.pipeline.banded_index import BandedMinHashIndex
+    from qafs_spark.pipeline.text_index import InvertedIndex
+    from qafs_spark.pipeline.vector_index import CellVectorIndex
 
     spark = inc_corpus.sparkSession
-    ix = BandedMinHashIndex(
-        spark, str(tmp_path / "ix"), num_hashes=16, num_bands=8,
-        num_partitions=8,
-    )
-    assert ix.apply_batch(inc_corpus.filter(F.col("doc_id") % 2 == 0), 0,
-                          threshold=0.3)
-    assert ix.apply_batch(inc_corpus.filter(F.col("doc_id") % 2 == 1), 2,
-                          threshold=0.3)
-
-    # phantom: batch 1's pairs landed, nothing else did (no counts dir,
-    # no applied_log entry) — and batch 2 > 1 already committed
-    spark.createDataFrame(
-        [(1, 2, 0.9)], "id_a long, id_b long, jaccard double"
-    ).write.mode("overwrite").parquet(str(tmp_path / "ix" / "pairs" / "batch_id=1"))
-
-    with pytest.raises(ValueError, match="never durably committed"):
-        ix.compact()
-    with pytest.raises(ValueError, match="never durably committed"):
-        ix.compact_pairs()
-    # replaying the batch (the operator fix) clears the refusal
-    assert ix.apply_batch(
-        inc_corpus.filter(F.col("doc_id") % 2 == 1).limit(0).unionByName(
+    root = tmp_path / "ix"
+    odd = inc_corpus.filter(F.col("doc_id") % 2 == 1)
+    docs = [
+        inc_corpus.filter(F.col("doc_id") % 2 == 0),
+        odd,
+        odd.limit(0).unionByName(
             spark.createDataFrame(
                 [(100001, "aa bb cc dd ee ff gg")], ["doc_id", "text"]
             )
         ),
-        1, threshold=0.3,
+    ]
+    if kind == "banded":
+        ix = BandedMinHashIndex(
+            spark, str(root), num_hashes=16, num_bands=8, num_partitions=8,
+        )
+        batches = docs
+        kw = dict(threshold=0.3)
+        phantom = ("pairs/batch_id=1", [(1, 2, 0.9)],
+                   "id_a long, id_b long, jaccard double")
+    elif kind == "text":
+        ix = InvertedIndex(spark, str(root), num_partitions=4)
+        batches = docs
+        kw = {}
+        phantom = ("postings/batch_id=1/term_pfx=0", [(100001, "aa", 1)],
+                   "id long, term string, tf long")
+    else:
+        rng = random.Random(5)
+        ix = CellVectorIndex(spark, str(root), nlist=2, train_iters=2)
+        batches = [
+            spark.createDataFrame(
+                _vx_cluster(rng, center, ids), ["vec_id", "embedding"]
+            )
+            for center, ids in (
+                ([1.0, 0, 0], range(0, 15)),
+                ([0, 1.0, 0], range(15, 30)),
+                ([0, 0, 1.0], range(500, 503)),
+            )
+        ]
+        kw = dict(threshold=0.999)
+        phantom = ("pairs/batch_id=1", [(1, 2, 0.9)],
+                   "id_a long, id_b long, cosine double")
+    assert ix.apply_batch(batches[0], 0, **kw)
+    assert ix.apply_batch(batches[1], 2, **kw)
+
+    # phantom: batch 1's first dataset write landed, nothing else did (no
+    # marker-dataset dir, no applied_log entry) — and batch 2 > 1 already
+    # committed
+    path, rows, ddl = phantom
+    spark.createDataFrame(rows, ddl).write.mode("overwrite").parquet(
+        str(root / path)
     )
+
+    with pytest.raises(ValueError, match="never durably committed"):
+        ix.compact()
+    if kind != "text":
+        with pytest.raises(ValueError, match="never durably committed"):
+            ix.compact_pairs()
+    # replaying the batch (the operator fix) clears the refusal
+    assert ix.apply_batch(batches[2], 1, **kw)
     assert ix.compact() >= 1
 
 
