@@ -220,67 +220,9 @@ def resample_interpolate(
     ffill run over the negated bin index. No per-grid-point join, no
     global sort, no single-task window over data rows.
     """
-    f = parse_offset(freq)
-    from_ts, to_ts = pd.Timestamp(from_ts), pd.Timestamp(to_ts)
-    spark = series.sparkSession
-    if to_ts < from_ts:
-        raise FeatureStoreException("to_date must be >= from_date for resample")
-    from_ts = f.anchor_start(from_ts)  # anchored grids roll the start
-    k_max = n_steps(from_ts, to_ts, f)  # -1 = anchored start past to_ts (empty grid)
-    vt = series.schema[value_col].dataType
-    if not isinstance(vt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-                           T.FloatType, T.DoubleType, T.DecimalType)):
-        raise FeatureStoreException(
-            f"interpolate needs a numeric series; '{value_col}' is "
-            f"{vt.simpleString()} (use nearest or ffill)"
-        )
-
-    obs = series.filter(F.col(value_col).isNotNull()).select(
-        F.col(time_col).alias("__t"), F.col(value_col).alias("__v")
-    )
-    per_bin = (
-        obs.withColumn(_K, _bin_index(F.col("__t"), from_ts, f))
-        .groupBy(_K)
-        .agg(
-            F.max_by(F.struct("__t", "__v"), F.col("__t")).alias("__last"),
-            F.min_by(F.struct("__t", "__v"), F.col("__t")).alias("__first"),
-        )
-    )
-    # left anchors live in their own bin; right anchors are "the first
-    # observation of bin j", which is the NEXT point for every grid k <= j-1
-    left = per_bin.select(
-        _K, F.col("__last.__t").alias("__pt"), F.col("__last.__v").alias("__pv")
-    )
-    right = per_bin.select(
-        (F.col(_K) - 1).alias(_K),
-        F.col("__first.__t").alias("__nt"),
-        F.col("__first.__v").alias("__nv"),
-    )
-    grid = spark.range(k_max + 1).select(F.col("id").alias(_K))
-    full = (
-        grid.join(left.join(right, on=_K, how="full"), on=_K, how="full")
-    )
-    full = ffill(
-        full, ["__pt", "__pv"], time_col=_K,
-        bucket=F.floor(F.col(_K) / F.lit(_FFILL_BUCKET_BINS)),
-    )
-    full = full.withColumn("__nk", -F.col(_K))
-    full = ffill(
-        full, ["__nt", "__nv"], time_col="__nk",
-        bucket=F.floor(F.col("__nk") / F.lit(_FFILL_BUCKET_BINS)),
-    ).drop("__nk")
-
-    g = _grid_time(F.col(_K), from_ts, f)
-    dg = (F.unix_micros(g) - F.unix_micros(F.col("__pt"))).cast("double")
-    dt = (F.unix_micros(F.col("__nt")) - F.unix_micros(F.col("__pt"))).cast("double")
-    v = (
-        F.when(F.col("__pt").isNull(), F.lit(None).cast("double"))
-        .when(F.col("__nt").isNull(), F.col("__pv"))
-        .otherwise(F.col("__pv") + (F.col("__nv") - F.col("__pv")) * (dg / dt))
-    )
-    return (
-        full.filter((F.col(_K) >= 0) & (F.col(_K) <= k_max))
-        .select(g.alias(time_col), v.alias(value_col))
+    return resample_points_multi(
+        [(value_col, series.select(F.col(time_col), F.col(value_col)))],
+        from_ts, to_ts, freq, method="interpolate", time_col=time_col,
     )
 
 
@@ -621,59 +563,7 @@ def resample_nearest(
     ``reindex(method="nearest")`` convention). Same bin-compressed
     ffill/bfill anchor machinery as :func:`resample_interpolate`; the
     selection is one integer comparison of microsecond distances."""
-    f = parse_offset(freq)
-    from_ts, to_ts = pd.Timestamp(from_ts), pd.Timestamp(to_ts)
-    spark = series.sparkSession
-    if to_ts < from_ts:
-        raise FeatureStoreException("to_date must be >= from_date for resample")
-    from_ts = f.anchor_start(from_ts)  # anchored grids roll the start
-    k_max = n_steps(from_ts, to_ts, f)  # -1 = anchored start past to_ts (empty grid)
-
-    obs = series.filter(F.col(value_col).isNotNull()).select(
-        F.col(time_col).alias("__t"), F.col(value_col).alias("__v")
-    )
-    per_bin = (
-        obs.withColumn(_K, _bin_index(F.col("__t"), from_ts, f))
-        .groupBy(_K)
-        .agg(
-            F.max_by(F.struct("__t", "__v"), F.col("__t")).alias("__last"),
-            F.min_by(F.struct("__t", "__v"), F.col("__t")).alias("__first"),
-        )
-    )
-    left = per_bin.select(
-        _K, F.col("__last.__t").alias("__pt"), F.col("__last.__v").alias("__pv")
-    )
-    right = per_bin.select(
-        (F.col(_K) - 1).alias(_K),
-        F.col("__first.__t").alias("__nt"),
-        F.col("__first.__v").alias("__nv"),
-    )
-    grid = spark.range(k_max + 1).select(F.col("id").alias(_K))
-    full = grid.join(left.join(right, on=_K, how="full"), on=_K, how="full")
-    full = ffill(
-        full, ["__pt", "__pv"], time_col=_K,
-        bucket=F.floor(F.col(_K) / F.lit(_FFILL_BUCKET_BINS)),
-    )
-    full = full.withColumn("__nk", -F.col(_K))
-    full = ffill(
-        full, ["__nt", "__nv"], time_col="__nk",
-        bucket=F.floor(F.col("__nk") / F.lit(_FFILL_BUCKET_BINS)),
-    ).drop("__nk")
-
-    g = _grid_time(F.col(_K), from_ts, f)
-    d_prev = F.unix_micros(g) - F.unix_micros(F.col("__pt"))
-    d_next = F.unix_micros(F.col("__nt")) - F.unix_micros(g)
-    # selection only — the all-null literal takes the series' own type so
-    # non-numeric (string/bool/timestamp) series resample unmangled
-    v = (
-        F.when(F.col("__pt").isNull() & F.col("__nt").isNull(),
-               F.lit(None).cast(series.schema[value_col].dataType))
-        .when(F.col("__nt").isNull(), F.col("__pv"))
-        .when(F.col("__pt").isNull(), F.col("__nv"))
-        .when(d_prev <= d_next, F.col("__pv"))
-        .otherwise(F.col("__nv"))
-    )
-    return (
-        full.filter((F.col(_K) >= 0) & (F.col(_K) <= k_max))
-        .select(g.alias(time_col), v.alias(value_col))
+    return resample_points_multi(
+        [(value_col, series.select(F.col(time_col), F.col(value_col)))],
+        from_ts, to_ts, freq, method="nearest", time_col=time_col,
     )

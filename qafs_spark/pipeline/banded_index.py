@@ -620,9 +620,9 @@ class BandedMinHashIndex:
             "sh",
             *(["toks"] if self.store_tokens else []),
         ).persist()
-        n_live = rows.count()
         stage = self._lc.staged
         try:
+            n_live = rows.count()
             self._lc.write_folded(
                 rows.withColumn("id_pfx", self._pfx(F.col("id"))),
                 stage(self.docs_path), target, ["id_pfx"],

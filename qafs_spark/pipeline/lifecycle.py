@@ -18,15 +18,32 @@ and hands everything that is not its own data shape to one
   compaction drops the rows physically.
 - **compaction.** Every applied batch folds into one ``batch_id=<max>``
   directory tree per dataset, swapped in with the rename-aside protocol
-  (stage → live→``.__old__`` → stage→live → delete); a crash between
-  the two renames is restored by :meth:`IndexLifecycle.recover`.
+  (stage → live→``.__old__`` → stage→live → delete,
+  :func:`storage.replace_dir`); a crash between the two renames is
+  restored by :meth:`IndexLifecycle.recover`.
 - **parameter rebuild** (``rebuild``/``retrain``). Fully staged
   ``<ds>.__<op>__`` datasets, then a write-ahead ``<op>_commit`` marker
   carrying the new config, then idempotent swaps that any public entry
   point finishes (:meth:`IndexLifecycle.finish_rebuild`).
+- **pairs-log fold.** The dedup indexes' ``pairs/`` log keeps one
+  ``batch_id=N`` directory per micro-batch — the historical output
+  record, which :meth:`IndexLifecycle.compact` never rewrites — so every
+  ``pairs()`` read would list O(batches) directories.
+  :meth:`IndexLifecycle.compact_pairs` moves the rows of batches at or
+  below the compaction watermark into one ``pairs_hist`` dataset with
+  ``batch_id`` carried as a data column (provenance kept, reader output
+  bit-identical): (1) stage ``pairs_hist.__fold__`` = history ∪ the moved
+  batches' rows; (2) write the ``pairs_fold_commit`` intent marker, the
+  commit point; (3) :meth:`IndexLifecycle.finish_pairs_fold` swaps the
+  staging in, advances the ``pairs_folded`` watermark, deletes the moved
+  live directories and drops the marker. The marker implies a complete
+  staging and every finishing step is idempotent, so a fold is
+  crash-finishable from any point; readers finish it before reading (one
+  cached ``path_exists`` when idle), so the window where a batch is both
+  in the history and live is never observed.
 - the ``meta`` config pin, the maintenance-lease fence around commits
-  (:mod:`lease`), the pairs log with its fold (:mod:`pairs_fold`), and the
-  per-instance metadata and dataset-listing caches.
+  (:mod:`lease`), ``scrub_pairs`` for the pairs log and its history, and
+  the per-instance metadata and dataset-listing caches.
 
 Owner protocol: the index passes itself as ``owner`` and provides
 ``spark``, ``root``, ``_config()`` (the immutable params, keyed by their
@@ -40,13 +57,13 @@ guards here read them from there.
 from __future__ import annotations
 
 import json
-from typing import Callable, Optional
+from typing import Callable, List, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import storage as fs_storage
-from . import lease, manifest, pairs_fold
+from . import lease, manifest
 
 
 class IndexLifecycle:
@@ -79,6 +96,7 @@ class IndexLifecycle:
         extra = [j(self.root, d) for d in rebuilt]
         self.pairs_path = j(self.root, "pairs") if pairs_score else None
         self.pairs_hist_path = j(self.root, "pairs_hist")
+        self.pairs_fold_staging = self.pairs_hist_path + ".__fold__"
         pairs = [self.pairs_path] if pairs_score else []
         self.datasets = own + pairs
         self.rebuilt = own + extra
@@ -188,23 +206,31 @@ class IndexLifecycle:
         compacted) — batches at or below it lost their per-batch marker
         directories but are durably applied. Cached in the instance (it
         only moves when THIS instance compacts)."""
-        if self._ct_cache is not None:
-            return self._ct_cache
-        if not fs_storage.path_exists(self.spark, self.watermark_path):
-            self._ct_cache = -1
-        else:
-            self._ct_cache = int(
-                self.spark.read.parquet(self.watermark_path).first()["through"]
-            )
+        if self._ct_cache is None:
+            self._ct_cache = self._read_through(self.watermark_path)
         return self._ct_cache
 
-    def _write_watermark(self, target: int) -> None:
-        # driver-side one-row write (round 16); it only ever asserts what
-        # is already true, so it is always written FIRST
+    def _read_through(self, path: str) -> int:
+        """The ``through`` batch id of a one-row watermark or marker
+        dataset; -1 when it is missing."""
+        if not fs_storage.path_exists(self.spark, path):
+            return -1
+        return int(self.spark.read.parquet(path).first()["through"])
+
+    def _write_through(self, path: str, target: int) -> None:
+        # driver-side one-row write (round 16), no Spark job
         fs_storage.write_small_parquet(
-            self.spark, self.watermark_path,
+            self.spark, path,
             [(int(target),)], [("through", "int64")], overwrite=True,
         )
+
+    def _batch_ids(self, path: str) -> List[int]:
+        """Batch ids of a per-batch dataset's ``batch_id=N`` directories."""
+        return [
+            int(d.split("=", 1)[1])
+            for d in fs_storage.list_dirs(self.spark, path)
+            if d.startswith("batch_id=")
+        ]
 
     def applied_set(self) -> set:
         """Batch ids above the compaction watermark that durably
@@ -420,50 +446,15 @@ class IndexLifecycle:
     # -- rename-aside swaps and crash recovery -----------------------------
 
     def recover(self) -> None:
-        """A crash between a swap's two renames leaves the dataset at
-        ``<ds>.__old__`` and no live directory — restore it (same
-        protocol as the feature-store compaction,
-        sources/feature_dataset.py) — then finish a marker-committed
-        pairs fold. The owner's ``_recover_compaction`` runs this before
+        """Restore every dataset a crash left aside between a swap's two
+        renames (:func:`storage.restore_aside`, the same protocol as the
+        feature-store compaction), then finish a marker-committed pairs
+        fold. The owner's ``_recover_compaction`` runs this before
         finishing a committed rebuild."""
         for path in self._swapped:
-            old = path.rstrip("/") + ".__old__"
-            if not fs_storage.path_exists(self.spark, path) and (
-                fs_storage.path_exists(self.spark, old)
-            ):
-                fs_storage.rename_path(self.spark, old, path)
-        if self.pairs_path is not None and pairs_fold.recover(
-            self.spark, self.pairs_path, self.pairs_hist_path,
-            self.pairs_folded_path, self.pairs_fold_marker_path,
-        ):
-            self._pf_cache = None
-
-    def _replace(self, path: str, suffix: str, stage: Callable) -> None:
-        """Rename-aside swap: ``stage(staging)`` writes the new dataset
-        beside the live one, which then moves aside, and the staging
-        directory takes its place."""
-        staging = path.rstrip("/") + suffix
-        old = path.rstrip("/") + ".__old__"
-        fs_storage.delete_path(self.spark, staging)
-        stage(staging)
-        fs_storage.delete_path(self.spark, old)
-        fs_storage.rename_path(self.spark, path, old)
-        fs_storage.rename_path(self.spark, staging, path)
-        fs_storage.delete_path(self.spark, old)
-
-    def _swap_in(self, path: str) -> None:
-        """Rename-aside swap of a fully-staged rebuild dataset;
-        idempotent (a missing staging dir means the swap already
-        happened)."""
-        staging = self.staged(path)
-        if not fs_storage.path_exists(self.spark, staging):
-            return
-        old = path.rstrip("/") + ".__old__"
-        fs_storage.delete_path(self.spark, old)
-        if fs_storage.path_exists(self.spark, path):
-            fs_storage.rename_path(self.spark, path, old)
-        fs_storage.rename_path(self.spark, staging, path)
-        fs_storage.delete_path(self.spark, old)
+            fs_storage.restore_aside(self.spark, path)
+        if self.pairs_path is not None:
+            self.finish_pairs_fold()
 
     # -- compaction --------------------------------------------------------
 
@@ -488,14 +479,7 @@ class IndexLifecycle:
         serial order; the refusal must see every shape. The same holds
         for a serial writer that crashed between its first and last
         write (the text index's postings-only directory)."""
-        dirs = [
-            [
-                int(d.split("=", 1)[1])
-                for d in fs_storage.list_dirs(self.spark, path)
-                if d.startswith("batch_id=")
-            ]
-            for path in self.datasets
-        ]
+        dirs = [self._batch_ids(path) for path in self.datasets]
         through = self.compacted_through()
         marked = self.applied_set()
         applied = [b for b in dirs[0] if b <= through or b in marked]
@@ -548,7 +532,7 @@ class IndexLifecycle:
             # staging done — extend the lease before each swap (round 12)
             lease.renew_active(self.owner)
 
-        self._replace(path, ".__compact__", stage)
+        fs_storage.replace_dir(self.spark, path, ".__compact__", stage)
 
     def compact(self, fold: Callable[[int], None]) -> int:
         """Fold every applied batch's directories into one and drop
@@ -570,7 +554,9 @@ class IndexLifecycle:
         if not applied or (len(applied) <= 1 and self.tombstones() is None):
             return 0
         target = max(applied)
-        self._write_watermark(target)
+        # the watermark only ever asserts what is already true, so it is
+        # always written FIRST
+        self._write_through(self.watermark_path, target)
         # fold's applied-only reads still see the PRE-advance watermark:
         # the write above leaves the cached value alone
         fold(target)
@@ -604,7 +590,7 @@ class IndexLifecycle:
         # intent marker makes the staged rebuild the committed state —
         # driver-side one-row writes (round 16), same crash windows as the
         # job form
-        self._write_watermark(target)
+        self._write_through(self.watermark_path, target)
         fs_storage.write_small_parquet(
             self.spark, self.marker_path,
             [(*[int(v) for v in extra.values()],
@@ -625,7 +611,7 @@ class IndexLifecycle:
             return False
         marker = self.spark.read.parquet(self.marker_path).first().asDict()
         for path in self.rebuilt:
-            self._swap_in(path)
+            fs_storage.swap_in(self.spark, path, self.staged(path))
         try:
             cfg = json.loads(marker.pop("config"))
         except (TypeError, ValueError):
@@ -646,13 +632,30 @@ class IndexLifecycle:
 
     # -- pairs log ---------------------------------------------------------
 
+    def _as_pairs(self, df: DataFrame) -> DataFrame:
+        """The pairs columns of a live pairs-log read, its partition
+        ``batch_id`` cast to the history's long data column."""
+        return df.select(
+            *self.pairs_cols[:-1],
+            F.col("batch_id").cast("long").alias("batch_id"),
+        )
+
+    def _pairs_hist(self) -> Optional[DataFrame]:
+        """The folded history; None before the first fold."""
+        if not fs_storage.path_exists(self.spark, self.pairs_hist_path):
+            return None
+        try:
+            return self.spark.read.parquet(self.pairs_hist_path).select(
+                *self.pairs_cols
+            )
+        except Exception:
+            return None
+
     def _pairs_folded(self) -> int:
         """Highest batch id folded into ``pairs_hist`` (-1 if never);
         cached — it only moves when this instance folds."""
         if self._pf_cache is None:
-            self._pf_cache = pairs_fold.folded_through(
-                self.spark, self.pairs_folded_path
-            )
+            self._pf_cache = self._read_through(self.pairs_folded_path)
         return self._pf_cache
 
     def pairs(self) -> DataFrame:
@@ -671,11 +674,24 @@ class IndexLifecycle:
         the check."""
         if self._pf_cache is None:
             self.owner._recover_compaction()
-        return pairs_fold.read_all(
-            self.spark, self.pairs_path, self.pairs_hist_path,
-            self._pairs_folded(), self.applied_cond(),
-            self.pairs_cols, self.pairs_ddl,
-        )
+        folded = self._pairs_folded()
+        cond = self.applied_cond()
+        out = self._pairs_hist()
+        try:
+            live = self.spark.read.parquet(self.pairs_path)
+        except Exception:
+            live = None
+        if live is not None:
+            # folded rows are applied by construction; live directories
+            # above the fold watermark filter through the applied set
+            live = self._as_pairs(
+                live.filter(F.col("batch_id").cast("long") > folded)
+                .filter(cond)
+            )
+            out = live if out is None else out.unionByName(live)
+        if out is None:
+            return self.spark.createDataFrame([], self.pairs_ddl)
+        return out
 
     def compact_pairs(self) -> int:
         """Fold the pairs log's per-batch directories at or below the
@@ -686,7 +702,7 @@ class IndexLifecycle:
         the probe path; :meth:`compact` leaves the pairs log alone
         precisely so per-batch provenance survives, and this fold keeps
         that provenance while dropping the directory-per-batch layout.
-        Marker-committed and crash-finishable (:mod:`pairs_fold`);
+        Marker-committed and crash-finishable (module docstring);
         **run quiesced**, like compact. Returns directories folded."""
         self.owner._recover_compaction()
         # validates that no phantom (pairs-only, never-committed) batch
@@ -694,13 +710,67 @@ class IndexLifecycle:
         # would be permanent (round 10, defense-in-depth: compact()
         # refuses to advance the watermark over one in the first place)
         self.fold_targets()
-        n = pairs_fold.fold(
-            self.spark, self.pairs_path, self.pairs_hist_path,
-            self.pairs_folded_path, self.pairs_fold_marker_path,
-            self.compacted_through(), self.pairs_cols,
-        )
+        n = self._fold_pairs(self.compacted_through())
         self._pf_cache = None
         return n
+
+    def _fold_pairs(self, target: int) -> int:
+        """Fold live batch dirs with folded < batch_id <= ``target`` (the
+        compaction watermark — at or below it every batch is applied by
+        definition) into the history. Returns the number folded."""
+        self.finish_pairs_fold()
+        if not fs_storage.path_exists(self.spark, self.pairs_path):
+            return 0
+        already = self._read_through(self.pairs_folded_path)
+        moved = [
+            b for b in self._batch_ids(self.pairs_path)
+            if already < b <= int(target)
+        ]
+        if not moved:
+            return 0
+        live = self._as_pairs(
+            self.spark.read.parquet(self.pairs_path).filter(
+                F.col("batch_id").cast("long").isin(moved)
+            )
+        )
+        hist = self._pairs_hist()
+        staged = live if hist is None else hist.unionByName(live)
+        fs_storage.delete_path(self.spark, self.pairs_fold_staging)
+        staged.write.mode("overwrite").parquet(self.pairs_fold_staging)
+        self._write_through(self.pairs_fold_marker_path, target)
+        self.finish_pairs_fold()
+        return len(moved)
+
+    def finish_pairs_fold(self) -> bool:
+        """Finish a fold whose intent marker committed: swap the staged
+        history in, advance the ``pairs_folded`` watermark, delete the
+        moved live directories, drop the marker. Idempotent; returns
+        whether a fold was finished."""
+        target = self._read_through(self.pairs_fold_marker_path)
+        if target < 0:  # no marker (a committed fold moves batch ids >= 0)
+            return False
+        fs_storage.swap_in(
+            self.spark, self.pairs_hist_path, self.pairs_fold_staging
+        )
+        self._write_through(self.pairs_folded_path, target)
+        for d in fs_storage.list_dirs(self.spark, self.pairs_path):
+            if d.startswith("batch_id=") and int(d.split("=", 1)[1]) <= target:
+                fs_storage.delete_path(
+                    self.spark, fs_storage.join(self.pairs_path, d)
+                )
+        fs_storage.delete_path(self.spark, self.pairs_fold_marker_path)
+        self._pf_cache = None
+        return True
+
+    def _drop_ids(self, pairs: DataFrame, tomb: DataFrame) -> DataFrame:
+        """``pairs`` without every pair touching a tombstoned id."""
+        return pairs.join(
+            F.broadcast(tomb.select(F.col("id").alias("id_a"))),
+            "id_a", "left_anti",
+        ).join(
+            F.broadcast(tomb.select(F.col("id").alias("id_b"))),
+            "id_b", "left_anti",
+        )
 
     def scrub_pairs(self, ids) -> int:
         """GDPR-complete removal from the pairs LOG: rewrite it dropping
@@ -709,40 +779,39 @@ class IndexLifecycle:
         delete_ids + compact remove a document's index rows, but the
         pairs log is ordinarily an immutable historical record — a
         right-to-be-forgotten request must also scrub the pairs that
-        mention the id. One filtered rewrite preserving the per-batch
-        directory layout, swapped in with the rename-aside protocol
-        (crash-recoverable; run quiesced, like compact). Returns the
-        number of pair rows dropped."""
+        mention the id. One filtered rewrite each of the history and of
+        the live log (per-batch directory layout preserved), swapped in
+        with the rename-aside protocol (crash-recoverable; run quiesced,
+        like compact). Returns the number of pair rows dropped."""
         tomb = self._id_frame(ids)
         if tomb is None:
             return 0
         self.owner._recover_compaction()
-        hist_dropped = pairs_fold.scrub_hist(
-            self.spark, self.pairs_hist_path, tomb, self.pairs_cols,
-        )
+        dropped = 0
+        hist = self._pairs_hist()
+        if hist is not None:
+            before = hist.count()
+            fs_storage.replace_dir(
+                self.spark, self.pairs_hist_path, ".__scrub__",
+                lambda staging: self._drop_ids(hist, tomb)
+                .write.mode("overwrite").parquet(staging),
+            )
+            after = self._pairs_hist()
+            dropped = before - (0 if after is None else after.count())
         if not fs_storage.path_exists(self.spark, self.pairs_path):
-            return hist_dropped
+            return dropped
         try:
             pairs = self.spark.read.parquet(self.pairs_path)
         except Exception:
-            return hist_dropped
+            return dropped
         before = pairs.count()
-        kept = (
-            pairs.join(
-                F.broadcast(tomb.select(F.col("id").alias("id_a"))),
-                "id_a", "left_anti",
-            ).join(
-                F.broadcast(tomb.select(F.col("id").alias("id_b"))),
-                "id_b", "left_anti",
-            )
-        )
-        self._replace(
-            self.pairs_path, ".__scrub__",
-            lambda staging: kept.write.partitionBy("batch_id")
-            .mode("overwrite").parquet(staging),
+        fs_storage.replace_dir(
+            self.spark, self.pairs_path, ".__scrub__",
+            lambda staging: self._drop_ids(pairs, tomb).write
+            .partitionBy("batch_id").mode("overwrite").parquet(staging),
         )
         try:
             after = self.spark.read.parquet(self.pairs_path).count()
         except Exception:
             after = 0  # every batch dir emptied
-        return hist_dropped + before - after
+        return dropped + before - after

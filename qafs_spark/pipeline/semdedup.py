@@ -51,6 +51,8 @@ from typing import List, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..obs import warn_once
+
 # Auto-tier sizing, two knobs:
 # - target_cell_size: the EXACT-path short-circuit bound — a corpus at or
 #   under it is cheap enough all-pairs (≤ ~8M cosines) and, crucially,
@@ -74,32 +76,6 @@ DEFAULT_IVF_CELL_ROWS = 1024
 # fixtures (≤2000 embeddings) can never reach it, so guarded calls are
 # bit-equal there and the DuckDB oracle replays stay exact.
 DEFAULT_PAIR_CELL_CAP = 4096
-
-# One-time signal that the DEFAULT call crossed from exact all-pairs into
-# the approximate auto-IVF tier (round-9 default flip): default-arg
-# callers whose corpus grew past target_cell_size learn their results
-# became approximate (cross-cell pairs can be missed) instead of silently
-# losing recall. Once per process — the tier decision is per-call, the
-# surprise is once.
-_AUTO_TIER_WARNED = False
-
-
-def _warn_auto_tier_once(n: int, target_cell_size: int) -> None:
-    global _AUTO_TIER_WARNED
-    if _AUTO_TIER_WARNED:
-        return
-    _AUTO_TIER_WARNED = True
-    import warnings
-
-    warnings.warn(
-        f"semantic_pairs/semantic_dedup: corpus of {n} rows exceeds "
-        f"target_cell_size={target_cell_size}; the DEFAULT tier is now "
-        "the approximate auto-IVF scale path (cross-cell near-dup pairs "
-        "can be missed — the published SemDeDup trade). Pass exact=True "
-        "for the O(n^2) exact tier, or nlist/centroids to control the "
-        "quantizer. This warning is emitted once per process.",
-        stacklevel=3,
-    )
 
 
 def semantic_pairs(
@@ -192,7 +168,22 @@ def semantic_pairs(
                 df, vec_col, id_col, threshold=threshold, use_lsh=False,
                 _known_small=True,
             )
-        _warn_auto_tier_once(n, target_cell_size)
+        # One-time signal that the DEFAULT call crossed from exact
+        # all-pairs into the approximate auto-IVF tier (round-9 default
+        # flip): default-arg callers whose corpus grew past
+        # target_cell_size learn their results became approximate instead
+        # of silently losing recall. The tier decision is per-call, the
+        # surprise is once.
+        warn_once(
+            "semdedup.auto_tier",
+            f"semantic_pairs/semantic_dedup: corpus of {n} rows exceeds "
+            f"target_cell_size={target_cell_size}; the DEFAULT tier is now "
+            "the approximate auto-IVF scale path (cross-cell near-dup pairs "
+            "can be missed — the published SemDeDup trade). Pass exact=True "
+            "for the O(n^2) exact tier, or nlist/centroids to control the "
+            "quantizer. This warning is emitted once per process.",
+            stacklevel=2,
+        )
         if nprobe is None:
             nprobe = 2
         # cells sized for the ASSIGNED row count (n·nprobe with

@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..obs import warn_once
+
 
 def _to_double(v: Column) -> Column:
     return F.transform(v, lambda x: x.cast("double"))
@@ -290,10 +292,12 @@ def _blob_star_split(v: DataFrame, key: str, cap: int, threshold: float):
     )
     if not agg:
         return v, None, False
-    _warn_guard_engaged_once(
-        len(agg), max(int(r["n"]) for r in agg), int(cap)
-    )
-    _warn_star_engaged_once(len(agg), int(cap))
+    warn_once("similarity.guard_engaged", _GUARD_ENGAGED.format(
+        n_groups=len(agg), worst=max(int(r["n"]) for r in agg), cap=int(cap),
+    ), stacklevel=4)
+    warn_once("similarity.star_engaged", _STAR_ENGAGED.format(
+        n_groups=len(agg), cap=int(cap),
+    ), stacklevel=5)
     flagged_keys = [int(r[key]) for r in agg]
     hub_pairs = {(int(r[key]), int(r["hub_id"])) for r in agg}
     # hub vectors: tiny collect (one row per flagged group; multiprobe
@@ -341,30 +345,18 @@ def _blob_star_split(v: DataFrame, key: str, cap: int, threshold: float):
 # sign patterns differ in >2 of the p bits is missed — previously
 # within-group pairing was exact). Operators should SEE the tier change
 # once, not discover it in an agreement sweep. Once per process — the
-# engagement is per-call, the surprise is once (pattern:
-# semdedup._warn_auto_tier_once).
-_GUARD_ENGAGED_WARNED = False
-
-
-def _warn_guard_engaged_once(n_groups: int, worst: int, cap: int) -> None:
-    global _GUARD_ENGAGED_WARNED
-    if _GUARD_ENGAGED_WARNED:
-        return
-    _GUARD_ENGAGED_WARNED = True
-    import warnings
-
-    warnings.warn(
-        f"hot-group guard engaged: {n_groups} group(s) exceed "
-        f"max_cell_size={cap} (worst {worst} rows) — within-group pair "
-        "generation is now approximate there (sub-bucket splits miss "
-        "pairs whose sign patterns differ in >2 bits; star mode emits "
-        "hub edges for the >=threshold core instead of all pairs). "
-        "Below-cap groups are untouched and stay exact. This is the "
-        "documented skew-cap trade; raise max_cell_size, retrain the "
-        "quantizer, or pass max_cell_size=None to restore within-group-"
-        "exact pairing. Warned once per process.",
-        stacklevel=5,
-    )
+# engagement is per-call, the surprise is once (obs.warn_once).
+_GUARD_ENGAGED = (
+    "hot-group guard engaged: {n_groups} group(s) exceed "
+    "max_cell_size={cap} (worst {worst} rows) — within-group pair "
+    "generation is now approximate there (sub-bucket splits miss "
+    "pairs whose sign patterns differ in >2 bits; star mode emits "
+    "hub edges for the >=threshold core instead of all pairs). "
+    "Below-cap groups are untouched and stay exact. This is the "
+    "documented skew-cap trade; raise max_cell_size, retrain the "
+    "quantizer, or pass max_cell_size=None to restore within-group-"
+    "exact pairing. Warned once per process."
+)
 
 
 # STAR-specific engagement signal (round-14, from round-13 ADVICE):
@@ -376,26 +368,15 @@ def _warn_guard_engaged_once(n_groups: int, worst: int, cap: int) -> None:
 # modes; this one fires only when star emission actually replaces full
 # pair output, naming the default change so keep-set consumers know to
 # diff (or pass pair_output="full" for round-12 behavior).
-_STAR_ENGAGED_WARNED = False
-
-
-def _warn_star_engaged_once(n_groups: int, cap: int) -> None:
-    global _STAR_ENGAGED_WARNED
-    if _STAR_ENGAGED_WARNED:
-        return
-    _STAR_ENGAGED_WARNED = True
-    import warnings
-
-    warnings.warn(
-        f"star pair output engaged on {n_groups} over-cap group(s) "
-        f"(max_cell_size={cap}): these groups emit min-id hub edges "
-        "instead of full pairs. NOTE: semantic_dedup's pair_output "
-        "default changed to 'star' in round 13 — over-cap groups may "
-        "keep EXTRA near-duplicates vs the round-12 default (never "
-        "drop non-duplicates). Pass pair_output='full' to restore the "
-        "previous behavior. Warned once per process.",
-        stacklevel=6,
-    )
+_STAR_ENGAGED = (
+    "star pair output engaged on {n_groups} over-cap group(s) "
+    "(max_cell_size={cap}): these groups emit min-id hub edges "
+    "instead of full pairs. NOTE: semantic_dedup's pair_output "
+    "default changed to 'star' in round 13 — over-cap groups may "
+    "keep EXTRA near-duplicates vs the round-12 default (never "
+    "drop non-duplicates). Pass pair_output='full' to restore the "
+    "previous behavior. Warned once per process."
+)
 
 
 def _self_pair_guard(v: DataFrame, key: str, cap: int, dim: Optional[int]):
@@ -463,7 +444,9 @@ def _self_pair_guard(v: DataFrame, key: str, cap: int, dim: Optional[int]):
     if not counts:
         return None
     worst = max(int(r["n"]) for r in counts)
-    _warn_guard_engaged_once(len(counts), worst, cap)
+    warn_once("similarity.guard_engaged", _GUARD_ENGAGED.format(
+        n_groups=len(counts), worst=worst, cap=cap,
+    ), stacklevel=4)
     planes = 1
     while worst * (planes + 1) / (2 ** planes) > cap:
         planes += 1

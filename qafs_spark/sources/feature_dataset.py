@@ -329,15 +329,10 @@ def compact_feature(
     leftover staging/old directories from completed or failed runs are
     cleaned up front.
     """
-    staging = path.rstrip("/") + ".__compact__"
-    old = path.rstrip("/") + ".__old__"
-    if not fs_storage.path_exists(spark, path):
-        if fs_storage.path_exists(spark, old):
-            # a previous compact crashed between its two renames — the
-            # aside directory IS the live data; restore it and recompact
-            fs_storage.rename_path(spark, old, path)
-        else:
-            return 0
+    # a previous compact that crashed between its two renames left the
+    # live data aside; restore it and recompact
+    if not fs_storage.restore_aside(spark, path):
+        return 0
     # sweep orphan append-staging dirs (a writer that crashed before its
     # moves — see _staged_append). Compaction runs in a single-writer
     # maintenance window by contract, so anything still staged is dead.
@@ -367,20 +362,18 @@ def compact_feature(
         1,
         df.select("partition").distinct().count() * target_files_per_partition,
     )
-    fs_storage.delete_path(spark, staging)
-    (
-        df.repartitionByRange(n_parts, "partition", "time")
-        .sortWithinPartitions("partition", "time")
-        .write.mode("overwrite")
-        .partitionBy("partition")
-        .parquet(staging)
-    )
-    n_rows = spark.read.parquet(staging).count()
-    fs_storage.delete_path(spark, old)  # stale leftover from a prior run
-    fs_storage.rename_path(spark, path, old)
-    fs_storage.rename_path(spark, staging, path)
-    fs_storage.delete_path(spark, old)
-    return n_rows
+
+    def stage(staging: str) -> int:
+        (
+            df.repartitionByRange(n_parts, "partition", "time")
+            .sortWithinPartitions("partition", "time")
+            .write.mode("overwrite")
+            .partitionBy("partition")
+            .parquet(staging)
+        )
+        return spark.read.parquet(staging).count()
+
+    return fs_storage.replace_dir(spark, path, ".__compact__", stage)
 
 
 def expire_feature(

@@ -10,6 +10,13 @@ for reads/writes, so there is no second credential/config surface.
 All calls here are driver-side metadata ops (exists/list/delete); bulk data
 movement stays in Spark jobs (see ``FeatureStore.clone_feature``).
 
+The rename-aside swap every maintenance rewrite uses (feature compaction,
+the index lifecycle's compaction, rebuild and pairs-log fold) lives here
+once: :func:`replace_dir` stages and swaps, :func:`swap_in` finishes a
+swap of an already-staged directory, and :func:`restore_aside` undoes a
+crash between the two renames. They are the only code that names the
+``.__old__`` directory.
+
 Cost rule: a helper costs about one py4j round trip per Hadoop operation,
 plus building its ``Path`` and Hadoop's cached ``getFileSystem`` lookup.
 It matters because a feature commit makes ~30 ``mkdirs`` + ``rename_path``
@@ -89,6 +96,58 @@ def rename_path(spark: SparkSession, src: str, dst: str) -> bool:
     docstring for the implications)."""
     fs, jsrc = _fs_and_path(spark, src)
     return bool(fs.rename(jsrc, _jpath(spark, dst)))
+
+
+# -- rename-aside swap --------------------------------------------------------
+# The helpers below call path_exists/rename_path/delete_path through this
+# module's globals, so a wrapper installed on those names (a tracer, a test's
+# crash injection) sees every primitive call a swap makes.
+
+
+def _aside(path: str) -> str:
+    return path.rstrip("/") + ".__old__"
+
+
+def restore_aside(spark: SparkSession, path: str) -> bool:
+    """Crash restore: a crash between a swap's two renames leaves the data
+    at ``<path>.__old__`` and no live ``path`` — move it back. Returns
+    whether ``path`` exists afterwards."""
+    if path_exists(spark, path):
+        return True
+    old = _aside(path)
+    if not path_exists(spark, old):
+        return False
+    rename_path(spark, old, path)
+    return True
+
+
+def replace_dir(spark: SparkSession, path: str, suffix: str, stage):
+    """Unconditional swap: clear ``<path><suffix>``, let ``stage(staging)``
+    write the new data there, move live to ``.__old__``, staging to live,
+    and delete old. Returns ``stage``'s result."""
+    staging = path.rstrip("/") + suffix
+    old = _aside(path)
+    delete_path(spark, staging)
+    out = stage(staging)
+    delete_path(spark, old)  # stale leftover from a prior run
+    rename_path(spark, path, old)
+    rename_path(spark, staging, path)
+    delete_path(spark, old)
+    return out
+
+
+def swap_in(spark: SparkSession, path: str, staging: str) -> None:
+    """Idempotent swap of an already-staged directory: a missing
+    ``staging`` means the swap already happened, and a missing live
+    ``path`` (the first fold of a dataset) has nothing to move aside."""
+    if not path_exists(spark, staging):
+        return
+    old = _aside(path)
+    delete_path(spark, old)
+    if path_exists(spark, path):
+        rename_path(spark, path, old)
+    rename_path(spark, staging, path)
+    delete_path(spark, old)
 
 
 def list_dirs(spark: SparkSession, path: str) -> List[str]:

@@ -211,7 +211,7 @@ def dedup_pairs(spark, index_path: str, pairs_path: str) -> DataFrame:
     except Exception:
         # dir exists but holds no committed part files (crash inside the
         # very first batch's pairs write) — same contract as
-        # pairs_fold.read_all
+        # IndexLifecycle.pairs
         return spark.createDataFrame([], empty_schema)
     # the flat sink has no compaction watermark to bound the applied
     # predicate (the class indexes' _applied_cond shape), but streaming

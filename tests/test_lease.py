@@ -743,6 +743,7 @@ def test_added_files_probe_pinned_and_loud_on_failure(spark):
     process instead of degrading silently."""
     import pytest
 
+    from qafs_spark import obs
     from qafs_spark.pipeline import vector_index as vi
 
     # (a) probe resolves on this Spark build
@@ -754,7 +755,7 @@ def test_added_files_probe_pinned_and_loud_on_failure(spark):
         def __getattr__(self, _):
             raise RuntimeError("no jvm")
 
-    vi._PROBE_WARNED = False
+    obs._warned.discard("vector_index.probe_failed")
     with pytest.warns(UserWarning, match="addedFiles is not reachable"):
         assert vi._added_files_registry(_Boom()) is None
     # once per process: second failure is silent
@@ -763,4 +764,4 @@ def test_added_files_probe_pinned_and_loud_on_failure(spark):
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         assert vi._added_files_registry(_Boom()) is None
-    vi._PROBE_WARNED = True  # leave quiet for the rest of the session
+    obs._warned.add("vector_index.probe_failed")  # leave quiet for the rest of the session

@@ -3076,21 +3076,33 @@ def test_banded_compaction_preserves_probes(inc_corpus, tmp_path):
     assert idx.compact() == 0
 
 
-def test_banded_compaction_crash_recovery(inc_corpus, tmp_path):
+@pytest.mark.parametrize("dataset", ["docs", "pairs_hist"])
+def test_banded_compaction_crash_recovery(inc_corpus, tmp_path, dataset):
     """A crash between the swap's two renames leaves a dataset aside as
-    <ds>.__old__ with no live dir; the next apply_batch (or compact)
-    restores it before doing anything."""
+    <ds>.__old__ with no live dir; the next apply_batch (or compact, or a
+    fresh instance's pairs() read) restores it before doing anything."""
     import os
 
     from qafs_spark.pipeline.banded_index import BandedMinHashIndex
 
     spark = inc_corpus.sparkSession
     root = str(tmp_path / "ix")
-    idx = BandedMinHashIndex(
-        spark, root, n=3, num_hashes=32, num_bands=16, num_partitions=8
-    )
+    ikw = dict(n=3, num_hashes=32, num_bands=16, num_partitions=8)
+    idx = BandedMinHashIndex(spark, root, **ikw)
     kw = dict(text_col="text", id_col="doc_id", threshold=0.3, max_band_size=None)
     idx.apply_batch(inc_corpus.filter(F.col("doc_id") % 2 == 0), 0, **kw)
+    if dataset == "pairs_hist":
+        # a pairs-history rewrite (fold or scrub) crashed between renames
+        idx.apply_batch(inc_corpus.filter(F.col("doc_id") % 2 == 1), 1, **kw)
+        want = sorted(map(tuple, idx.pairs().collect()))
+        assert want
+        assert idx.compact() >= 1
+        assert idx.compact_pairs() >= 1
+        hist = os.path.join(root, "pairs_hist")
+        os.rename(hist, hist + ".__old__")
+        fresh = BandedMinHashIndex(spark, root, **ikw)
+        assert sorted(map(tuple, fresh.pairs().collect())) == want
+        return
     docs1 = sorted(r["id"] for r in idx.doc_rows().collect())
     os.rename(os.path.join(root, "docs"), os.path.join(root, "docs.__old__"))
     idx.apply_batch(inc_corpus.filter(F.col("doc_id") % 2 == 1), 1, **kw)
@@ -3428,6 +3440,7 @@ def test_vector_index_multipass_budget_bit_parity(vec_corpus, tmp_path):
     bit-equal (== on doubles, exactly-once per pair) to the single-pass
     path, with the guard engaged and not. Same index instance both
     runs, so quantizer/cells are shared and the comparison is strict."""
+    from qafs_spark import obs
     from qafs_spark.pipeline import vector_index as vi
     from qafs_spark.pipeline.vector_index import CellVectorIndex
 
@@ -3461,7 +3474,7 @@ def test_vector_index_multipass_budget_bit_parity(vec_corpus, tmp_path):
             ).count(),
             8, deltas,
         ) > 1
-        vi._MULTIPASS_NOTED = False  # the probe above consumed the note
+        obs._warned.discard("vector_index.multipass")  # the probe above consumed the note
         with pytest.warns(UserWarning, match="passes"):
             multi = pair_rows(mcs)
         idx.node_budget_bytes = vi.NODE_ARTIFACT_BUDGET_BYTES
@@ -4522,6 +4535,35 @@ def test_vector_index_retrain_recovers_recall(spark, tmp_path):
     assert not idx.apply_batch(more, 2, threshold=0.999)  # exactly-once
 
 
+def test_vector_index_retrain_releases_live_on_failure(
+    spark, tmp_path, monkeypatch
+):
+    """retrain() persists the live vectors for its training scan; a
+    failure inside it (here the quantizer training) still releases them
+    instead of leaving them cached for the rest of the session."""
+    import random
+
+    from qafs_spark.pipeline import similarity
+    from qafs_spark.pipeline.vector_index import CellVectorIndex
+
+    rng = random.Random(11)
+    rows = spark.createDataFrame(
+        _vx_cluster(rng, [1.0, 0, 0], range(10)), ["vec_id", "embedding"]
+    )
+    idx = CellVectorIndex(spark, str(tmp_path / "vx"), nlist=2, train_iters=2)
+    assert idx.apply_batch(rows, 0, threshold=0.999)
+
+    def boom(*a, **k):
+        raise RuntimeError("training failed")
+
+    monkeypatch.setattr(similarity, "ivf_train", boom)
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="training failed"):
+        idx.retrain()
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_vector_index_retrain_crash_recovery(spark, tmp_path):
     """A retrain that crashes AFTER its intent marker commits (staged
     vectors + centroids on disk, swaps not yet run) is finished by the
@@ -4652,8 +4694,8 @@ def test_index_pairs_fold_bounds_directories(spark, tmp_path, monkeypatch):
     import os
     import random
 
-    import qafs_spark.pipeline.pairs_fold as pf
     from qafs_spark.pipeline.banded_index import BandedMinHashIndex
+    from qafs_spark.pipeline.lifecycle import IndexLifecycle
     from qafs_spark.pipeline.vector_index import CellVectorIndex
 
     rng = random.Random(53)
@@ -4693,10 +4735,10 @@ def test_index_pairs_fold_bounds_directories(spark, tmp_path, monkeypatch):
     # crash window: staging + marker written, finish step never ran —
     # the next READER (fresh instance) completes the fold
     assert ix.compact() >= 0  # advance watermark over batch 3
-    orig_recover = pf.recover
-    monkeypatch.setattr(pf, "recover", lambda *a, **k: False)
+    orig_recover = IndexLifecycle.finish_pairs_fold
+    monkeypatch.setattr(IndexLifecycle, "finish_pairs_fold", lambda self: False)
     assert ix.compact_pairs() == 1  # staged, marker committed, unfinished
-    monkeypatch.setattr(pf, "recover", orig_recover)
+    monkeypatch.setattr(IndexLifecycle, "finish_pairs_fold", orig_recover)
     assert os.path.exists(str(tmp_path / "ix" / "pairs_fold_commit"))
     ix2 = BandedMinHashIndex(spark, str(tmp_path / "ix"), **kw)
     assert snap(ix2) == after
@@ -5460,13 +5502,14 @@ def test_semantic_pairs_auto_tier_warns_once(spark):
     process-wide warning when that first happens (round 10, ADVICE)."""
     import warnings as w
 
+    from qafs_spark import obs
     from qafs_spark.pipeline import semdedup as sdd
 
     df = spark.createDataFrame(
         [(i, [float(i % 7), 1.0, float(i % 3)]) for i in range(12)],
         ["vec_id", "embedding"],
     )
-    sdd._AUTO_TIER_WARNED = False
+    obs._warned.discard("semdedup.auto_tier")
     with pytest.warns(UserWarning, match="auto-IVF"):
         sdd.semantic_pairs(
             df, "embedding", "vec_id", threshold=0.99,
@@ -5479,7 +5522,7 @@ def test_semantic_pairs_auto_tier_warns_once(spark):
             target_cell_size=4, ivf_cell_rows=4,
         ).collect()
     # under the short-circuit (n <= target_cell_size) nothing warns
-    sdd._AUTO_TIER_WARNED = False
+    obs._warned.discard("semdedup.auto_tier")
     with w.catch_warnings():
         w.simplefilter("error")
         sdd.semantic_pairs(df, "embedding", "vec_id", threshold=0.99).collect()

@@ -301,10 +301,11 @@ def test_guard_engagement_warns_once(spark, skewed):
     import warnings
 
     import qafs_spark.pipeline.similarity as sim
+    from qafs_spark import obs
 
     df, _ = skewed
     v = _assigned(df)
-    sim._GUARD_ENGAGED_WARNED = False
+    obs._warned.discard("similarity.guard_engaged")
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
         assert sim._self_pair_guard(v, "cell", 300, DIM) is not None
@@ -315,7 +316,7 @@ def test_guard_engagement_warns_once(spark, skewed):
         assert sim._self_pair_guard(v, "cell", 300, DIM) is not None
     assert not [x for x in w2 if "engaged" in str(x.message)]
     # a disengaged guard never warns, reset or not
-    sim._GUARD_ENGAGED_WARNED = False
+    obs._warned.discard("similarity.guard_engaged")
     with warnings.catch_warnings(record=True) as w3:
         warnings.simplefilter("always")
         assert sim._self_pair_guard(v, "cell", 100_000, DIM) is None
