@@ -57,6 +57,7 @@ guards here read them from there.
 from __future__ import annotations
 
 import json
+import numbers
 from typing import Callable, List, Optional
 
 from pyspark.sql import DataFrame
@@ -64,6 +65,24 @@ from pyspark.sql import functions as F
 
 from .. import storage as fs_storage
 from . import lease, manifest
+
+
+def _id_type(ids: list) -> str:
+    """The tombstone column type of a list of ids: "int64" for integers,
+    "string" for strings; anything else, or a mix, raises."""
+    kinds = {
+        "string" if isinstance(i, str)
+        else "int64" if isinstance(i, numbers.Integral)
+        and not isinstance(i, bool)
+        else None
+        for i in ids
+    }
+    if len(kinds) != 1 or None in kinds:
+        raise ValueError(
+            "ids must be all integers or all strings, got "
+            f"{sorted({type(i).__name__ for i in ids})}"
+        )
+    return kinds.pop()
 
 
 class IndexLifecycle:
@@ -141,6 +160,12 @@ class IndexLifecycle:
         # exclude_batch_id) still run per call against the cached
         # listing, so visibility semantics are unchanged.
         self._ds_cache: dict = {}
+        # each dataset's schema, kept across forget_listings: a re-list
+        # after a commit then passes it to the reader instead of
+        # inferring it again, which is a Spark job (a parallel footer
+        # read). Per-batch datasets keep one schema for an index's life;
+        # invalidate drops it with the other caches.
+        self._schema_cache: dict = {}
 
     # -- caches ------------------------------------------------------------
 
@@ -157,6 +182,7 @@ class IndexLifecycle:
         self._applied_cache = None
         self._pf_cache = None
         self._ds_cache.clear()
+        self._schema_cache.clear()
 
     def forget_listings(self) -> None:
         """A commit added batch_id= directories the cached dataset
@@ -165,17 +191,24 @@ class IndexLifecycle:
 
     def read_cached(self, path: str) -> Optional[DataFrame]:
         """``spark.read.parquet(path)``, cached until the dataset's
-        directories can change; None for a dataset without part files."""
+        directories can change; None for a dataset without part files.
+        A re-read reuses the schema the first read inferred, so only
+        that first read runs a Spark job."""
         df = self._ds_cache.get(path)
         if df is None:
+            schema = self._schema_cache.get(path)
+            reader = self.spark.read
             try:
-                df = self.spark.read.parquet(path)
+                if schema is not None:
+                    reader = reader.schema(schema)
+                df = reader.parquet(path)
             except Exception:
                 # dirs whose batches were all empty hold no part files, so
                 # schema inference fails — semantically an empty dataset
                 # (not cached: a later batch may add the first part file)
                 return None
             self._ds_cache[path] = df
+            self._schema_cache[path] = df.schema
         return df
 
     def sync_tombstones(self) -> None:
@@ -411,11 +444,21 @@ class IndexLifecycle:
         # orphaned. One small-file read per batch.
         if self._unleased():
             lease.refuse_if_held(self.spark, self.root, "delete_ids")
-        df = self._id_frame(ids)
-        if df is None:
-            return 0
-        df.repartition(1).write.mode("append").parquet(self.deletes_path)
-        n = df.count()
+        if isinstance(ids, DataFrame):
+            df = self._id_frame(ids)
+            df.repartition(1).write.mode("append").parquet(self.deletes_path)
+            n = df.count()
+        else:
+            # a list is deduped here and appended as one driver-side
+            # parquet file (storage.write_small_parquet) — no Spark job
+            uniq = list(dict.fromkeys(ids))
+            if not uniq:
+                return 0
+            fs_storage.write_small_parquet(
+                self.spark, self.deletes_path, [(i,) for i in uniq],
+                [("id", _id_type(uniq))],
+            )
+            n = len(uniq)
         self.invalidate()
         return n
 

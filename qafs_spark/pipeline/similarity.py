@@ -793,8 +793,7 @@ def _cell_assigner(centroids: List[List[float]]):
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    C = np.asarray(centroids, dtype="float64")
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
+    Cn = unit_centroids(centroids)
 
     @pandas_udf("int")
     def assign(vecs: pd.Series) -> pd.Series:
@@ -806,29 +805,48 @@ def _cell_assigner(centroids: List[List[float]]):
     return assign
 
 
+def unit_centroids(centroids: List[List[float]]):
+    """The centroids as a row-normalized float64 matrix — the quantizer
+    operand of :func:`probe_cells_np`."""
+    import numpy as np
+
+    C = np.asarray(centroids, dtype="float64")
+    return C / np.linalg.norm(C, axis=1, keepdims=True)
+
+
+def probe_cells_np(M, Cn, nprobe: int):
+    """int32[n, nprobe]: the ``nprobe`` nearest cells of each row of the
+    float64 matrix ``M`` against :func:`unit_centroids` ``Cn``, nearest
+    first. The one probe kernel: :func:`_probe_cells` runs it per Arrow
+    batch, :class:`vector_index.CellVectorIndex` on the driver over
+    collected query rows. ``np.einsum`` for the same batch-independence
+    reason as :func:`_cell_assigner`, so a row's cells do not depend on
+    which rows share its call."""
+    import numpy as np
+
+    M = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
+    sims = np.einsum("ij,kj->ik", M, Cn)
+    # stable sort so exact-cosine ties break on the FIRST max index,
+    # matching _cell_assigner's argmax — nprobe=1 must reproduce the
+    # storage assignment bit-for-bit (duplicate centroids are easy to
+    # hit when ivf_train samples duplicate rows)
+    return np.argsort(-sims, axis=1, kind="stable")[:, :nprobe].astype(
+        "int32"
+    )
+
+
 def _probe_cells(centroids: List[List[float]], nprobe: int):
-    """Vectorized pandas UDF: indices of the `nprobe` nearest cells.
-    ``np.einsum`` for the same batch-independence reason as
-    :func:`_cell_assigner` (nprobe=1 must reproduce its assignment)."""
+    """Vectorized pandas UDF: indices of the `nprobe` nearest cells
+    (:func:`probe_cells_np`; nprobe=1 reproduces :func:`_cell_assigner`)."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    C = np.asarray(centroids, dtype="float64")
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
+    Cn = unit_centroids(centroids)
 
     @pandas_udf("array<int>")
     def probes(vecs: pd.Series) -> pd.Series:
         M = np.stack(vecs.map(lambda v: np.asarray(v, dtype="float64")))
-        M = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        sims = np.einsum("ij,kj->ik", M, Cn)
-        # stable sort so exact-cosine ties break on the FIRST max index,
-        # matching _cell_assigner's argmax — nprobe=1 must reproduce the
-        # storage assignment bit-for-bit (duplicate centroids are easy to
-        # hit when ivf_train samples duplicate rows)
-        order = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe].astype(
-            "int32"
-        )
-        return pd.Series(list(order))
+        return pd.Series(list(probe_cells_np(M, Cn, nprobe)))
 
     return probes
 

@@ -140,6 +140,7 @@ class InvertedIndex:
             self._lc.commit_batch(batch_id, fence)
         finally:
             tf.unpersist()
+            self._lc.forget_listings()
         return True
 
     # -- retrieval ---------------------------------------------------------
@@ -155,11 +156,14 @@ class InvertedIndex:
         corpus, byte-identical scoring to :func:`text.bm25_topk`.
 
         The postings read is pruned to the query terms' prefix partitions
-        (bounded by ``min(len(terms), num_partitions)`` directories);
-        corpus scalars come from one narrow aggregate over the two-column
-        ``doclens`` table, so they stay exact under tombstones. Global
-        top-k plans as TakeOrderedAndProject, ranks are a window over
-        <= k rows."""
+        (bounded by ``min(len(terms), num_partitions)`` directories); the
+        prefixes are constant-folded into the scan's partition filter,
+        and both datasets are read through the lifecycle's listing and
+        schema caches, so building the plan runs no Spark job once the
+        instance has read the index (pinned in tests). Corpus scalars
+        come from one narrow aggregate over the two-column ``doclens``
+        table, so they stay exact under tombstones. Global top-k plans
+        as TakeOrderedAndProject, ranks are a window over <= k rows."""
         from pyspark.sql import Window
 
         self._recover_compaction()  # incl. finishing a committed rebuild
@@ -169,14 +173,17 @@ class InvertedIndex:
         ):
             raise ValueError(f"no index at {self.root}")
         applied_cond = self._lc.applied_cond()
+        dl_all = self._lc.read_cached(self.doclens_path)
+        if dl_all is None:
+            raise ValueError(f"no index at {self.root}")
         dl = self._lc.minus_deleted(
-            self.spark.read.parquet(self.doclens_path)
-            .filter(applied_cond)
-            .select("id", "dl")
+            dl_all.filter(applied_cond).select("id", "dl")
         )
         terms = sorted(set(query_terms))
-        if not terms:
-            # zero-term query: BM25 over no postings is an empty ranking,
+        post = self._lc.read_cached(self.postings_path)
+        if not terms or post is None:
+            # zero-term query (or no postings at all, every document
+            # zero-token): BM25 over no postings is an empty ranking,
             # typed like a populated one (createDataFrame can't infer an
             # empty frame's schema, so derive it from doclens)
             return dl.select(
@@ -184,16 +191,12 @@ class InvertedIndex:
                 F.lit(0).cast("long").alias("score_micro"),
                 F.lit(0).cast("int").alias("rank"),
             ).limit(0)
-        pfxs = {
-            r[0]
-            for r in self.spark.createDataFrame(
-                [(t,) for t in terms], ["term"]
-            ).select(self._pfx(F.col("term"))).collect()
-        }
-        post = (
-            self.spark.read.parquet(self.postings_path)
-            .filter(applied_cond)
-            .filter(F.col("term_pfx").isin([str(p) for p in sorted(pfxs)]))
+        # the terms' prefixes as constant expressions: Catalyst folds
+        # them to literals, so the scan's partition filter prunes to the
+        # same directories with no job run to compute them
+        pfxs = [self._pfx(F.lit(t)).cast("string") for t in terms]
+        post = post.filter(applied_cond).filter(
+            F.col("term_pfx").isin(pfxs)
         )
         tf = self._lc.minus_deleted(
             post.filter(F.col("term").isin(terms)).select("id", "term", "tf")

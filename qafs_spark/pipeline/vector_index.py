@@ -86,12 +86,13 @@ COLLECT_CHUNK_BYTES = 256 * 1024 * 1024
 # remaining bound was per-NODE artifact bytes (disk + page cache,
 # n×dim×{8,4}), previously advisory-only (the round-14 warn). A batch
 # whose artifact set would exceed this budget is now scored in MULTIPLE
-# PASSES over id-hash sub-blocks of the b side: each pass ships
+# PASSES over sub-blocks of the b side (id-hash filters in ingest,
+# row ranges of the collected query arrays in search): each pass ships
 # ≤ budget bytes per node, materializes its pairs, and reclaims its
 # artifacts before the next pass collects — per-node footprint is
 # bounded by config, at the explicit cost of scanning the a side once
 # per pass (pass count is ceil(artifact_bytes / budget), logged once).
-# Pair/cosine output is BIT-EQUAL to single-pass: the id-hash split
+# Pair/cosine output is BIT-EQUAL to single-pass: the split
 # partitions the b set, each unordered pair lands in exactly one pass,
 # and the einsum computes every (a,b) dot product independently, so
 # splitting b rows changes no pair's reduction order. Override per
@@ -264,10 +265,10 @@ class _SharedBlocks:
         on_cleanup=None,
     ) -> None:
         """``arrs`` values are ndarrays (saved here) OR str paths to
-        ``.npy`` files the caller already wrote at the final
+        ``.npy`` files the caller already wrote, moved here to the final
         ``{stage}/{tag}-{name}.npy`` location — the round-14 streamed
-        collect writes the big arrays there chunk-by-chunk via
-        write-mode memmaps, so they never exist in driver RAM at once.
+        collect writes the big arrays chunk-by-chunk via write-mode
+        memmaps, so they never exist in driver RAM at once.
         ``stage``/``tag`` default to a fresh tempdir + uuid (the
         standalone shape tests construct); ``slot_mode`` marks ``tag``
         as a reusable per-instance slot: the stage dir outlives
@@ -691,16 +692,28 @@ class CellVectorIndex:
 
     # -- core --------------------------------------------------------------
 
-    def _assigned(self, batch, id_col, vec_col, cents, nprobe):
-        from .similarity import _probe_cells, norm
+    @staticmethod
+    def _with_norm(batch, id_col, vec_col, *extra):
+        """(id, vec, __n, *extra). __n: the vector's norm, staged once
+        per row and PERSISTED with it — probe-time cosines never
+        recompute norms (cosine_pre)."""
+        from .similarity import norm
 
-        probes = _probe_cells(cents, nprobe)
-        # __n: the vector's norm, staged once per row and PERSISTED with
-        # it — probe-time cosines never recompute norms (cosine_pre)
         return batch.select(
             F.col(id_col).alias("id"),
             F.col(vec_col).alias("vec"),
             norm(F.col(vec_col)).alias("__n"),
+            *extra,
+        )
+
+    def _assigned(self, batch, id_col, vec_col, cents, nprobe):
+        """One (id, vec, __n, cell) row per probed cell — the probe UDF
+        (:func:`similarity._probe_cells`) exploded."""
+        from .similarity import _probe_cells
+
+        probes = _probe_cells(cents, nprobe)
+        return self._with_norm(
+            batch, id_col, vec_col,
             F.explode(probes(F.col(vec_col))).alias("cell"),
         )
 
@@ -907,7 +920,8 @@ class CellVectorIndex:
         return (stage, f"{base}-s{sid}", epoch, True, _release)
 
     def _collect_blocks(
-        self, probed_b: DataFrame, keyed: bool, deltas=None
+        self, probed_b: DataFrame, keyed: bool, dim: int, deltas=None,
+        n: Optional[int] = None,
     ):
         """Materialize the (broadcast-sized) b side driver-side as
         per-(cell[, __sub]) numpy blocks and ship them ONCE PER NODE as
@@ -936,6 +950,11 @@ class CellVectorIndex:
         so cosines are BIT-EQUAL to ``cosine_pre_batch`` (asserted in
         tests).
 
+        ``dim`` is the quantizer's (the caller holds the centroids) and
+        ``n``, when the caller already counted ``probed_b`` (dedup_batch's
+        cells collect), skips the count job — the collect is then the
+        only job over ``probed_b`` (:meth:`_fetch_rows`).
+
         ``deltas`` (guard engaged): ``probed_b`` is the PLAIN frame — one
         row per probe with its OWN ``__sub`` — and the (p+1)-way
         multiprobe expansion happens HERE over int64 row positions: a
@@ -946,54 +965,92 @@ class CellVectorIndex:
         a-row's own key then hits a b-row's range iff their patterns
         differ in <= 1 bit — exactly the join tier's
         ``a.__sub == b.__sub(expanded)`` semantics."""
-        import os
-
-        import numpy as np
+        import shutil
 
         cols = ["id", "vec", "__n", "cell"] + (["__sub"] if keyed else [])
-        # Round 13 (found by the dim-768 decade): one-shot toPandas of
-        # the b side carries a hidden × dim factor — a 233k-row batch at
-        # dim 768 is ~1.4 GiB of task results, over the default
-        # spark.driver.maxResultSize (the dim-64 runs moved ~120 MB and
-        # never saw it). Round 14 (verdict task 1 + ADVICE): above
-        # ~256 MB the collect runs in ROW-RANGE groups packed from exact
-        # per-partition COUNTS (the round-13 average-based packing let
-        # one skewed partition blow the byte budget in a single fetch),
-        # and the big arrays stream STRAIGHT INTO the .npy artifact
-        # files through write-mode memmaps — the driver holds ONE
-        # group's transient frame plus O(n) int64 bookkeeping, never the
-        # n×dim float64 batch (a 10M-row × 768-dim batch preallocated
-        # ~61 GB under the round-13 shape; now ~240 MB + the chunk).
-        # Row ranges come from monotonically_increasing_id computed
-        # BEFORE the persist (pid<<33 + row-in-partition): ascending-mid
-        # iteration reproduces the exact single-shot row order, and a
-        # partition bigger than the budget is SPLIT by mid ranges
-        # instead of fetched whole. Max-batch bound is now executor-side
-        # (cells per partition) + O(n·(deltas+2)·8) driver bytes — no
-        # dim term.
+        n, ids, vecs, norms, cellv, subv, tmp = self._fetch_rows(
+            probed_b.select(*cols), dim, n
+        )
+        try:
+            return self._finish_blocks(
+                n, ids, vecs, norms, cellv, subv, keyed, deltas
+            )
+        finally:
+            if tmp is not None:
+                shutil.rmtree(tmp, ignore_errors=True)
+
+    def _fetch_rows(self, sel: DataFrame, dim: int, n=None, probe=None):
+        """Collect ``sel``'s (id, vec, __n[, cell][, __sub]) rows into
+        driver arrays: (n, ids int64[n], vecs block_dtype[n, dim], norms
+        float64[n], cells int64, subs int64[n] | None, tmp). ``ids``,
+        ``vecs`` and ``norms`` are ndarrays, or — above
+        ``COLLECT_CHUNK_BYTES`` — paths of ``.npy`` files in the private
+        dir ``tmp`` (None otherwise; the caller removes it), which
+        :class:`_SharedBlocks` moves into place.
+
+        ``probe`` = (unit centroids, nprobe): ``sel`` has no cell column;
+        each fetched chunk's ``nprobe`` nearest cells are assigned HERE
+        by :func:`similarity.probe_cells_np` — the kernel the probe UDF
+        runs, so the cells are the UDF's — and ``cells`` is
+        int64[n, nprobe]; otherwise ``cells`` is ``sel``'s int64[n] cell
+        column. Without ``n`` the selection is persisted and counted
+        first (one JVM job; the collect then reads the cache)."""
+        import os
+        import shutil
+        import tempfile
+
+        import numpy as np
         from pyspark import StorageLevel
 
-        stage, tag, epoch, slot_mode, on_cleanup = self._block_stage()
-        sel = (
-            probed_b.select(*cols)
-            .withColumn("__mid", F.monotonically_increasing_id())
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        paths = None
+        from .similarity import probe_cells_np
+
+        keyed = "__sub" in sel.columns
+        cached = None
+        tmp = None
+
+        def mid_cached():
+            # Row ranges come from monotonically_increasing_id computed
+            # BEFORE the persist (pid<<33 + row-in-partition):
+            # ascending-mid iteration reproduces the exact single-shot
+            # row order, and a partition bigger than the budget is SPLIT
+            # by mid ranges instead of fetched whole.
+            return sel.withColumn(
+                "__mid", F.monotonically_increasing_id()
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+
         try:
-            n = sel.count()
-            dim = len(sel.select("vec").first()[0]) if n else 0
+            if n is None:
+                cached = mid_cached()
+                n = cached.count()
+            # Round 13 (found by the dim-768 decade): one-shot toPandas
+            # of the b side carries a hidden × dim factor — a 233k-row
+            # batch at dim 768 is ~1.4 GiB of task results, over the
+            # default spark.driver.maxResultSize (the dim-64 runs moved
+            # ~120 MB and never saw it). Round 14 (verdict task 1 +
+            # ADVICE): above ~256 MB the collect runs in ROW-RANGE groups
+            # packed from exact per-partition COUNTS (the round-13
+            # average-based packing let one skewed partition blow the
+            # byte budget in a single fetch), and the big arrays stream
+            # STRAIGHT INTO .npy files through write-mode memmaps — the
+            # driver holds ONE group's transient frame plus O(n) int64
+            # bookkeeping, never the n×dim float64 batch (a 10M-row ×
+            # 768-dim batch preallocated ~61 GB under the round-13 shape;
+            # now ~240 MB + the chunk). Max-batch bound is executor-side
+            # (cells per partition) + O(n·(deltas+2)·8) driver bytes — no
+            # dim term.
             row_bytes = dim * 16 + 128
-            est_bytes = n * row_bytes
-            if est_bytes <= COLLECT_CHUNK_BYTES:
-                chunks = [sel.drop("__mid").toPandas()] if n else []
+            if n * row_bytes <= COLLECT_CHUNK_BYTES:
+                src = sel if cached is None else cached.drop("__mid")
+                chunks = [src.toPandas()] if n else []
                 ids = np.empty(n, dtype="int64")
                 vecs = np.empty((n, dim), dtype=self.block_dtype)
                 norms = np.empty(n, dtype="float64")
             else:
+                if cached is None:
+                    cached = mid_cached()
                 counts = {
                     int(r["p"]): int(r["c"])
-                    for r in sel.groupBy(
+                    for r in cached.groupBy(
                         F.shiftright("__mid", 33).alias("p")
                     )
                     .agg(F.count(F.lit(1)).alias("c"))
@@ -1030,11 +1087,12 @@ class CellVectorIndex:
                             (F.col("__mid") >= base + lo)
                             & (F.col("__mid") < base + hi)
                         )
-                    return sel.filter(cond).drop("__mid").toPandas()
+                    return cached.filter(cond).drop("__mid").toPandas()
 
                 chunks = map(fetch, groups)
+                tmp = tempfile.mkdtemp(prefix="qsfetch-")
                 paths = {
-                    name: os.path.join(stage, f"{tag}-{name}.npy")
+                    name: os.path.join(tmp, f"{name}.npy")
                     for name in ("ids", "vecs", "norms")
                 }
                 ids = np.lib.format.open_memmap(
@@ -1047,7 +1105,13 @@ class CellVectorIndex:
                 norms = np.lib.format.open_memmap(
                     paths["norms"], mode="w+", dtype="float64", shape=(n,)
                 )
-            cellv = np.empty(n, dtype="int64")
+            if probe is not None:
+                cents_n, nprobe = probe
+                cellv = np.empty(
+                    (n, min(nprobe, len(cents_n))), dtype="int64"
+                )
+            else:
+                cellv = np.empty(n, dtype="int64")
             subv = np.empty(n, dtype="int64") if keyed else None
             ofs = 0
             for pdf in chunks:
@@ -1055,20 +1119,22 @@ class CellVectorIndex:
                 if not m:
                     continue
                 ids[ofs:ofs + m] = pdf["id"].to_numpy(dtype="int64")
-                vecs[ofs:ofs + m] = np.stack(
-                    pdf["vec"].map(
-                        lambda v: np.asarray(v, dtype="float64")
-                    )
+                M = np.stack(
+                    pdf["vec"].map(lambda v: np.asarray(v, dtype="float64"))
                 )
+                vecs[ofs:ofs + m] = M
                 norms[ofs:ofs + m] = pdf["__n"].to_numpy(dtype="float64")
-                cellv[ofs:ofs + m] = pdf["cell"].to_numpy(dtype="int64")
+                if probe is not None:
+                    cellv[ofs:ofs + m] = probe_cells_np(M, cents_n, nprobe)
+                else:
+                    cellv[ofs:ofs + m] = pdf["cell"].to_numpy(dtype="int64")
                 if keyed:
                     subv[ofs:ofs + m] = pdf["__sub"].to_numpy(
                         dtype="int64"
                     )
                 ofs += m
             assert ofs == n, f"chunked collect lost rows: {ofs} != {n}"
-            if paths is not None:
+            if tmp is not None:
                 for mm in (ids, vecs, norms):
                     mm.flush()
                 del ids, vecs, norms
@@ -1076,113 +1142,109 @@ class CellVectorIndex:
                     paths["ids"], paths["vecs"], paths["norms"],
                 )
         except BaseException:
-            # failure before the handle exists: return the slot to the
-            # pool and drop any partially written artifacts, so repeated
-            # failed batches can't grow the name set or leave torn files
-            # a reused slot could expose
-            if paths is not None:
-                import os as _os
-
-                for p in paths.values():
-                    try:
-                        _os.remove(p)
-                    except OSError:
-                        pass
-            if on_cleanup is not None:
-                on_cleanup()
+            if tmp is not None:
+                shutil.rmtree(tmp, ignore_errors=True)
             raise
         finally:
-            sel.unpersist()
+            if cached is not None:
+                cached.unpersist()
         if not n:
             vecs = np.empty((0, 0), dtype=self.block_dtype)
+        return n, ids, vecs, norms, cellv, subv, tmp
+
+    def _finish_blocks(
+        self, n, ids, vecs, norms, cellv, subv, keyed, deltas,
+    ):
+        """Index build + handle construction over collected rows
+        (:meth:`_fetch_rows`), in a fresh artifact slot. ``cellv`` of
+        shape [n, p] registers each row under each of its p cells
+        through ``pos`` — the vector is stored once."""
+        import numpy as np
+
+        stage, tag, epoch, slot_mode, on_cleanup = self._block_stage()
         try:
-            return self._finish_blocks(
-                n, ids, vecs, norms, cellv, subv, keyed, deltas,
-                stage, tag, epoch, slot_mode, on_cleanup,
+            pos_parts, kc_parts, ks_parts = [], [], []
+            if keyed and n:
+                if deltas:
+                    cold = np.nonzero(subv == -1)[0]
+                    pos_parts.append(cold)
+                    kc_parts.append(cellv[cold])
+                    ks_parts.append(np.full(len(cold), -1, dtype="int64"))
+                    hot = np.nonzero(subv != -1)[0]
+                    for d in deltas:
+                        pos_parts.append(hot)
+                        kc_parts.append(cellv[hot])
+                        ks_parts.append(subv[hot] ^ np.int64(d))
+                else:
+                    pos_parts.append(np.arange(n, dtype="int64"))
+                    kc_parts.append(cellv)
+                    ks_parts.append(subv)
+            elif n:
+                # row-major: a row's cells are adjacent, so within a cell
+                # (stable lexsort below) rows stay in collect order
+                per = cellv.reshape(n, -1)
+                pos_parts.append(
+                    np.repeat(np.arange(n, dtype="int64"), per.shape[1])
+                )
+                kc_parts.append(per.ravel())
+                ks_parts.append(np.zeros(per.size, dtype="int64"))
+            index = {}
+            if pos_parts:
+                pos = np.concatenate(pos_parts).astype("int64")
+                kc = np.concatenate(kc_parts)
+                ks = np.concatenate(ks_parts)
+                order = np.lexsort((ks, kc))
+                pos, kc, ks = pos[order], kc[order], ks[order]
+                bounds = np.flatnonzero(
+                    np.r_[True, (kc[1:] != kc[:-1]) | (ks[1:] != ks[:-1])]
+                )
+                bounds = np.r_[bounds, len(pos)]
+                for i in range(len(bounds) - 1):
+                    lo = int(bounds[i])
+                    key = (
+                        (int(kc[lo]), int(ks[lo])) if keyed
+                        else (int(kc[lo]),)
+                    )
+                    index[key] = (lo, int(bounds[i + 1]))
+            else:
+                pos = np.empty(0, dtype="int64")
+            handle = _SharedBlocks(
+                self.spark,
+                {"ids": ids, "vecs": vecs, "norms": norms, "pos": pos},
+                index,
+                stage=stage, tag=tag, epoch=epoch, slot_mode=slot_mode,
+                on_cleanup=on_cleanup,
             )
         except BaseException:
-            # failure AFTER the collect (index build, np.save, or a
-            # partial _SharedBlocks.__init__ — e.g. addFile raising
-            # mid-loop): without this the slot never returns to the pool
-            # and partially-registered artifacts persist, regrowing
-            # exactly the registry the round-14 dereg bounds. Drop every
+            # failure in the index build, np.save, or a partial
+            # _SharedBlocks.__init__ (e.g. addFile raising mid-loop):
+            # without this the slot never returns to the pool and
+            # partially-registered artifacts persist, regrowing exactly
+            # the registry the round-14 dereg bounds. Drop every
             # possible artifact name for this tag, in the registry, the
             # stage dir, and the app dir, then release the slot.
-            import os as _os
-            import shutil as _shutil
+            import os
+            import shutil
 
-            from pyspark import SparkFiles as _SF
+            from pyspark import SparkFiles
 
             for name in ("ids", "vecs", "norms", "pos", "epoch"):
                 fname = f"{tag}-{name}.npy"
                 _deregister_added_file(self.spark.sparkContext, fname)
                 for d in (stage, None):
                     try:
-                        root = d if d is not None else _SF.getRootDirectory()
-                        _os.remove(_os.path.join(root, fname))
+                        root = (
+                            d if d is not None
+                            else SparkFiles.getRootDirectory()
+                        )
+                        os.remove(os.path.join(root, fname))
                     except Exception:
                         pass
             if not slot_mode:
-                _shutil.rmtree(stage, ignore_errors=True)
+                shutil.rmtree(stage, ignore_errors=True)
             if on_cleanup is not None:
                 on_cleanup()
             raise
-
-    def _finish_blocks(
-        self, n, ids, vecs, norms, cellv, subv, keyed, deltas,
-        stage, tag, epoch, slot_mode, on_cleanup,
-    ):
-        """Index build + handle construction for :meth:`_collect_blocks`
-        (split out so the caller can wrap the WHOLE tail in one
-        cleanup-on-failure handler)."""
-        import numpy as np
-
-        pos_parts, kc_parts, ks_parts = [], [], []
-        if keyed and n:
-            if deltas:
-                cold = np.nonzero(subv == -1)[0]
-                pos_parts.append(cold)
-                kc_parts.append(cellv[cold])
-                ks_parts.append(np.full(len(cold), -1, dtype="int64"))
-                hot = np.nonzero(subv != -1)[0]
-                for d in deltas:
-                    pos_parts.append(hot)
-                    kc_parts.append(cellv[hot])
-                    ks_parts.append(subv[hot] ^ np.int64(d))
-            else:
-                pos_parts.append(np.arange(n, dtype="int64"))
-                kc_parts.append(cellv)
-                ks_parts.append(subv)
-        elif n:
-            pos_parts.append(np.arange(n, dtype="int64"))
-            kc_parts.append(cellv)
-            ks_parts.append(np.zeros(n, dtype="int64"))
-        index = {}
-        if pos_parts:
-            pos = np.concatenate(pos_parts).astype("int64")
-            kc = np.concatenate(kc_parts)
-            ks = np.concatenate(ks_parts)
-            order = np.lexsort((ks, kc))
-            pos, kc, ks = pos[order], kc[order], ks[order]
-            bounds = np.flatnonzero(
-                np.r_[True, (kc[1:] != kc[:-1]) | (ks[1:] != ks[:-1])]
-            )
-            bounds = np.r_[bounds, len(pos)]
-            for i in range(len(bounds) - 1):
-                lo = int(bounds[i])
-                key = (
-                    (int(kc[lo]), int(ks[lo])) if keyed else (int(kc[lo]),)
-                )
-                index[key] = (lo, int(bounds[i + 1]))
-        else:
-            pos = np.empty(0, dtype="int64")
-        handle = _SharedBlocks(
-            self.spark,
-            {"ids": ids, "vecs": vecs, "norms": norms, "pos": pos},
-            index,
-            stage=stage, tag=tag, epoch=epoch, slot_mode=slot_mode,
-            on_cleanup=on_cleanup,
-        )
         self._shared_blocks.append(handle)
         return handle
 
@@ -1193,15 +1255,15 @@ class CellVectorIndex:
         artifact set (``n`` b-side rows) stays within
         ``self.node_budget_bytes``. Mirrors the artifact layout:
         ``vecs`` n×dim×itemsize, ``ids``+``norms`` 16 B/row, ``pos``
-        8 B per index entry (guard multiprobe multiplies pos entries
-        only, never vectors). ``n`` rides jobs the callers run anyway —
-        dedup_batch/search fold it into their distinct-cells collect
-        (``groupBy(cell).count()``, same shuffle shape; the exact tier
-        never calls this — it broadcast-joins, no pass count) — so deciding
-        before collecting costs NO extra pass over the probe frame
-        (the probe assignment is a mapInPandas matmul; an extra count
-        job here re-ran it once per batch, measured as the round-15
-        follow-up). Pass count is capped at 256: a budget low enough
+        8 B per index entry (guard multiprobe and search's per-query
+        probe cells multiply pos entries only, never vectors —
+        ``deltas`` is any sequence as long as a row's entry count). ``n``
+        rides jobs the callers run anyway — dedup_batch folds it into
+        its distinct-cells collect (``groupBy(cell).count()``; the exact
+        tier never calls this — it broadcast-joins, no pass count) and
+        search takes it from the query rows it already collected — so
+        deciding costs NO extra pass over the probe frame. Pass count
+        is capped at 256: a budget low enough
         to want more is a misconfiguration (each pass rescans the a
         side), and the once-per-process note names the overflow."""
         if not n:
@@ -1216,7 +1278,7 @@ class CellVectorIndex:
             "vector_index.multipass",
             f"shared-block artifact set is {artifact / 2**30:.2f} GiB per "
             f"node this batch (> {self.node_budget_bytes / 2**30:.2f} GiB "
-            f"node budget) — scoring in {int(passes)} passes over id-hash "
+            f"node budget) — scoring in {int(passes)} passes over "
             "sub-blocks of the b side. Output is identical; each pass "
             "rescans the a side, so prefer smaller micro-batches or "
             "block_dtype='float32' when this engages routinely. Noted "
@@ -1363,171 +1425,200 @@ class CellVectorIndex:
         ``max_band_size`` analogue; ``None`` disables), so a skewed cell
         can never make the within-cell join quadratic in the corpus.
         """
-        from .similarity import cosine_pre_batch
+        from .similarity import _probe_cells, cosine_pre_batch
 
+        if tier != "exact" and nprobe < 1:
+            raise ValueError(f"nprobe must be >= 1, got {nprobe}")
         cents = self._ensure_centroids(new_vecs, id_col, vec_col)
-        assigned = self._assigned(
-            new_vecs, id_col, vec_col, cents, nprobe=1
-        ).persist()  # storage assignment: argmax cell
-        self._persisted.append(assigned)
-        if tier == "exact":
-            # broadcast-join tier — never blocked-scored, no pass count
-            probed_a = probed_b = assigned
-            stored = self._stored(None, exclude_batch_id, empty_like=assigned)
-            old_cond = F.col("a.id") != F.col("b.id")
-            new_cond = F.col("a.id") < F.col("b.id")
-        else:
-            probed = (
-                assigned if nprobe == 1
-                else self._assigned(new_vecs, id_col, vec_col, cents, nprobe)
+        # ONE probe-UDF pass per batch: each vector's nearest cells
+        # (nearest first), persisted with its norm. The storage
+        # assignment is element 0 — bit-equal to nprobe=1 and to
+        # _cell_assigner's argmax, because the probe sort is stable —
+        # and the ivf probe rows are the array exploded, so neither
+        # frame re-runs the assignment matmul.
+        probe_n = 1 if tier == "exact" else int(nprobe)
+        cells_arr = self._with_norm(
+            new_vecs, id_col, vec_col,
+            _probe_cells(cents, probe_n)(F.col(vec_col)).alias("__cells"),
+        ).persist()
+        mark = (len(self._persisted), len(self._shared_blocks))
+        self._persisted.append(cells_arr)
+        try:
+            assigned = cells_arr.select(
+                "id", "vec", "__n", F.col("__cells")[0].alias("cell")
             )
-            # one job yields BOTH the probed cell list and the probe-row
-            # total _n_passes needs (same shuffle shape as the previous
-            # distinct(): partial counts, ≤ nlist result rows) — the
-            # probe assignment is a mapInPandas matmul, so a separate
-            # count job would re-run it over the whole batch
-            cell_rows = probed.groupBy("cell").count().collect()
-            cells = [r["cell"] for r in cell_rows]
-            n_probe_rows = sum(r["count"] for r in cell_rows)
-            probe_counts = {
-                int(r["cell"]): int(r["count"]) for r in cell_rows
-            }
-            stored = self._stored(cells, exclude_batch_id, empty_like=assigned)
-            same_cell = F.col("a.cell") == F.col("b.cell")
-            old_cond = same_cell & (F.col("a.id") != F.col("b.id"))
-            new_cond = same_cell & (F.col("a.id") < F.col("b.id"))
-            probed_a = probed_b = probed
-            guard_deltas = None
-            if max_cell_size is not None:
-                stored, probed_a, probed_b, guard, planes = self._cell_guard(
-                    stored, probed, cents, max_cell_size,
-                    probe_cell_counts=probe_counts,
+            if tier == "exact":
+                # broadcast-join tier — never blocked-scored, no pass count
+                probed_a = probed_b = assigned
+                stored = self._stored(
+                    None, exclude_batch_id, empty_like=assigned
                 )
-                if guard is not None:
-                    old_cond = old_cond & guard
-                    new_cond = new_cond & guard
-                    guard_deltas = [0] + [1 << i for i in range(planes)]
+                old_cond = F.col("a.id") != F.col("b.id")
+                new_cond = F.col("a.id") < F.col("b.id")
+            else:
+                probed = assigned if nprobe == 1 else cells_arr.select(
+                    "id", "vec", "__n", F.explode("__cells").alias("cell")
+                )
+                # one job yields BOTH the probed cell list and the probe-row
+                # total _n_passes and _collect_blocks need (partial counts,
+                # ≤ nlist result rows, read from the persisted probe array)
+                cell_rows = probed.groupBy("cell").count().collect()
+                cells = [r["cell"] for r in cell_rows]
+                n_probe_rows = sum(r["count"] for r in cell_rows)
+                probe_counts = {
+                    int(r["cell"]): int(r["count"]) for r in cell_rows
+                }
+                stored = self._stored(
+                    cells, exclude_batch_id, empty_like=assigned
+                )
+                same_cell = F.col("a.cell") == F.col("b.cell")
+                old_cond = same_cell & (F.col("a.id") != F.col("b.id"))
+                new_cond = same_cell & (F.col("a.id") < F.col("b.id"))
+                probed_a = probed_b = probed
+                guard_deltas = None
+                if max_cell_size is not None:
+                    (
+                        stored, probed_a, probed_b, guard, planes,
+                    ) = self._cell_guard(
+                        stored, probed, cents, max_cell_size,
+                        probe_cell_counts=probe_counts,
+                    )
+                    if guard is not None:
+                        old_cond = old_cond & guard
+                        new_cond = new_cond & guard
+                        guard_deltas = [0] + [1 << i for i in range(planes)]
 
-        def score(joined):
-            return joined.select(
-                F.least(F.col("a.id"), F.col("b.id")).alias("id_a"),
-                F.greatest(F.col("a.id"), F.col("b.id")).alias("id_b"),
-                cosine_pre_batch(
-                    F.col("a.vec"), F.col("b.vec"),
-                    F.col("a.__n"), F.col("b.__n"),
-                ).alias("cosine"),
-            ).filter(F.col("cosine") >= threshold)
+            def score(joined):
+                return joined.select(
+                    F.least(F.col("a.id"), F.col("b.id")).alias("id_a"),
+                    F.greatest(F.col("a.id"), F.col("b.id")).alias("id_b"),
+                    cosine_pre_batch(
+                        F.col("a.vec"), F.col("b.vec"),
+                        F.col("a.__n"), F.col("b.__n"),
+                    ).alias("cosine"),
+                ).filter(F.col("cosine") >= threshold)
 
-        # stored-batch: stored rows are single-cell and only on the left,
-        # so each pair joins exactly once — NO dedup shuffle on the big
-        # stream; batch-batch: a.id < b.id kills the orientation mirror,
-        # and only multiprobe (both sides multi-cell) can still duplicate
-        # a pair through a second shared cell. The guard's multiprobe
-        # sub-bucket expansion lives ONLY on the broadcast b side
-        # (probed_b) — one row's expanded values are distinct, so it adds
-        # no duplication either way.
-        if tier == "exact":
-            # oracle tier: broadcast join + per-pair Arrow scorer, the
-            # SQL-replayable shape (small corpora by contract)
-            old_pairs = score(
-                stored.alias("a").join(
-                    F.broadcast(probed_b.alias("b")), old_cond
+            # stored-batch: stored rows are single-cell and only on the left,
+            # so each pair joins exactly once — NO dedup shuffle on the big
+            # stream; batch-batch: a.id < b.id kills the orientation mirror,
+            # and only multiprobe (both sides multi-cell) can still duplicate
+            # a pair through a second shared cell. The guard's multiprobe
+            # sub-bucket expansion lives ONLY on the broadcast b side
+            # (probed_b) — one row's expanded values are distinct, so it adds
+            # no duplication either way.
+            if tier == "exact":
+                # oracle tier: broadcast join + per-pair Arrow scorer, the
+                # SQL-replayable shape (small corpora by contract)
+                old_pairs = score(
+                    stored.alias("a").join(
+                        F.broadcast(probed_b.alias("b")), old_cond
+                    )
                 )
-            )
-            new_pairs = score(
-                probed_a.alias("a").join(
-                    F.broadcast(probed_b.alias("b")), new_cond
-                )
-            )
-        else:
-            # scale tier (round 11): blocked per-cell scoring. The b side
-            # ships ONCE per node as mmap-able per-(cell[,__sub]) numpy
-            # blocks (_SharedBlocks, round 12); stored/batch a-rows
-            # stream through mapInPandas and score one einsum block per
-            # cell — Arrow
-            # volume linear in rows instead of candidate pairs (the
-            # broadcast-join + per-pair scorer moved both vectors per
-            # CANDIDATE, which dominated ingest at 1M vectors). Pair
-            # semantics and cosine bits match the join shape exactly
-            # (same key equality, same id conditions, same float64
-            # promotion and einsum reduction order — parity-tested).
-            # the b side collects from the PLAIN probed frame (one row
-            # per probe, own __sub); the guard's multiprobe expansion
-            # happens over row positions inside _collect_blocks.
-            # Round 15: a batch whose artifact set would exceed the
-            # per-node budget is scored in multiple passes over id-hash
-            # sub-blocks — per-pass pairs materialize before that
-            # pass's artifacts are reclaimed, so per-node footprint is
-            # budget-bounded at the cost of passes× a-side scans. The
-            # union is bit-equal to single-pass (see _pass_parts).
-            keyed = "__sub" in probed_a.columns
-            dim = len(cents[0]) if cents else 0
-            # n_probe_rows is exact for probed_a too: _cell_guard's
-            # transforms add the __sub key but never add or drop probe
-            # rows (its multiprobe expansion happens over row POSITIONS
-            # inside _collect_blocks)
-            passes = self._n_passes(n_probe_rows, dim, guard_deltas)
-            if passes == 1:
-                bvar = self._collect_blocks(
-                    probed_a, keyed, deltas=guard_deltas
-                )
-                old_pairs = self._blocked_score(
-                    stored, bvar, keyed, "old", threshold
-                )
-                new_pairs = self._blocked_score(
-                    probed_a, bvar, keyed, "new", threshold
+                new_pairs = score(
+                    probed_a.alias("a").join(
+                        F.broadcast(probed_b.alias("b")), new_cond
+                    )
                 )
             else:
-                from functools import reduce
-
-                from pyspark import StorageLevel
-
-                base = probed_a.persist(StorageLevel.MEMORY_AND_DISK)
-                self._persisted.append(base)
-                # round 16: the pruned stored-side read is pass-invariant
-                # — persist it once instead of rescanning the cell
-                # partitions (and re-filtering tombstones) once per pass;
-                # MEMORY_AND_DISK spills rather than drops, and
-                # unpersist_intermediates releases it with the batch
-                stored = stored.persist(StorageLevel.MEMORY_AND_DISK)
-                self._persisted.append(stored)
-                olds, news = [], []
-                for part in self._pass_parts(base, passes):
+                # scale tier (round 11): blocked per-cell scoring. The b side
+                # ships ONCE per node as mmap-able per-(cell[,__sub]) numpy
+                # blocks (_SharedBlocks, round 12); stored/batch a-rows
+                # stream through mapInPandas and score one einsum block per
+                # cell — Arrow
+                # volume linear in rows instead of candidate pairs (the
+                # broadcast-join + per-pair scorer moved both vectors per
+                # CANDIDATE, which dominated ingest at 1M vectors). Pair
+                # semantics and cosine bits match the join shape exactly
+                # (same key equality, same id conditions, same float64
+                # promotion and einsum reduction order — parity-tested).
+                # the b side collects from the PLAIN probed frame (one row
+                # per probe, own __sub); the guard's multiprobe expansion
+                # happens over row positions inside _collect_blocks.
+                # Round 15: a batch whose artifact set would exceed the
+                # per-node budget is scored in multiple passes over id-hash
+                # sub-blocks — per-pass pairs materialize before that
+                # pass's artifacts are reclaimed, so per-node footprint is
+                # budget-bounded at the cost of passes× a-side scans. The
+                # union is bit-equal to single-pass (see _pass_parts).
+                keyed = "__sub" in probed_a.columns
+                dim = len(cents[0]) if cents else 0
+                # n_probe_rows is exact for probed_a too: _cell_guard's
+                # transforms add the __sub key but never add or drop probe
+                # rows (its multiprobe expansion happens over row POSITIONS
+                # inside _collect_blocks)
+                passes = self._n_passes(n_probe_rows, dim, guard_deltas)
+                if passes == 1:
                     bvar = self._collect_blocks(
-                        part, keyed, deltas=guard_deltas
+                        probed_a, keyed, dim, deltas=guard_deltas,
+                        n=n_probe_rows,
                     )
-                    olds.append(
-                        self._materialize(
-                            self._blocked_score(
-                                stored, bvar, keyed, "old", threshold
-                            )
-                        )
+                    old_pairs = self._blocked_score(
+                        stored, bvar, keyed, "old", threshold
                     )
-                    news.append(
-                        self._materialize(
-                            self._blocked_score(
-                                base, bvar, keyed, "new", threshold
-                            )
-                        )
+                    new_pairs = self._blocked_score(
+                        probed_a, bvar, keyed, "new", threshold
                     )
-                    bvar.cleanup()
-                    self._shared_blocks.remove(bvar)
-                old_pairs = reduce(DataFrame.unionByName, olds)
-                new_pairs = reduce(DataFrame.unionByName, news)
-        if tier != "exact" and nprobe > 1:
-            new_pairs = new_pairs.dropDuplicates(["id_a", "id_b"])
-        return old_pairs.unionByName(new_pairs), assigned
+                else:
+                    from functools import reduce
 
-    def unpersist_intermediates(self) -> None:
-        for df in self._persisted:
+                    from pyspark import StorageLevel
+
+                    base = probed_a.persist(StorageLevel.MEMORY_AND_DISK)
+                    self._persisted.append(base)
+                    # round 16: the pruned stored-side read is pass-invariant
+                    # — persist it once instead of rescanning the cell
+                    # partitions (and re-filtering tombstones) once per pass;
+                    # MEMORY_AND_DISK spills rather than drops, and
+                    # unpersist_intermediates releases it with the batch
+                    stored = stored.persist(StorageLevel.MEMORY_AND_DISK)
+                    self._persisted.append(stored)
+                    olds, news = [], []
+                    for part in self._pass_parts(base, passes):
+                        bvar = self._collect_blocks(
+                            part, keyed, dim, deltas=guard_deltas
+                        )
+                        olds.append(
+                            self._materialize(
+                                self._blocked_score(
+                                    stored, bvar, keyed, "old", threshold
+                                )
+                            )
+                        )
+                        news.append(
+                            self._materialize(
+                                self._blocked_score(
+                                    base, bvar, keyed, "new", threshold
+                                )
+                            )
+                        )
+                        bvar.cleanup()
+                        self._shared_blocks.remove(bvar)
+                    old_pairs = reduce(DataFrame.unionByName, olds)
+                    new_pairs = reduce(DataFrame.unionByName, news)
+            if tier != "exact" and nprobe > 1:
+                new_pairs = new_pairs.dropDuplicates(["id_a", "id_b"])
+            return old_pairs.unionByName(new_pairs), assigned
+        except BaseException:
+            # release what THIS call persisted or shipped; frames and
+            # blocks of earlier calls stay until unpersist_intermediates
+            self._release_since(*mark)
+            raise
+
+    def _release_since(self, n_persisted: int, n_blocks: int) -> None:
+        """Unpersist the frames and clean up the shared blocks tracked
+        after the first ``n_persisted`` / ``n_blocks``."""
+        for df in self._persisted[n_persisted:]:
             df.unpersist()
-        self._persisted = []
+        del self._persisted[n_persisted:]
         # round 12: shared block artifacts are removed deterministically
         # (the r11 Python broadcasts accumulated across streaming
         # micro-batches until GC happened to reclaim them)
-        for h in self._shared_blocks:
+        for h in self._shared_blocks[n_blocks:]:
             h.cleanup()
-        self._shared_blocks = []
+        del self._shared_blocks[n_blocks:]
+
+    def unpersist_intermediates(self) -> None:
+        self._release_since(0, 0)
 
     # -- exactly-once batch application ------------------------------------
 
@@ -1608,68 +1699,105 @@ class CellVectorIndex:
         stored vectors, reading ONLY the cell partitions the queries probe
         (``nprobe = nlist`` reads everything — the exact tier the oracle
         replays). Self-matches (same id) are excluded. Ties break on
-        neighbor id, the package's ANN convention."""
+        neighbor id, the package's ANN convention.
+
+        The query rows (id, vec and the SQL norm) are collected to the
+        driver ONCE — the blocked scorer ships them as its b side
+        anyway — and each query's ``nprobe`` cells are assigned there
+        with :func:`similarity.probe_cells_np`, the probe UDF's own
+        kernel, so the cells are bit-equal to the UDF's. Before its
+        scorer the search therefore runs JVM-only jobs (a count and the
+        collect) and no Python stage. Query vectors are stored once and
+        registered under each probed cell through the blocks' ``pos``
+        artifact."""
         from pyspark.sql import Window
+
+        from .similarity import unit_centroids
 
         self._recover_compaction()  # incl. finishing a committed retrain
         cents = self.centroids()
         if cents is None:
             raise ValueError(f"no index at {self.root}")
-        q = self._assigned(queries, id_col, vec_col, cents, nprobe)
-        # one job for both the probed cell list and the probe-row total
-        # the pass-count check needs (see dedup_batch — a separate count
-        # would re-run the assignment matmul over the query set)
-        cell_rows = q.groupBy("cell").count().collect()
-        cells = [r["cell"] for r in cell_rows]
-        n_probe_rows = sum(r["count"] for r in cell_rows)
-        stored = self._stored(cells, None, empty_like=q)
-        # Blocked scoring (round 11, same shape as dedup_batch's scale
-        # tier; round 12: the query blocks ship once per NODE as
-        # mmap-able artifacts, reclaimed at this instance's next
-        # unpersist_intermediates — materialize search results before
-        # interleaving new ingest on the same instance): queries ship
-        # ONCE as per-cell numpy blocks, stored rows
-        # stream through mapInPandas scoring one einsum block per cell,
-        # and each task pre-reduces to its local top-k per query (a
-        # query's global top-k row is by definition inside every task's
-        # local top-k, so the reduction is lossless) — the rank window
-        # then shuffles ≤ k·tasks rows per query instead of every
-        # candidate. Stored vectors are single-cell, so each (query,
-        # neighbor) scores exactly once even at nprobe = nlist; cosine
-        # bits match the per-pair scorer exactly (einsum contract,
-        # pytest-pinned), so the DuckDB oracle replay is unaffected.
+        if nprobe < 1:
+            raise ValueError(f"nprobe must be >= 1, got {nprobe}")
         kk = int(k)
-        dim = len(cents[0]) if cents else 0
-        # round 15: a query set past the per-node artifact budget scores
-        # in multiple passes over id-hash sub-blocks — each query lives
-        # in exactly one pass, so its local top-k survivors all come
-        # from that pass and the global rank window over the union is
-        # unchanged (bit-equal to single-pass).
-        passes = self._n_passes(n_probe_rows, dim, None)
-        if passes == 1:
-            bvar = self._collect_blocks(q, keyed=False)
-            scored = self._search_scored(stored, bvar, kk)
-        else:
-            from functools import reduce
-
-            from pyspark import StorageLevel
-
-            base = q.persist(StorageLevel.MEMORY_AND_DISK)
-            self._persisted.append(base)
-            # round 16: persist the pass-invariant pruned stored side
-            # once — each pass's scorer otherwise rescans the probed
-            # cell partitions (see dedup_batch's multi-pass branch)
-            stored = stored.persist(StorageLevel.MEMORY_AND_DISK)
-            self._persisted.append(stored)
-            parts_out = []
-            for part in self._pass_parts(base, passes):
-                bvar = self._collect_blocks(part, keyed=False)
-                parts_out.append(
-                    self._materialize(self._search_scored(stored, bvar, kk))
+        dim = len(cents[0])
+        q = self._with_norm(queries, id_col, vec_col)
+        mark = (len(self._persisted), len(self._shared_blocks))
+        n, ids, vecs, norms, cellv, _, tmp = self._fetch_rows(
+            q, dim, probe=(unit_centroids(cents), int(nprobe))
+        )
+        try:
+            stored = self._stored(
+                sorted({int(c) for c in cellv.ravel()}), None,
+                empty_like=q.withColumn("cell", F.lit(0)),
+            )
+            # Blocked scoring (round 11, same shape as dedup_batch's
+            # scale tier; round 12: the query blocks ship once per NODE
+            # as mmap-able artifacts, reclaimed at this instance's next
+            # unpersist_intermediates — materialize search results
+            # before interleaving new ingest on the same instance):
+            # queries ship ONCE as per-cell numpy blocks, stored rows
+            # stream through mapInPandas scoring one einsum block per
+            # cell, and each task pre-reduces to its local top-k per
+            # query (a query's global top-k row is by definition inside
+            # every task's local top-k, so the reduction is lossless) —
+            # the rank window then shuffles ≤ k·tasks rows per query
+            # instead of every candidate. Stored vectors are
+            # single-cell, so each (query, neighbor) scores exactly once
+            # even at nprobe = nlist; cosine bits match the per-pair
+            # scorer exactly (einsum contract, pytest-pinned), so the
+            # DuckDB oracle replay is unaffected.
+            # Round 15: a query set past the per-node artifact budget
+            # scores in multiple passes over row ranges of the collected
+            # arrays — each query lives in exactly one pass, so its
+            # local top-k survivors all come from that pass and the
+            # global rank window over the union is unchanged (bit-equal
+            # to single-pass).
+            passes = self._n_passes(n, dim, range(cellv.shape[1]))
+            if passes == 1:
+                bvar = self._finish_blocks(
+                    n, ids, vecs, norms, cellv, None, False, None
                 )
-                bvar.cleanup()
-                self._shared_blocks.remove(bvar)
-            scored = reduce(DataFrame.unionByName, parts_out)
+                scored = self._search_scored(stored, bvar, kk)
+            else:
+                import numpy as np
+                from functools import reduce
+
+                from pyspark import StorageLevel
+
+                ids, vecs, norms = (
+                    np.load(a, mmap_mode="r") if isinstance(a, str) else a
+                    for a in (ids, vecs, norms)
+                )
+                # round 16: persist the pass-invariant pruned stored side
+                # once — each pass's scorer otherwise rescans the probed
+                # cell partitions (see dedup_batch's multi-pass branch)
+                stored = stored.persist(StorageLevel.MEMORY_AND_DISK)
+                self._persisted.append(stored)
+                parts_out = []
+                bounds = np.linspace(0, n, passes + 1).astype("int64")
+                for lo, hi in zip(bounds[:-1], bounds[1:]):
+                    bvar = self._finish_blocks(
+                        int(hi - lo), ids[lo:hi], vecs[lo:hi],
+                        norms[lo:hi], cellv[lo:hi], None, False, None,
+                    )
+                    parts_out.append(
+                        self._materialize(
+                            self._search_scored(stored, bvar, kk)
+                        )
+                    )
+                    bvar.cleanup()
+                    self._shared_blocks.remove(bvar)
+                scored = reduce(DataFrame.unionByName, parts_out)
+        except BaseException:
+            self._release_since(*mark)
+            raise
+        finally:
+            if tmp is not None:
+                import shutil
+
+                shutil.rmtree(tmp, ignore_errors=True)
         w = Window.partitionBy("query_id").orderBy(
             F.col("cosine").desc(), F.col("neighbor_id").asc()
         )

@@ -394,6 +394,47 @@ def test_shared_block_artifacts_reclaimed_per_batch(spark, small_vec_index):
         assert not os.path.exists(p)
 
 
+def test_vector_index_persisted_frames_back_to_baseline(
+    spark, small_vec_index, monkeypatch
+):
+    """Every frame the vector index persists — the per-batch probe array
+    included — is released after apply_batch, after a search materialized
+    and unpersist_intermediates, and on every failure path of dedup_batch
+    (single- and multi-pass), with no shared blocks left behind."""
+    idx, df = small_vec_index
+    jsc = spark.sparkContext._jsc.sc()
+    baseline = jsc.getPersistentRDDs().size()
+    assert idx.apply_batch(
+        df.filter(F.col("vec_id") % 2 == 1), 1, threshold=0.3
+    )
+    assert jsc.getPersistentRDDs().size() == baseline
+    idx.search(df.filter(F.col("vec_id") < 4), k=3, nprobe=2).toPandas()
+    idx.unpersist_intermediates()
+    assert jsc.getPersistentRDDs().size() == baseline
+
+    def boom(*a, **k):
+        raise RuntimeError("boom")
+
+    batch = df.filter(F.col("vec_id") % 3 == 0).withColumn(
+        "vec_id", F.col("vec_id") + 100
+    )
+    for budget, target in (
+        (None, "_cell_guard"),
+        (None, "_collect_blocks"),
+        (None, "_blocked_score"),
+        (512, "_materialize"),
+    ):
+        if budget:
+            monkeypatch.setattr(idx, "node_budget_bytes", budget)
+        monkeypatch.setattr(idx, target, boom)
+        with pytest.raises(RuntimeError, match="boom"):
+            idx.apply_batch(batch, 2, threshold=0.3)
+        monkeypatch.undo()
+        assert jsc.getPersistentRDDs().size() == baseline, target
+        assert idx._persisted == [] and idx._shared_blocks == [], target
+    assert not idx.batch_applied(2)
+
+
 def test_renew_bumps_fence_so_gap_ingest_aborts_at_commit(spark, tmp_path):
     """Round-13 ADVICE fix: renew()'s rename-aside -> re-create swap
     leaves the lease path ABSENT for a moment; an ingest batch whose

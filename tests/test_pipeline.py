@@ -3136,7 +3136,10 @@ def test_banded_index_merge_on_read_deletes(inc_corpus, tmp_path):
     before = probe_pairs()
     victims = sorted({a for a, b in before} | {b for a, b in before})
     victim = next(v for v in victims if v % 2 == 0)  # a stored doc
-    assert idx.delete_ids([victim]) == 1
+    # a list of ids is tombstoned driver-side: no Spark job
+    assert _jobs_during(spark, lambda: idx.delete_ids([victim, victim])) == (
+        1, 0,
+    )
     after = probe_pairs()
     assert after == {k: v for k, v in before.items() if victim not in k}
     assert after != before  # the tombstone actually removed pairs
@@ -3288,6 +3291,15 @@ def test_banded_streaming_equals_batch(spark, tmp_path):
     assert len(got_rows) == len(got)  # exactly once per pair
     idx_ids = [r["id"] for r in idx.doc_rows().collect()]
     assert sorted(idx_ids) == sorted(i for i, t in docs if len(t.split()) >= 3)
+
+
+def _jobs_during(spark, fn):
+    """(fn(), number of Spark jobs it launched) — job ids from the
+    status tracker before and after."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    out = fn()
+    return out, len(set(tracker.getJobIdsForGroup(None)) - before)
 
 
 # ---------------------------------------------------------------------------
@@ -3644,6 +3656,39 @@ def test_vector_index_search_pruned_and_exact_at_full_probe(vec_corpus, tmp_path
         for r in idx.search(queries, k=5, nprobe=4).collect()
     }
     assert full == exact and exact
+    # nprobe 1 and 2: brute-force top-k over the stored vectors whose cell
+    # is among the query's cells as the probe UDF assigns them (the
+    # search assigns them on the driver)
+    cents = idx.centroids()
+    stored = [
+        (r["id"], np.asarray(r["vec"], dtype="float64"), r["cell"])
+        for r in spark.read.parquet(str(tmp_path / "vx" / "vectors"))
+        .select("id", "vec", F.col("cell").cast("int").alias("cell"))
+        .collect()
+    ]
+    for nprobe in (1, 2):
+        probed = {}
+        for r in idx._assigned(
+            queries, "vec_id", "embedding", cents, nprobe
+        ).collect():
+            probed.setdefault(r["id"], set()).add(r["cell"])
+        want = {}
+        for qid, cells in probed.items():
+            qv = next(v for i, v, _ in stored if i == qid)
+            nq = np.linalg.norm(qv)
+            ranked = sorted(
+                (-float(qv @ v) / float(nq * np.linalg.norm(v)), i)
+                for i, v, c in stored
+                if c in cells and i != qid
+            )
+            want[qid] = [i for _, i in ranked[:5]]
+        got = {}
+        for r in idx.search(queries, k=5, nprobe=nprobe).orderBy(
+            "query_id", "rank"
+        ).collect():
+            got.setdefault(r["query_id"], []).append(r["neighbor_id"])
+        assert got == want and len(want) == 4
+    idx.unpersist_intermediates()
     # pruned probe: the stored-vector read touches only the probed cell's
     # partition files — a strict subset of the index's files (checked on
     # the pre-shuffle scan; input_file_name is empty after the rank
@@ -3682,7 +3727,8 @@ def test_vector_index_deletes_and_compaction(vec_corpus, tmp_path):
     idx.apply_batch(b0, 0, threshold=0.5, tier="exact")
     idx.apply_batch(b1, 1, threshold=0.5, tier="exact")
     # clone flood 100-104: delete one stored clone, its pairs must vanish
-    assert idx.delete_ids([100]) == 1
+    # (a list of ids is tombstoned driver-side: no Spark job)
+    assert _jobs_during(spark, lambda: idx.delete_ids([100])) == (1, 0)
     probe = vec_corpus.filter(F.col("vec_id") == 102).withColumn(
         "vec_id", F.lit(999).cast("long")
     )
@@ -3845,17 +3891,23 @@ def test_inverted_index_matches_bm25_topk(spark, tmp_path):
         for r in ix.search(terms, k=10).collect()
     ]
     assert got == want
-    # exactly-once: replay no-op, results unchanged
+    # exactly-once: replay no-op, results unchanged; the prefixes fold
+    # into the plan and the reads hit the instance's listing and schema
+    # caches, so building the search launches no Spark job
     assert not ix.apply_batch(docs.filter(F.col("doc_id") % 3 == 0), 0)
+    plan, jobs = _jobs_during(spark, lambda: ix.search(terms, k=10))
+    assert jobs == 0
     assert [
-        (r["doc"], r["score_micro"], r["rank"])
-        for r in ix.search(terms, k=10).collect()
+        (r["doc"], r["score_micro"], r["rank"]) for r in plan.collect()
     ] == want
 
     # delete the top doc: it leaves the ranking, and scores equal a fresh
-    # bm25 over the reduced corpus (scalars exclude the tombstone)
+    # bm25 over the reduced corpus (scalars exclude the tombstone); a list
+    # of ids is tombstoned driver-side (no Spark job), a mixed one raises
     top = want[0][0]
-    assert ix.delete_ids([top]) == 1
+    with pytest.raises(ValueError, match="all integers or all strings"):
+        ix.delete_ids([top, "x"])
+    assert _jobs_during(spark, lambda: ix.delete_ids([top])) == (1, 0)
     reduced = docs.filter(F.col("doc_id") != top)
     want2 = [
         (r["doc_id"], r["score_micro"], r["rank"])
@@ -4216,6 +4268,24 @@ def test_probe_cells_tie_break_matches_assigner(spark):
         _probe_cells(cents, 1)(F.col("embedding"))[0].alias("p"),
     ).collect()
     assert got and all(r["a"] == r["p"] for r in got)
+
+    # the numpy kernel the index runs on the driver returns exactly the
+    # UDF's cells, ties included, for every nprobe — over the whole set
+    # and row by row (a row's cells do not depend on its call's rows)
+    M = np.array([v for _, v in vecs], dtype="float64")
+    Cn = similarity.unit_centroids(cents)
+    for nprobe in range(1, len(cents) + 1):
+        udf = [
+            list(r["p"])
+            for r in df.select(
+                _probe_cells(cents, nprobe)(F.col("embedding")).alias("p")
+            ).collect()
+        ]
+        whole = similarity.probe_cells_np(M, Cn, nprobe)
+        assert [list(c) for c in whole] == udf
+        for i in range(len(M)):
+            one = similarity.probe_cells_np(M[i:i + 1], Cn, nprobe)
+            assert list(one[0]) == udf[i]
 
 
 def test_banded_guard_tombstone_aware_parity(spark, tmp_path):
