@@ -9,9 +9,11 @@ time validation would never scale, so here:
   ``Check.greater_than(0)``, ...) and serializes to a pandera-like YAML
   document, keeping registry parity;
 * *enforcement* is native Spark: the dtype check is a driver-side schema
-  comparison, and all value predicates are folded into ONE aggregate job
-  (``agg(sum(when(~pred,1)))`` — map-side partial aggregation, a single scan,
-  no shuffle of data rows) so validation cost at 100 TB is one pass.
+  comparison, and all value predicates fold into one set of violation
+  counters (``sum(when(~pred,1))``). A feature save attaches them to its
+  staged write with ``DataFrame.observe``, so validation adds no Spark job
+  and no pass over the data; :meth:`Column.validate` runs the same
+  counters as one aggregate job over any other frame.
 
 The reference's broken ``check_raise_error`` init (reference: src/qafs/
 core.py:34 commented out, read at :424) is implemented as intended: env var
@@ -308,38 +310,33 @@ class Column:
         One driver-side schema check + ONE Spark aggregate job covering every
         predicate (single scan, partial aggregation — no row shuffle).
         """
-        if raise_error is None:
-            raise_error = _raise_error_enabled()
-        failures: Dict[str, int] = {}
-
-        spark_type = dict(zip(df.columns, [f.dataType for f in df.schema.fields]))[col]
-        if not self.dtype_ok(spark_type):
-            failures["dtype"] = -1
-            msg = (
-                f"Column {col!r} has Spark type {spark_type.simpleString()}, "
-                f"expected family {self.dtype!r}"
-            )
-            if raise_error:
-                raise SchemaError(msg, failures)
-            logger.error(msg)
+        if not self.dtype_verdict(df, col, raise_error):
             return df
-
         aggs, names = self._violation_aggs(col)
         if aggs:
-            row = df.agg(*aggs).collect()[0]
-            for label, cnt in zip(names, row):
-                if cnt:
-                    failures[label] = int(cnt)
-        if failures:
-            msg = f"Schema check failed for column {col!r}: {failures}"
-            if raise_error:
-                raise SchemaError(msg, failures)
-            logger.error(msg)
+            _judge_counts(names, df.agg(*aggs).collect()[0], col, raise_error)
         return df
+
+    def dtype_verdict(
+        self, df: DataFrame, col: str = "value", raise_error: Optional[bool] = None
+    ) -> bool:
+        """Driver-side dtype gate (no job): True when ``df[col]``'s Spark
+        type is in the declared family; otherwise raises
+        :class:`SchemaError` or, in log mode, logs and returns False."""
+        spark_type = dict(zip(df.columns, [f.dataType for f in df.schema.fields]))[col]
+        if self.dtype_ok(spark_type):
+            return True
+        _judge(
+            {"dtype": -1},
+            f"Column {col!r} has Spark type {spark_type.simpleString()}, "
+            f"expected family {self.dtype!r}",
+            raise_error,
+        )
+        return False
 
     def _violation_aggs(self, col: str):
         """Violation-count aggregate per declared constraint (shared by the
-        blocking job in :meth:`validate` and the free observed path)."""
+        aggregate job in :meth:`validate` and the observed write path)."""
         aggs, names = [], []
         c = F.col(col)
         if not self.nullable:
@@ -354,16 +351,16 @@ class Column:
         return aggs, names
 
     def attach_observation(self, df: DataFrame, col: str = "value"):
-        """Piggyback validation metrics on the NEXT action over ``df``.
+        """Attach the violation counters to the NEXT action over ``df``.
 
-        Returns ``(df', observation, names)``; after the action (e.g. the
-        feature write) completes, pass the observation to
-        :meth:`report_observed`. This costs zero extra jobs — the violation
-        counters ride along inside the write scan — which is how log-mode
-        validation stays one-pass at 100 TB. The dtype check is still
-        enforced by the caller via :meth:`validate`-style schema comparison
-        (driver-side, no job). Returns ``(df, None, [])`` when there is
-        nothing to count."""
+        Returns ``(df', observation, names)``; after the action has run,
+        pass the observation to :meth:`report_observed`. This adds no
+        Spark job: the counters ride inside the action's own scan.
+        ``write_feature`` attaches them as the last step of its plan,
+        above its range exchange, because an observation below the
+        exchange also counts the rows of the exchange's sampling job.
+        The dtype gate is the caller's (:meth:`dtype_verdict`, driver-
+        side). Returns ``(df, None, [])`` when there is nothing to count."""
         aggs, names = self._violation_aggs(col)
         if not aggs:
             return df, None, []
@@ -373,20 +370,39 @@ class Column:
         return df.observe(obs, *aggs), obs, names
 
     def report_observed(self, obs, names, col: str = "value") -> Dict[str, int]:
-        """Log violations counted by :meth:`attach_observation`'s observation
-        once its action has run. Never raises (observed validation is the
-        log-mode path: the data is already written)."""
+        """The verdict on the counts of :meth:`attach_observation`'s
+        observation once its action has run: raises :class:`SchemaError`
+        (``QAFS_RAISE_ERROR`` true, the default) or logs the failures.
+        ``write_feature`` calls it after the staged write and before
+        the commit, so raising discards the staged files. Returns the
+        failure counts."""
         if obs is None:
             return {}
-        failures = {
-            label: int(cnt) for label, cnt in zip(names, obs.get.values()) if cnt
-        }
-        if failures:
-            logger.error(
-                "Schema check failed for column %r (observed post-write): %s",
-                col, failures,
-            )
-        return failures
+        return _judge_counts(names, obs.get.values(), col)
+
+
+def _judge_counts(names, counts, col: str, raise_error=None) -> Dict[str, int]:
+    """The verdict on violation counts (None, a sum over no rows, counts
+    as 0), shared by :meth:`Column.validate` and
+    :meth:`Column.report_observed`."""
+    failures = {label: int(cnt) for label, cnt in zip(names, counts) if cnt}
+    if failures:
+        _judge(
+            failures,
+            f"Schema check failed for column {col!r}: {failures}",
+            raise_error,
+        )
+    return failures
+
+
+def _judge(failures: Dict[str, int], msg: str, raise_error: Optional[bool]) -> None:
+    """Raise ``SchemaError(msg, failures)`` or log ``msg``; None takes
+    the mode from ``QAFS_RAISE_ERROR``."""
+    if raise_error is None:
+        raise_error = _raise_error_enabled()
+    if raise_error:
+        raise SchemaError(msg, failures)
+    logger.error(msg)
 
 
 def _raise_error_enabled() -> bool:

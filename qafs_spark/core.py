@@ -31,12 +31,8 @@ from pyspark.sql import types as T
 from . import names as names_mod
 from . import storage as fs_storage
 from . import transforms as tfm
-from .checks import Column, _canon_dtype, _raise_error_enabled
-from .exceptions import (
-    FeatureStoreException,
-    MissingFeatureException,
-    SchemaError,
-)
+from .checks import Column, _canon_dtype, _judge
+from .exceptions import FeatureStoreException, MissingFeatureException
 from .offsets import parse_offset
 from .operators import (
     align_features,
@@ -52,8 +48,6 @@ from .sources.feature_dataset import (
     read_feature,
     write_feature,
 )
-
-logger = logging.getLogger("qafs_spark")
 
 _ONE_US = pd.Timedelta(1, unit="us")
 
@@ -543,7 +537,7 @@ class FeatureStore:
         if rec.serialized:
             out["value"] = out["value"].map(_json_dumps)
         sdf = self.spark.createDataFrame(out)
-        self._finish_save(sdf, ns, nm, rec, check, validated=rec.serialized)
+        self._finish_save(sdf, ns, nm, rec, check, serialized=rec.serialized)
 
     def _save_single_spark(self, df: DataFrame, name, namespace):
         value_col = [c for c in df.columns if c not in ("time", "created_time")]
@@ -560,7 +554,7 @@ class FeatureStore:
                     "Serialized features require JSON-string values when saving "
                     "from a Spark DataFrame"
                 )
-        self._finish_save(sdf, ns, nm, rec, check, validated=rec.serialized)
+        self._finish_save(sdf, ns, nm, rec, check, serialized=rec.serialized)
 
     def _pandas_dtype_gate(self, series: pd.Series, check: Column, label: str):
         """Driver-side dtype family check for pandas inputs — catches the
@@ -577,13 +571,14 @@ class FeatureStore:
             "datetime": {"datetime64", "datetime", "date", "empty"},
         }[fam]
         if inferred not in ok:
-            msg = f"Schema check failed for {label}: data is {inferred}, expected {fam}"
-            if _raise_error_enabled():
-                raise SchemaError(msg, {"dtype": -1})
-            logger.error(msg)
+            _judge(
+                {"dtype": -1},
+                f"Schema check failed for {label}: data is {inferred}, expected {fam}",
+                None,
+            )
 
     def _finish_save(self, sdf: DataFrame, ns, nm, rec: FeatureRecord,
-                     check: Column, validated: bool):
+                     check: Column, serialized: bool):
         extraneous = set(sdf.columns) - {"time", "created_time", "value"}
         if extraneous:
             raise FeatureStoreException(
@@ -599,52 +594,24 @@ class FeatureStore:
                 "created_time", F.col("created_time").cast("timestamp")
             )
 
-        def canonicalize(df: DataFrame) -> DataFrame:
+        if serialized:  # stored as JSON strings, which no value check reads
+            check = None
+        elif not check.dtype_verdict(sdf, "value"):
+            return  # log mode: a dtype mismatch logs and writes nothing
+        else:
             # Normalize the stored value to the check family's canonical
             # Spark type (float→double, int→long, …). Appends from sources
             # with different-but-same-family types (float32 vs float64)
             # otherwise fracture the dataset's physical schema across files,
             # and it lets the read path use an explicit schema (no parquet
             # footer-inference job at plan build; no footer reads at 100 TB).
-            canon = _FAMILY_SPARK_TYPES.get(check.dtype) if check else None
-            if canon is not None and check.dtype != "object":
-                df = df.withColumn("value", F.col("value").cast(canon))
-            return df
-
-        if not validated:
-            if _raise_error_enabled():
-                # blocking mode: the dedicated validation aggregate still
-                # gates the COMMIT, but runs concurrently with the staged
-                # append's write job (round 17, guide §2.6) — the staged
-                # files are renamed into the dataset only after validation
-                # passes and are discarded if it raises, so readers can
-                # never observe invalid data (the same contract the
-                # strictly-before ordering gave, minus a blocking pass
-                # over the source on the ingest critical path)
-                write_feature(canonicalize(sdf), self._path(ns, nm),
-                              scheme=rec.partition,
-                              distribute=self.write_partitions,
-                              pre_commit_check=lambda: check.validate(
-                                  sdf, "value"))
-            else:
-                # log mode: dtype gate is a driver-side schema comparison and
-                # the violation counters ride along inside the write job
-                # (df.observe) — validation costs zero extra passes
-                vt = dict(zip(sdf.columns, [f.dataType for f in sdf.schema.fields]))
-                if not check.dtype_ok(vt["value"]):
-                    logger.error(
-                        "Column 'value' has Spark type %s, expected family %r",
-                        vt["value"].simpleString(), check.dtype,
-                    )
-                    return
-                sdf, obs, names = check.attach_observation(sdf, "value")
-                write_feature(canonicalize(sdf), self._path(ns, nm),
-                              scheme=rec.partition,
-                              distribute=self.write_partitions)
-                check.report_observed(obs, names, "value")
-            return
+            if check.dtype != "object":
+                canon = _FAMILY_SPARK_TYPES[check.dtype]
+                sdf = sdf.withColumn("value", F.col("value").cast(canon))
+        # one Spark job: the check's counters ride inside the staged
+        # write, judged before the commit (raise mode discards it)
         write_feature(sdf, self._path(ns, nm), scheme=rec.partition,
-                              distribute=self.write_partitions)
+                      distribute=self.write_partitions, check=check)
 
     # ------------------------------------------------------------------
     # load

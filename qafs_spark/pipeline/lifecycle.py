@@ -522,7 +522,14 @@ class IndexLifecycle:
         serial order; the refusal must see every shape. The same holds
         for a serial writer that crashed between its first and last
         write (the text index's postings-only directory)."""
-        dirs = [self._batch_ids(path) for path in self.datasets]
+        return self._applied_of(self._batch_dirs())
+
+    def _batch_dirs(self) -> List[List[int]]:
+        """The batch ids of each of ``datasets``, in that order."""
+        return [self._batch_ids(path) for path in self.datasets]
+
+    def _applied_of(self, dirs: List[List[int]]) -> list:
+        """:meth:`fold_targets` over the listings ``dirs``."""
         through = self.compacted_through()
         marked = self.applied_set()
         applied = [b for b in dirs[0] if b <= through or b in marked]
@@ -747,28 +754,28 @@ class IndexLifecycle:
         that provenance while dropping the directory-per-batch layout.
         Marker-committed and crash-finishable (module docstring);
         **run quiesced**, like compact. Returns directories folded."""
+        # recovery finishes a marker-committed fold first
         self.owner._recover_compaction()
         # validates that no phantom (pairs-only, never-committed) batch
         # dir sits below the fold target — folding it into pairs_hist
         # would be permanent (round 10, defense-in-depth: compact()
-        # refuses to advance the watermark over one in the first place)
-        self.fold_targets()
-        n = self._fold_pairs(self.compacted_through())
+        # refuses to advance the watermark over one in the first place);
+        # its listing of pairs/ (the last dataset) is the fold's listing
+        dirs = self._batch_dirs()
+        self._applied_of(dirs)
+        n = self._fold_pairs(self.compacted_through(), dirs[-1])
         self._pf_cache = None
         return n
 
-    def _fold_pairs(self, target: int) -> int:
-        """Fold live batch dirs with folded < batch_id <= ``target`` (the
-        compaction watermark — at or below it every batch is applied by
-        definition) into the history. Returns the number folded."""
-        self.finish_pairs_fold()
-        if not fs_storage.path_exists(self.spark, self.pairs_path):
+    def _fold_pairs(self, target: int, batch_ids: List[int]) -> int:
+        """Fold the live batch dirs ``batch_ids`` with folded < batch_id
+        <= ``target`` (the compaction watermark — at or below it every
+        batch is applied by definition) into the history. Returns the
+        number folded."""
+        if not batch_ids:
             return 0
-        already = self._read_through(self.pairs_folded_path)
-        moved = [
-            b for b in self._batch_ids(self.pairs_path)
-            if already < b <= int(target)
-        ]
+        already = self._pairs_folded()
+        moved = [b for b in batch_ids if already < b <= int(target)]
         if not moved:
             return 0
         live = self._as_pairs(

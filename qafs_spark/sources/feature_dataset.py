@@ -26,10 +26,11 @@ Scale notes baked in here:
 from __future__ import annotations
 
 import posixpath
+from functools import partial
 from typing import List, Optional
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -95,10 +96,8 @@ def write_feature(
     df: DataFrame,
     path: str,
     scheme: str = "date",
-    mode: str = "append",
-    sort_within_partitions: bool = True,
     distribute: Optional[int] = None,
-    pre_commit_check=None,
+    check=None,
 ) -> None:
     """Append ``(time, created_time, value)`` rows as partitioned Parquet.
 
@@ -115,14 +114,16 @@ def write_feature(
     one giant file per hot day. Costs one range shuffle (with a sampling
     pass), so leave None for small/already-partitioned inputs.
 
-    ``pre_commit_check``: a zero-arg callable that must succeed before the
-    append becomes VISIBLE. In append mode it runs concurrently with the
-    staging write (guide §2.6 — the validation aggregate and the staged
-    write are independent jobs over the same source) and the staged files
-    are only renamed into the dataset after it returns; if it raises, the
-    invisible staging directory is discarded and the error propagates —
-    readers can never observe data that failed the check. In overwrite
-    mode there is no staging, so the check runs before the write.
+    ``check``: a :class:`~qafs_spark.checks.Column` judged inside the
+    write. Its violation counters are attached with ``DataFrame.observe``
+    as the plan's last step — above the range exchange, so the sampling
+    pass never runs them — and the staged write is the only Spark job.
+    Its verdict (:meth:`~qafs_spark.checks.Column.report_observed`) runs
+    after the staging write and before anything is made visible: a
+    raise discards the staging directory, so readers never observe data
+    that failed the check (a failing first save leaves no dataset
+    directory either); log mode logs and commits. The dtype gate is the
+    caller's, on the driver, before this.
     """
     missing = {"time", "created_time", "value"} - set(df.columns)
     if missing:
@@ -133,53 +134,35 @@ def write_feature(
     )
     if distribute:
         out = out.repartitionByRange(distribute, "partition", "time")
-    if sort_within_partitions:
-        out = out.sortWithinPartitions("partition", "time")
-    if mode != "append":
-        # overwrite replaces the whole dataset — concurrent writers are
-        # app-level undefined there, no staging needed (and thus nothing
-        # to discard: the check must fully precede the write)
-        if pre_commit_check is not None:
-            pre_commit_check()
-        out.write.mode(mode).partitionBy("partition").parquet(path)
-        return
-    _staged_append(out, path, pre_commit_check)
+    out = out.sortWithinPartitions("partition", "time")
+    verdict = None
+    if check is not None:
+        out, obs, names = check.attach_observation(out, "value")
+        verdict = partial(check.report_observed, obs, names, "value")
+    _staged_append(out, path, verdict)
 
 
-def _staged_append(out: DataFrame, path: str, pre_commit_check=None) -> None:
+def _staged_append(out: DataFrame, path: str, verdict=None) -> None:
     """Commit ``out`` into the dataset via a per-job staging directory
-    (see module-level note): write to ``<path>.__stage__-<uuid>``, move
-    each ``partition=<val>/part-*.parquet`` into place with one rename
-    apiece, delete the staging dir. Isolated across threads AND
-    processes — every job has a private ``_temporary`` root and
-    UUID-named part files."""
+    (see module-level note): write to ``<path>.__stage__-<uuid>``, run
+    ``verdict`` (if any), move each ``partition=<val>/part-*.parquet``
+    into place with one rename apiece, delete the staging dir. Isolated
+    across threads AND processes — every job has a private
+    ``_temporary`` root and UUID-named part files."""
     import posixpath as pp
     import uuid
 
     spark = out.sparkSession
     stage = path.rstrip("/") + _STAGE_MARK + uuid.uuid4().hex
-    if pre_commit_check is None:
+    try:
         out.write.mode("error").partitionBy("partition").parquet(stage)
-    else:
-        # Overlap the pre-commit validation aggregate with the staging
-        # write (round 17, guide §2.6): both are independent jobs over
-        # the same source, and the staged bytes stay invisible until the
-        # renames below — so running them concurrently keeps the "no
-        # invalid data ever visible" contract while removing the
-        # validation job from the ingest critical path. The check is
-        # listed first so its failure wins when both jobs fail.
-        try:
-            fs_storage.run_concurrent([
-                pre_commit_check,
-                lambda: out.write.mode("error")
-                .partitionBy("partition")
-                .parquet(stage),
-            ])
-        except BaseException:
-            # never leave a known-dead staging dir for the compaction
-            # sweep — and never rename it in
-            fs_storage.delete_path(spark, stage)
-            raise
+        if verdict is not None:
+            verdict()
+    except BaseException:
+        # never leave a known-dead staging dir for the compaction
+        # sweep — and never rename it in
+        fs_storage.delete_path(spark, stage)
+        raise
     # the direct append created the dataset dir even for 0-row writes;
     # keep that contract (path_exists probes distinguish "feature never
     # saved" from "saved empty")
@@ -307,10 +290,11 @@ def compact_feature(
     tests/test_feature_store.py:479-489 select superseded versions — only
     answerable while those versions physically exist).
 
-    Returns the number of rows rewritten. Driver-side orchestration only —
-    the data movement is one Spark job (`repartitionByRange` by partition
-    and time, the same layout the ingest `distribute` knob produces; the
-    LWW collapse adds one partial-aggregated shuffle on ``time``).
+    Returns the number of rows rewritten, counted inside the rewrite by
+    an observation. Driver-side orchestration only — the data movement
+    is one Spark job (`repartitionByRange` by partition and time, the
+    same layout the ingest `distribute` knob produces; the LWW collapse
+    adds one partial-aggregated shuffle on ``time``).
 
     **Swap protocol (reader-friendly, crash-recoverable).** The rewritten
     data is staged at ``<path>.__compact__``, then swapped in with two
@@ -364,14 +348,18 @@ def compact_feature(
     )
 
     def stage(staging: str) -> int:
+        # the row count rides inside the write (above the range
+        # exchange, so its sampling pass is not counted)
+        rows = Observation()
         (
             df.repartitionByRange(n_parts, "partition", "time")
             .sortWithinPartitions("partition", "time")
+            .observe(rows, F.count(F.lit(1)).alias("n"))
             .write.mode("overwrite")
             .partitionBy("partition")
             .parquet(staging)
         )
-        return spark.read.parquet(staging).count()
+        return int(rows.get["n"])
 
     return fs_storage.replace_dir(spark, path, ".__compact__", stage)
 

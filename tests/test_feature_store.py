@@ -430,26 +430,76 @@ def test_last(fs):
     assert fs.first("test/last1") == {"test/last1": df1["test/last1"].values[0]}
 
 
-def test_check_modes(fs, monkeypatch):
-    """Blocking mode raises before writing; log mode writes the data and
-    counts violations inside the write job (df.observe — no extra pass)."""
-    from qafs_spark.exceptions import SchemaError
+@pytest.mark.parametrize(
+    "raise_error,write_partitions",
+    [(True, None), (True, 4), (False, None), (False, 4)],
+    ids=["raise", "raise-distributed", "log", "log-distributed"],
+)
+def test_check_modes(spark, fs, monkeypatch, caplog, raise_error,
+                     write_partitions):
+    """Raise mode rejects a failing save and leaves nothing behind; log
+    mode logs the violations and persists every row. In both modes, with
+    or without ``write_partitions``, the counters ride inside the staged
+    write: the counts are exact (the range exchange's sampling pass does
+    not count a row twice), a checked save runs the jobs of the same
+    unchecked write and no more, and a 0-row Spark save succeeds."""
+    import logging
+    import os
 
+    from pyspark.sql import functions as F
+
+    from qafs_spark.exceptions import SchemaError
+    from qafs_spark.sources.feature_dataset import _STAGE_MARK, write_feature
+
+    fs.write_partitions = write_partitions
+    monkeypatch.setenv("QAFS_RAISE_ERROR", "true" if raise_error else "false")
     fs.create_namespace("chk")
     fs.create_feature("chk/pos", check=Column(float, checks=[Check.greater_than(0)]))
     dts = pd.date_range("2021-01-01", periods=5)
     bad = pd.DataFrame({"time": dts, "chk/pos": [1.0, -2.0, 3.0, -4.0, 5.0]})
+    jvm_sc = spark.sparkContext._jsc.sc()
 
-    monkeypatch.setenv("QAFS_RAISE_ERROR", "true")
-    with pytest.raises(SchemaError):
-        fs.save_df(bad)
-    assert fs.load_dataframe("chk/pos").empty  # nothing persisted
+    def jobs(fn):
+        before = jvm_sc.dagScheduler().nextJobId()
+        fn()
+        return jvm_sc.dagScheduler().nextJobId() - before
 
-    monkeypatch.setenv("QAFS_RAISE_ERROR", "false")
-    fs.save_df(bad)  # logs 2 violations, persists all rows
-    out = fs.load_dataframe("chk/pos")
-    assert len(out) == 5
-    assert sorted(out["chk/pos"]) == [-4.0, -2.0, 1.0, 3.0, 5.0]
+    plain = spark.createDataFrame(
+        bad.rename(columns={"chk/pos": "value"})
+        .assign(created_time=pd.Timestamp("2021-02-01"))
+    )
+    unchecked = jobs(lambda: write_feature(
+        plain, os.path.join(fs.storage, "plain"), distribute=write_partitions
+    ))
+    path = fs._path("chk", "pos")
+    want = {"greater_than(0)": 2}
+
+    if raise_error:
+        def save():
+            with pytest.raises(SchemaError) as err:
+                fs.save_df(bad)
+            assert err.value.failures == want
+
+        assert jobs(save) == unchecked
+        assert fs.load_dataframe("chk/pos").empty  # nothing persisted
+        parent = os.path.dirname(path)
+        assert not os.path.exists(path)
+        assert not [d for d in os.listdir(parent) if _STAGE_MARK in d]
+    else:
+        with caplog.at_level(logging.ERROR, logger="qafs_spark"):
+            assert jobs(lambda: fs.save_df(bad)) == unchecked
+        [logged] = [r.getMessage() for r in caplog.records]
+        assert logged.endswith(f": {want}")
+        out = fs.load_dataframe("chk/pos")
+        assert len(out) == 5
+        assert sorted(out["chk/pos"]) == [-4.0, -2.0, 1.0, 3.0, 5.0]
+
+    src = spark.createDataFrame(bad)
+    for empty in (src.limit(0), src.filter(F.lit(False)),
+                  src.filter(F.col("chk/pos") > 100)):
+        fs.save_df(empty)
+    assert os.path.isdir(path)
+    assert len(fs.load_dataframe("chk/pos")) == (0 if raise_error else 5)
 
 
 def test_transform_returns_skips_inference_job(spark, fs):

@@ -3557,6 +3557,7 @@ def test_vector_index_blocked_paths_zero_norm_semantics(spark, tmp_path):
     # and at small k the zero-norm row is NOT in the top-k at all
     top2 = idx.search(df.filter(F.col("vec_id") < 3), k=2, nprobe=2).collect()
     assert all(r["neighbor_id"] != 99 for r in top2) and top2
+    idx.unpersist_intermediates()
 
 
 def test_vector_index_exactly_once_and_frozen_quantizer(vec_corpus, tmp_path):
@@ -3740,6 +3741,7 @@ def test_vector_index_deletes_and_compaction(vec_corpus, tmp_path):
     idx.unpersist_intermediates()
     got = idx.search(probe, k=20, nprobe=4)
     assert 100 not in {r["neighbor_id"] for r in got.collect()}
+    idx.unpersist_intermediates()
 
     assert idx.compact() == 1
     dirs = [
@@ -4224,6 +4226,8 @@ def test_index_search_excludes_unapplied_batches(spark, tmp_path):
     vx2 = CellVectorIndex(spark, str(tmp_path / "vx"), nlist=2)
     assert [tuple(r) for r in vx2.search(qvec, k=3, nprobe=2).collect()] == vbefore
     assert not vx2.batch_applied(1)
+    vx.unpersist_intermediates()
+    vx2.unpersist_intermediates()
 
 
 def test_inverted_index_search_edge_cases(spark, tmp_path):
@@ -4677,6 +4681,8 @@ def test_vector_index_retrain_crash_recovery(spark, tmp_path):
         (r["query_id"], r["neighbor_id"], round(r["cosine"], 9))
         for r in clean.search(queries, k=3, nprobe=1).collect()
     }
+    reader.unpersist_intermediates()
+    clean.unpersist_intermediates()
     assert got == want and want
     assert reader.version() == 2
     assert not os.path.exists(str(tmp_path / "b" / "retrain_commit"))
@@ -5040,10 +5046,12 @@ def test_vector_index_retrain_grows_nlist(spark, tmp_path):
     )
 
     def full_probe(idx, np_):
-        return {
+        got = {
             (r["query_id"], r["neighbor_id"], round(r["cosine"], 9))
             for r in idx.search(queries, k=5, nprobe=np_).collect()
         }
+        idx.unpersist_intermediates()
+        return got
 
     idx = CellVectorIndex(spark, str(tmp_path / "a"), nlist=2, train_iters=2)
     assert idx.apply_batch(rows, 0, threshold=0.999)

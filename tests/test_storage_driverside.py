@@ -24,7 +24,7 @@ from Python:
 - ``read_small_file`` reads missing and deleted files as None;
 - ``mkdirs`` creates missing parents and leaves existing directories be;
 - the staged append that lists and renames through them commits every
-  row, or nothing when its pre-commit check fails.
+  row, or nothing when the check judged inside its write fails.
 """
 
 import os
@@ -33,7 +33,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from qafs_spark import storage
+from qafs_spark import Check, Column, SchemaError, storage
 from qafs_spark.sources import feature_dataset
 
 
@@ -189,14 +189,20 @@ def _dataset_state(spark, path):
     return rows, storage.list_files(spark, path)
 
 
-def test_staged_append_commits_all_partitions(spark, tmp_store):
+def test_staged_append_commits_all_partitions(spark, tmp_store, monkeypatch):
     path = os.path.join(tmp_store, "feature", "ns", "x")
     feature_dataset.write_feature(_feature_rows(spark, 3), path)
     checked = []
+    judge = Column.report_observed
+    monkeypatch.setattr(
+        Column, "report_observed",
+        lambda self, *a: checked.append(True) or judge(self, *a),
+    )
+    monkeypatch.setenv("QAFS_RAISE_ERROR", "true")
     feature_dataset.write_feature(
         _feature_rows(spark, 5).withColumn("value", F.col("value") + 100.0),
         path,
-        pre_commit_check=lambda: checked.append(True),
+        check=Column(float, checks=[Check.greater_than(0)]),
     )
     assert checked == [True]
     rows, _ = _dataset_state(spark, path)
@@ -210,17 +216,18 @@ def test_staged_append_commits_all_partitions(spark, tmp_store):
     assert not [n for n in os.listdir(parent) if feature_dataset._STAGE_MARK in n]
 
 
-def test_staged_append_failed_check_leaves_dataset_unchanged(spark, tmp_store):
+def test_staged_append_failed_check_leaves_dataset_unchanged(
+    spark, tmp_store, monkeypatch
+):
     path = os.path.join(tmp_store, "feature", "ns", "x")
     feature_dataset.write_feature(_feature_rows(spark, 2), path)
     before = _dataset_state(spark, path)
+    monkeypatch.setenv("QAFS_RAISE_ERROR", "true")
+    reject = Column(float, checks=[Check.less_than(0)])
 
-    def reject():
-        raise ValueError("check failed")
-
-    with pytest.raises(ValueError, match="check failed"):
+    with pytest.raises(SchemaError, match="check failed"):
         feature_dataset.write_feature(
-            _feature_rows(spark, 4), path, pre_commit_check=reject
+            _feature_rows(spark, 4), path, check=reject
         )
     assert _dataset_state(spark, path) == before
     parent = os.path.dirname(path)
