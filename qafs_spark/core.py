@@ -476,22 +476,15 @@ class FeatureStore:
                 f"{ns}/{nm} is a transform feature — it has no stored data"
             )
         path = self._path(ns, nm)
-        n = compact_feature(
+        n, horizon = compact_feature(
             self.spark, path, scheme=rec.partition,
             target_files_per_partition=target_files_per_partition,
             collapse_lww=collapse_lww,
         )
-        if collapse_lww and n:
-            horizon = (
-                self.spark.read.parquet(path)
-                .agg(F.max("created_time").alias("mx"))
-                .collect()[0]["mx"]
+        if collapse_lww and horizon is not None:
+            self.registry.update_feature(
+                ns, nm, meta={"lww_collapsed_at": horizon.isoformat()},
             )
-            if horizon is not None:
-                self.registry.update_feature(
-                    ns, nm,
-                    meta={"lww_collapsed_at": pd.Timestamp(horizon).isoformat()},
-                )
         return n
 
     def _normalize_pandas_time(self, df: pd.DataFrame) -> pd.DataFrame:

@@ -6,6 +6,13 @@ partition coalescing), UTC session timezone (timestamps round-trip exactly
 against Parquet/DuckDB/pandas), Arrow transfers for the Pandas-UDF surface,
 and partition-type inference off so Hive `partition=` directory keys stay
 strings (our derived-pruning predicates compare strings).
+
+Two defaults keep a repeated operation (an index micro-batch, a search, a
+feature save or load) at the cost of its execution alone: a generated-class
+cache large enough that the second run of a plan shape compiles nothing,
+and no ``ConvertToLocalRelation`` fold, so per-row work over a
+pandas-built frame runs on the executors in generated code instead of
+interpreted in the driver's optimizer. ``extra_conf`` overrides either.
 """
 
 from __future__ import annotations
@@ -45,10 +52,33 @@ def get_spark(
         # that inferred filter recomputes the array once more per row —
         # measured ~10× slowdown on the dedup family. The rule only helps
         # when exploding raw source columns, which we never do.
+        #
+        # ConvertToLocalRelation folds every projection and filter over a
+        # LocalRelation (what createDataFrame(pandas) builds) into the
+        # relation itself, so the optimizer evaluates them on the driver, one
+        # row at a time and interpreted, before any job starts. Over a pandas
+        # micro-batch that is minhash_index's whole tokenize/shingle/minhash
+        # projection (banded apply_batch 1.89 -> 1.39 s and 1.91 -> 1.26 s,
+        # in-JVM alternating A/B over two seeds, faster in 13 of 14 adjacent
+        # batch pairs) and a pandas save's write projection. Excluded, that
+        # work runs on the executors in generated code; jobs per op are
+        # unchanged.
         .config(
             "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate,"
+            "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation",
         )
+        # Generated-class cache (a static conf; Spark keeps 100). One index
+        # cycle (micro-batch, BM25 search, vector search) needs ~180
+        # classes, so a 100-entry LRU evicted them all and every cycle
+        # compiled them again: 53 compiles and 0.28 s of Janino per op on
+        # perfbench index_stream. 2000 holds a repeating workload several
+        # times over (index_stream set-up plus 15 batches: 347 distinct
+        # classes; feature_store: 452) with JVM non-heap flat. A one-pass
+        # catalog sweep (2258 distinct) and the test suite (5101) exceed
+        # it, but run most shapes once: at 2000 they compile 2256 and
+        # 5673 classes.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

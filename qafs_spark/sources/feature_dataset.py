@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import posixpath
 from functools import partial
-from typing import List, Optional
+from typing import List, Optional, Tuple
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -260,7 +260,7 @@ def compact_feature(
     scheme: str = "date",
     target_files_per_partition: int = 1,
     collapse_lww: bool = False,
-) -> int:
+) -> Tuple[int, Optional[pd.Timestamp]]:
     """Rewrite a feature dataset's partitions into few, time-sorted files.
 
     Append-only ingest accumulates one file per writer task per save — at a
@@ -290,8 +290,10 @@ def compact_feature(
     tests/test_feature_store.py:479-489 select superseded versions — only
     answerable while those versions physically exist).
 
-    Returns the number of rows rewritten, counted inside the rewrite by
-    an observation. Driver-side orchestration only — the data movement
+    Returns ``(rows, max_created_time)`` of the rewritten dataset, both
+    observed inside the rewrite (``(0, None)`` when there is no dataset);
+    the maximum is the collapse horizon :meth:`FeatureStore.compact`
+    stamps. Driver-side orchestration only — the data movement
     is one Spark job (`repartitionByRange` by partition and time, the
     same layout the ingest `distribute` knob produces; the LWW collapse
     adds one partial-aggregated shuffle on ``time``).
@@ -316,7 +318,7 @@ def compact_feature(
     # a previous compact that crashed between its two renames left the
     # live data aside; restore it and recompact
     if not fs_storage.restore_aside(spark, path):
-        return 0
+        return 0, None
     # sweep orphan append-staging dirs (a writer that crashed before its
     # moves — see _staged_append). Compaction runs in a single-writer
     # maintenance window by contract, so anything still staged is dead.
@@ -347,19 +349,22 @@ def compact_feature(
         df.select("partition").distinct().count() * target_files_per_partition,
     )
 
-    def stage(staging: str) -> int:
-        # the row count rides inside the write (above the range
-        # exchange, so its sampling pass is not counted)
-        rows = Observation()
+    def stage(staging: str) -> Tuple[int, Optional[pd.Timestamp]]:
+        # the row count and the created_time maximum ride inside the write
+        # (above the range exchange, so its sampling pass is not counted)
+        seen = Observation()
         (
             df.repartitionByRange(n_parts, "partition", "time")
             .sortWithinPartitions("partition", "time")
-            .observe(rows, F.count(F.lit(1)).alias("n"))
+            .observe(seen, F.count(F.lit(1)).alias("n"),
+                     F.max("created_time").alias("mx"))
             .write.mode("overwrite")
             .partitionBy("partition")
             .parquet(staging)
         )
-        return int(rows.get["n"])
+        got = seen.get
+        mx = got["mx"]
+        return int(got["n"]), None if mx is None else pd.Timestamp(mx)
 
     return fs_storage.replace_dir(spark, path, ".__compact__", stage)
 

@@ -606,8 +606,11 @@ def test_compact_feature(spark, fs):
     before_rows = raw.count()
     assert before_files >= 4  # 2 partitions × 2 saves
 
-    n = compact_feature(spark, path, scheme="date")
+    before_mx = raw.agg(F.max("created_time")).first()[0]
+
+    n, mx = compact_feature(spark, path, scheme="date")
     assert n == before_rows
+    assert mx == pd.Timestamp(before_mx)  # observed inside the rewrite
 
     after = spark.read.parquet(path)
     assert after.count() == before_rows  # all versions preserved
@@ -698,6 +701,44 @@ def test_compact_collapse_lww(spark, fs):
         ).collect()
     }
     assert got_g[times[0]] == 1.0
+
+
+def test_compact_collapse_lww_stamps_without_reread(spark, fs):
+    """The LWW horizon that ``FeatureStore.compact`` stamps is observed
+    inside the rewrite: the store-level compact runs the jobs of the bare
+    ``compact_feature`` rewrite and no more (a re-read of the rewritten
+    dataset for its max ``created_time`` cost three: schema inference and
+    a 2-job aggregate), and the stamped horizon is still that maximum."""
+    from pyspark.sql import functions as F
+
+    from qafs_spark.sources.feature_dataset import compact_feature
+
+    fs.create_namespace("hz")
+    dts = pd.date_range("2021-03-01", periods=40, freq="6h")
+    created = pd.date_range("2021-04-01", periods=3)
+    for nm in ("a", "b"):
+        fs.create_feature(f"hz/{nm}")
+        for k, c in enumerate(created):
+            fs.save_df(pd.DataFrame(
+                {"time": dts, "created_time": c, f"hz/{nm}": float(k)}
+            ))
+    jvm_sc = spark.sparkContext._jsc.sc()
+
+    def jobs(fn):
+        before = jvm_sc.dagScheduler().nextJobId()
+        fn()
+        return jvm_sc.dagScheduler().nextJobId() - before
+
+    scheme = fs.registry.get_feature("hz", "a").partition
+    bare = jobs(lambda: compact_feature(
+        spark, fs._path("hz", "a"), scheme=scheme, collapse_lww=True
+    ))
+    assert jobs(lambda: fs.compact("hz/b", collapse_lww=True)) == bare
+
+    reread = (spark.read.parquet(fs._path("hz", "b"))
+              .agg(F.max("created_time")).first()[0])
+    stamped = fs.registry.get_feature("hz", "b")["meta"]["lww_collapsed_at"]
+    assert pd.Timestamp(stamped) == pd.Timestamp(reread) == created[-1]
 
 
 def test_load_features_interpolate(fs):
@@ -795,7 +836,7 @@ def test_maintenance_ops_scheme_matrix(spark, tmp_store, scheme_prefix):
     for v in (1.0, 2.0):
         pdf = pd.DataFrame({"time": dts, "created_time": dts, "value": v})
         write_feature(spark.createDataFrame(pdf), f"{root}/f1", scheme="date")
-    n = compact_feature(spark, f"{root}/f1", scheme="date")
+    n, _ = compact_feature(spark, f"{root}/f1", scheme="date")
     assert n == 16
     after = spark.read.parquet(f"{root}/f1")
     assert after.count() == 16
@@ -1171,7 +1212,7 @@ def test_compact_swap_reader_safe(spark, fs):
 
     fs_storage.rename_path = spying_rename
     try:
-        n = compact_feature(spark, path, scheme="date")
+        n, _ = compact_feature(spark, path, scheme="date")
     finally:
         fs_storage.rename_path = real_rename
     assert n == 4
@@ -1211,7 +1252,7 @@ def test_compact_swap_reader_safe(spark, fs):
     assert not fs_storage.path_exists(spark, path)
     assert fs_storage.path_exists(spark, old)
 
-    n = compact_feature(spark, path, scheme="date")
+    n, _ = compact_feature(spark, path, scheme="date")
     assert n == 4
     assert not fs_storage.path_exists(spark, old)
     assert {r["sw/f"] for r in fs.load_features("sw/f").collect()} == {

@@ -80,7 +80,7 @@ def test_webhdfs_feature_store_roundtrip(spark, webhdfs, tmp_path):
     raw = spark.read.parquet(path)
     before_rows = raw.count()
     assert raw.select(F.input_file_name()).distinct().count() > 6
-    assert compact_feature(spark, path, scheme="date") == before_rows
+    assert compact_feature(spark, path, scheme="date")[0] == before_rows
     after = spark.read.parquet(path)
     assert after.count() == before_rows
     assert after.select(F.input_file_name()).distinct().count() == 6
