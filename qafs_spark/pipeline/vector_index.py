@@ -81,22 +81,18 @@ DEFAULT_MAX_CELL_SIZE = 4096
 # equality on small fixtures.
 COLLECT_CHUNK_BYTES = 256 * 1024 * 1024
 
-# Per-node budget for ONE PASS's shared-block artifact set (round 15):
-# the streamed collect (round 14) removed the driver-RAM dim term; the
-# remaining bound was per-NODE artifact bytes (disk + page cache,
-# n×dim×{8,4}), previously advisory-only (the round-14 warn). A batch
-# whose artifact set would exceed this budget is now scored in MULTIPLE
-# PASSES over sub-blocks of the b side (id-hash filters in ingest,
-# row ranges of the collected query arrays in search): each pass ships
-# ≤ budget bytes per node, materializes its pairs, and reclaims its
-# artifacts before the next pass collects — per-node footprint is
-# bounded by config, at the explicit cost of scanning the a side once
-# per pass (pass count is ceil(artifact_bytes / budget), logged once).
-# Pair/cosine output is BIT-EQUAL to single-pass: the split
-# partitions the b set, each unordered pair lands in exactly one pass,
-# and the einsum computes every (a,b) dot product independently, so
-# splitting b rows changes no pair's reduction order. Override per
-# index via CellVectorIndex(node_budget_bytes=...).
+# Per-node budget for ONE PASS's shared-block artifact set (disk + page
+# cache, n×dim×{8,4} bytes). CellVectorIndex._score_passes scores a batch
+# or query set whose artifacts would exceed it in SEVERAL PASSES over
+# shares of the b side (id-hash shares in ingest, row ranges of the
+# fetched queries in search): each pass ships ≤ budget bytes per node,
+# materializes its output and reclaims its artifacts before the next
+# pass builds, at the explicit cost of scanning the a side once per pass
+# (pass count ceil(artifact_bytes / budget), noted once). Output is
+# BIT-EQUAL to single-pass: the shares partition the b rows, so each
+# output row is scored in exactly one pass, and the einsum computes every
+# (a, b) dot product independently of the other b rows in its block.
+# Override per index via CellVectorIndex(node_budget_bytes=...).
 NODE_ARTIFACT_BUDGET_BYTES = 8 * 1024 * 1024 * 1024
 
 
@@ -874,7 +870,7 @@ class CellVectorIndex:
             planes,
         )
 
-    # -- blocked pair scoring (round 11; node-shared blocks round 12) --------
+    # -- shared blocks -----------------------------------------------------
 
     def _block_stage(self):
         """(stage_dir, tag, epoch, slot_mode, on_cleanup) for the next
@@ -920,60 +916,38 @@ class CellVectorIndex:
         return (stage, f"{base}-s{sid}", epoch, True, _release)
 
     def _collect_blocks(
-        self, probed_b: DataFrame, keyed: bool, dim: int, deltas=None,
+        self, probed_b: DataFrame, dim: int, deltas=None,
         n: Optional[int] = None,
     ):
-        """Materialize the (broadcast-sized) b side driver-side as
-        per-(cell[, __sub]) numpy blocks and ship them ONCE PER NODE as
-        mmap-able ``.npy`` artifacts (:class:`_SharedBlocks`).
-
-        The r10 shape broadcast-JOINED the b side and scored each
-        candidate pair through an Arrow pandas_udf — which ships BOTH
-        vectors per candidate PAIR, so Arrow volume grows with the
-        within-cell quadratic (measured: a 250k-vector batch at 1M
-        corpus moves ~100s of GB through Arrow and dominates ingest).
-        Blocked scoring ships each vector ONCE — the b side in the
-        shared artifact (same driver-sized contract as the old
-        ``F.broadcast``; NOTE the collect runs Spark jobs at CALL time,
-        not first-action time), the a side once through ``mapInPandas``
-        — and does the within-cell work as one einsum per (a-chunk,
-        cell) block. Round 12: a Python-broadcast dict was deserialized
-        by EVERY Python worker, so node RAM footprint scaled as
-        block_bytes × workers (the measured local[32]→local[16] OOM at
-        2M vectors) and the broadcasts were never destroyed (they
-        accumulated across streaming micro-batches). The SparkFiles +
-        ``np.load(mmap_mode="r")`` shape keeps ONE on-disk copy per node
-        that all workers map through shared page cache, and
-        :meth:`unpersist_intermediates` removes it deterministically.
-        Float contract: identical promotion (float64 before the product)
-        and identical fixed-order einsum reduction over the vector axis,
-        so cosines are BIT-EQUAL to ``cosine_pre_batch`` (asserted in
-        tests).
-
-        ``dim`` is the quantizer's (the caller holds the centroids) and
-        ``n``, when the caller already counted ``probed_b`` (dedup_batch's
-        cells collect), skips the count job — the collect is then the
-        only job over ``probed_b`` (:meth:`_fetch_rows`).
+        """Fetch ``probed_b``'s (id, vec, __n, cell[, __sub]) rows to the
+        driver (:meth:`_fetch_rows`) and ship them ONCE PER NODE as
+        per-(cell[, __sub]) blocks (:meth:`_finish_blocks`). The fetch
+        runs Spark jobs at CALL time, not first-action time. ``dim`` is
+        the quantizer's; ``n``, when the caller already counted
+        ``probed_b``, skips the count job, so the collect is the only
+        job over ``probed_b``.
 
         ``deltas`` (guard engaged): ``probed_b`` is the PLAIN frame — one
         row per probe with its OWN ``__sub`` — and the (p+1)-way
-        multiprobe expansion happens HERE over int64 row positions: a
-        hot row registers under key ``(cell, sub^d)`` for every delta,
-        but its vector is stored once. (Collecting the pre-expanded
-        frame instead blew the driver contract on the 1M drift fixture:
-        7.2M rows / >1 GiB of task results at planes=11.) A guarded
-        a-row's own key then hits a b-row's range iff their patterns
-        differ in <= 1 bit — exactly the join tier's
-        ``a.__sub == b.__sub(expanded)`` semantics."""
+        multiprobe expansion happens over int64 row positions: a hot row
+        registers under key ``(cell, sub^d)`` for every delta, but its
+        vector is stored once. (Collecting the pre-expanded frame blew
+        the driver contract on the 1M drift fixture: 7.2M rows / >1 GiB
+        of task results at planes=11.) A guarded a-row's own key then
+        hits a b-row's range iff their patterns differ in <= 1 bit —
+        exactly the join tier's ``a.__sub == b.__sub(expanded)``
+        semantics."""
         import shutil
 
-        cols = ["id", "vec", "__n", "cell"] + (["__sub"] if keyed else [])
+        cols = ["id", "vec", "__n", "cell"]
+        if "__sub" in probed_b.columns:
+            cols.append("__sub")
         n, ids, vecs, norms, cellv, subv, tmp = self._fetch_rows(
             probed_b.select(*cols), dim, n
         )
         try:
             return self._finish_blocks(
-                n, ids, vecs, norms, cellv, subv, keyed, deltas
+                n, ids, vecs, norms, cellv, subv, deltas
             )
         finally:
             if tmp is not None:
@@ -1152,15 +1126,15 @@ class CellVectorIndex:
             vecs = np.empty((0, 0), dtype=self.block_dtype)
         return n, ids, vecs, norms, cellv, subv, tmp
 
-    def _finish_blocks(
-        self, n, ids, vecs, norms, cellv, subv, keyed, deltas,
-    ):
+    def _finish_blocks(self, n, ids, vecs, norms, cellv, subv, deltas):
         """Index build + handle construction over collected rows
-        (:meth:`_fetch_rows`), in a fresh artifact slot. ``cellv`` of
+        (:meth:`_fetch_rows`), in a fresh artifact slot. Keys are
+        (cell, __sub) when ``subv`` is given, else (cell,). ``cellv`` of
         shape [n, p] registers each row under each of its p cells
         through ``pos`` — the vector is stored once."""
         import numpy as np
 
+        keyed = subv is not None
         stage, tag, epoch, slot_mode, on_cleanup = self._block_stage()
         try:
             pos_parts, kc_parts, ks_parts = [], [], []
@@ -1220,7 +1194,7 @@ class CellVectorIndex:
             # _SharedBlocks.__init__ (e.g. addFile raising mid-loop):
             # without this the slot never returns to the pool and
             # partially-registered artifacts persist, regrowing exactly
-            # the registry the round-14 dereg bounds. Drop every
+            # the registry that cleanup's dereg bounds. Drop every
             # possible artifact name for this tag, in the registry, the
             # stage dir, and the app dir, then release the slot.
             import os
@@ -1248,24 +1222,22 @@ class CellVectorIndex:
         self._shared_blocks.append(handle)
         return handle
 
-    # -- multi-pass budget enforcement (round 15) ----------------------------
+    # -- the scoring loop --------------------------------------------------
 
     def _n_passes(self, n: int, dim: int, deltas) -> int:
-        """Blocked-scorer passes needed so ONE pass's shared-block
-        artifact set (``n`` b-side rows) stays within
+        """Passes :meth:`_score_passes` needs so that ONE pass's
+        shared-block artifact set (``n`` b-side rows) stays within
         ``self.node_budget_bytes``. Mirrors the artifact layout:
         ``vecs`` n×dim×itemsize, ``ids``+``norms`` 16 B/row, ``pos``
         8 B per index entry (guard multiprobe and search's per-query
         probe cells multiply pos entries only, never vectors —
         ``deltas`` is any sequence as long as a row's entry count). ``n``
-        rides jobs the callers run anyway — dedup_batch folds it into
-        its distinct-cells collect (``groupBy(cell).count()``; the exact
-        tier never calls this — it broadcast-joins, no pass count) and
-        search takes it from the query rows it already collected — so
-        deciding costs NO extra pass over the probe frame. Pass count
-        is capped at 256: a budget low enough
-        to want more is a misconfiguration (each pass rescans the a
-        side), and the once-per-process note names the overflow."""
+        comes from jobs the callers run anyway — dedup_batch's
+        distinct-cells collect (``groupBy(cell).count()``), search's
+        query fetch — so deciding costs no pass over the probe frame.
+        Pass count is capped at 256: a budget low enough to want more is
+        a misconfiguration (each pass rescans the a side), and the
+        once-per-process note names the overflow."""
         if not n:
             return 1
         itemsize = 4 if self.block_dtype == "float32" else 8
@@ -1287,31 +1259,53 @@ class CellVectorIndex:
         )
         return int(passes)
 
-    @staticmethod
-    def _pass_parts(base: DataFrame, passes: int) -> List[DataFrame]:
-        """id-hash sub-blocks of the b side. ``pmod(xxhash64(id), P)``
-        PARTITIONS the b set, so each unordered pair lands in exactly
-        one pass ("new" mode: pair {x,y} with x.id<y.id is emitted only
-        where y is a b-row — y's single pass; "old" mode: stored rows
-        are a-side only, so a pair exists only in its b-row's pass) —
-        the multi-pass union is therefore the single-pass pair set,
-        row-for-row, with bit-identical cosines (the einsum computes
-        each (a,b) dot product independently of which other b rows
-        share the block)."""
-        return [
-            base.filter(
-                F.pmod(F.xxhash64(F.col("id")), F.lit(passes)) == F.lit(k)
-            )
-            for k in range(passes)
-        ]
+    def _score_passes(self, passes: int, blocks, scorers) -> List[DataFrame]:
+        """The blocked scorer in ``passes`` passes (:meth:`_n_passes`).
+        Pass ``k`` scores every ``(a_frame, keep, arg)`` of ``scorers``
+        (:meth:`_blocked_score`) against ``blocks(k)``, the caller's
+        :class:`_SharedBlocks` for pass k's share of the b rows. Returns
+        one frame per scorer: the union of its passes.
+
+        One pass returns the scored frames lazily, and their blocks stay
+        tracked until :meth:`unpersist_intermediates`. With several
+        passes each a frame is persisted once (every pass rescans it),
+        and each pass's output is materialized BEFORE its blocks are
+        reclaimed, so a node holds one pass's artifacts at a time. The
+        callers' shares partition the b rows, so every output row is
+        scored in exactly one pass, and the einsum computes each (a, b)
+        product independently of the other b rows in its block: the
+        union is the single-pass output row for row, with bit-equal
+        cosines."""
+        from functools import reduce
+
+        from pyspark import StorageLevel
+
+        if passes > 1:
+            for a, _, _ in scorers:
+                self._persisted.append(
+                    a.persist(StorageLevel.MEMORY_AND_DISK)
+                )
+        per_pass = []
+        for k in range(passes):
+            bvar = blocks(k)
+            out = [
+                self._blocked_score(a, bvar, keep, arg)
+                for a, keep, arg in scorers
+            ]
+            if passes > 1:
+                out = [self._materialize(df) for df in out]
+                bvar.cleanup()
+                self._shared_blocks.remove(bvar)
+            per_pass.append(out)
+        return [reduce(DataFrame.unionByName, dfs) for dfs in zip(*per_pass)]
 
     def _materialize(self, df: DataFrame) -> DataFrame:
         """Persist + force a pass's output BEFORE its shared blocks are
         reclaimed. MEMORY_AND_DISK spills rather than drops, so later
         reads come from cache; an executor-loss recompute would fail
         loudly on the removed artifacts — the package's standard
-        materialize-before-cleanup contract, now applied per pass.
-        Tracked for :meth:`unpersist_intermediates`."""
+        materialize-before-cleanup contract, applied per pass. Tracked
+        for :meth:`unpersist_intermediates`."""
         from pyspark import StorageLevel
 
         out = df.persist(StorageLevel.MEMORY_AND_DISK)
@@ -1320,16 +1314,29 @@ class CellVectorIndex:
         return out
 
     @staticmethod
-    def _blocked_score(
-        frame: DataFrame, bvar, keyed: bool, mode: str, threshold: float
-    ) -> DataFrame:
-        """(id_a, id_b, cosine) pairs of ``frame`` rows against the
-        node-shared blocks (:class:`_SharedBlocks` handle ``bvar``)
-        sharing their (cell[, __sub]) key. ``mode``: ``"old"`` keeps
-        a.id != b.id (stored-vs-batch), ``"new"`` keeps a.id < b.id
-        (batch-vs-batch, kills the orientation mirror)."""
-        cols = ["id", "vec", "__n", "cell"] + (["__sub"] if keyed else [])
-        keys = ["cell", "__sub"] if keyed else ["cell"]
+    def _blocked_score(frame: DataFrame, bvar, keep: str, arg) -> DataFrame:
+        """Score ``frame``'s rows (the a side) against the b rows of the
+        node-shared blocks ``bvar`` (:class:`_SharedBlocks`) that share
+        their (cell[, __sub]) key, one einsum per (2048-row a-chunk,
+        key) block. ``keep`` says what a scored block keeps:
+
+        - ``"old"`` / ``"new"`` (ingest; ``arg`` is the threshold):
+          cosine >= threshold and a.id != b.id (stored vs batch) or
+          a.id < b.id (batch vs batch, which drops the mirrored
+          orientation), as (id_a, id_b, cosine) with id_a < id_b;
+        - ``"topk"`` (search; ``arg`` is k): a.id != b.id, as
+          (query_id = b.id, neighbor_id = a.id, cosine), cut to each
+          task's local top-k per query. The cut is lossless: a query's
+          global top-k rows are inside every task's local top-k.
+
+        Each vector crosses Arrow once — the b side in the shared
+        artifact, the a side through ``mapInPandas`` — where a join then
+        per-pair scorer ships both vectors per candidate pair. Cosines
+        are BIT-EQUAL to ``cosine_pre_batch``: the same float64
+        promotion before the product and the same fixed-order einsum
+        reduction over the vector axis (pytest-pinned)."""
+        keys = ["cell", "__sub"] if "__sub" in frame.columns else ["cell"]
+        topk = keep == "topk"
 
         def fn(pdfs):
             import numpy as np
@@ -1348,14 +1355,14 @@ class CellVectorIndex:
                         continue
                     blo, bhi = rng
                     rows = np.asarray(pos_all[blo:bhi])
-                    # fancy-index pulls ONLY this bucket's rows off the
+                    # fancy-index pulls ONLY this key's rows off the
                     # node-shared map (bounded by the cell cap)
                     bids = np.asarray(ids_all[rows])
-                    # float32 blocks: upcast ONCE per bucket slice —
-                    # mixed-dtype einsum would re-promote the same BM
-                    # for every 2048-row a-chunk (measured +50% serve
-                    # latency); same float64 product either way, so
-                    # cosine bits are unchanged
+                    # float32 blocks: upcast ONCE per key slice — a
+                    # mixed-dtype einsum would re-promote the same BM for
+                    # every a-chunk (measured +50% serve latency); same
+                    # float64 product either way, so cosine bits are
+                    # unchanged
                     BM = np.asarray(vecs_all[rows], dtype="float64")
                     bn = np.asarray(nn_all[rows])
                     A = np.stack(
@@ -1368,32 +1375,52 @@ class CellVectorIndex:
                         sims = np.einsum(
                             "ij,kj->ik", A[lo:hi], BM
                         ) / np.outer(an[lo:hi], bn)
-                        if mode == "old":
-                            mask = (sims >= threshold) & (
-                                aids[lo:hi, None] != bids[None, :]
-                            )
+                        ca = aids[lo:hi, None]
+                        if keep == "old":
+                            mask = (sims >= arg) & (ca != bids[None, :])
+                        elif keep == "new":
+                            mask = (sims >= arg) & (ca < bids[None, :])
                         else:
-                            mask = (sims >= threshold) & (
-                                aids[lo:hi, None] < bids[None, :]
-                            )
+                            mask = ca != bids[None, :]
                         ai, bi = np.nonzero(mask)
                         if not len(ai):
                             continue
                         ia, ib = aids[lo:hi][ai], bids[bi]
-                        outs.append(
-                            pd.DataFrame(
-                                {
-                                    "id_a": np.minimum(ia, ib),
-                                    "id_b": np.maximum(ia, ib),
-                                    "cosine": sims[ai, bi],
-                                }
-                            )
-                        )
-                if outs:
-                    yield pd.concat(outs)
+                        outs.append(pd.DataFrame(
+                            {"query_id": ib, "neighbor_id": ia,
+                             "cosine": sims[ai, bi]} if topk else
+                            {"id_a": np.minimum(ia, ib),
+                             "id_b": np.maximum(ia, ib),
+                             "cosine": sims[ai, bi]}
+                        ))
+                if not outs:
+                    continue
+                out = pd.concat(outs)
+                if topk:
+                    # Local top-k keyed EXACTLY like the global rank
+                    # window: cosine DESC, ties neighbor ASC. A zero-norm
+                    # vector's 0/0 cosine is NaN here but reaches the
+                    # window as NULL (Arrow converts NaN to null), and
+                    # NULL orders LAST under DESC — so the local key maps
+                    # NaN to -inf; mapping it greatest would let a
+                    # zero-norm row displace a real candidate from a
+                    # task's top-k and then sink globally (lossy).
+                    # Zero-norm neighbors therefore rank after every real
+                    # cosine, with a NULL cosine (pinned in tests).
+                    skey = out["cosine"].to_numpy(dtype="float64").copy()
+                    skey[np.isnan(skey)] = -np.inf
+                    out = out.assign(__sk=-skey).sort_values(
+                        ["query_id", "__sk", "neighbor_id"], kind="stable"
+                    )
+                    out = out.groupby("query_id", sort=False).head(arg).drop(
+                        columns="__sk"
+                    )
+                yield out
 
-        return frame.select(*cols).mapInPandas(
-            fn, "id_a long, id_b long, cosine double"
+        return frame.select("id", "vec", "__n", *keys).mapInPandas(
+            fn,
+            "query_id long, neighbor_id long, cosine double" if topk
+            else "id_a long, id_b long, cosine double",
         )
 
     def dedup_batch(
@@ -1520,81 +1547,38 @@ class CellVectorIndex:
                     )
                 )
             else:
-                # scale tier (round 11): blocked per-cell scoring. The b side
-                # ships ONCE per node as mmap-able per-(cell[,__sub]) numpy
-                # blocks (_SharedBlocks, round 12); stored/batch a-rows
-                # stream through mapInPandas and score one einsum block per
-                # cell — Arrow
-                # volume linear in rows instead of candidate pairs (the
-                # broadcast-join + per-pair scorer moved both vectors per
-                # CANDIDATE, which dominated ingest at 1M vectors). Pair
-                # semantics and cosine bits match the join shape exactly
-                # (same key equality, same id conditions, same float64
-                # promotion and einsum reduction order — parity-tested).
-                # the b side collects from the PLAIN probed frame (one row
-                # per probe, own __sub); the guard's multiprobe expansion
-                # happens over row positions inside _collect_blocks.
-                # Round 15: a batch whose artifact set would exceed the
-                # per-node budget is scored in multiple passes over id-hash
-                # sub-blocks — per-pass pairs materialize before that
-                # pass's artifacts are reclaimed, so per-node footprint is
-                # budget-bounded at the cost of passes× a-side scans. The
-                # union is bit-equal to single-pass (see _pass_parts).
-                keyed = "__sub" in probed_a.columns
+                # scale tier: the blocked scorer, with the batch's probe
+                # rows as the b side. They are fetched from the PLAIN
+                # probed frame (one row per probe, own __sub); the guard's
+                # multiprobe expansion happens over row positions inside
+                # _collect_blocks. n_probe_rows counts them exactly: the
+                # guard adds the __sub key but never adds or drops rows.
                 dim = len(cents[0]) if cents else 0
-                # n_probe_rows is exact for probed_a too: _cell_guard's
-                # transforms add the __sub key but never add or drop probe
-                # rows (its multiprobe expansion happens over row POSITIONS
-                # inside _collect_blocks)
                 passes = self._n_passes(n_probe_rows, dim, guard_deltas)
-                if passes == 1:
-                    bvar = self._collect_blocks(
-                        probed_a, keyed, dim, deltas=guard_deltas,
-                        n=n_probe_rows,
-                    )
-                    old_pairs = self._blocked_score(
-                        stored, bvar, keyed, "old", threshold
-                    )
-                    new_pairs = self._blocked_score(
-                        probed_a, bvar, keyed, "new", threshold
-                    )
-                else:
-                    from functools import reduce
 
-                    from pyspark import StorageLevel
+                def batch_blocks(k):
+                    # pmod(xxhash64(id), passes) partitions the b rows and
+                    # every pair is emitted only in its b row's pass:
+                    # stored rows are a-side only, and a "new" pair
+                    # {x, y} with x.id < y.id only where y is the b row.
+                    if passes == 1:
+                        # the whole frame, whose row count is known: no
+                        # count job before the collect
+                        return self._collect_blocks(
+                            probed_a, dim, guard_deltas, n=n_probe_rows
+                        )
+                    return self._collect_blocks(
+                        probed_a.filter(
+                            F.pmod(F.xxhash64(F.col("id")), F.lit(passes))
+                            == F.lit(k)
+                        ),
+                        dim, guard_deltas,
+                    )
 
-                    base = probed_a.persist(StorageLevel.MEMORY_AND_DISK)
-                    self._persisted.append(base)
-                    # round 16: the pruned stored-side read is pass-invariant
-                    # — persist it once instead of rescanning the cell
-                    # partitions (and re-filtering tombstones) once per pass;
-                    # MEMORY_AND_DISK spills rather than drops, and
-                    # unpersist_intermediates releases it with the batch
-                    stored = stored.persist(StorageLevel.MEMORY_AND_DISK)
-                    self._persisted.append(stored)
-                    olds, news = [], []
-                    for part in self._pass_parts(base, passes):
-                        bvar = self._collect_blocks(
-                            part, keyed, dim, deltas=guard_deltas
-                        )
-                        olds.append(
-                            self._materialize(
-                                self._blocked_score(
-                                    stored, bvar, keyed, "old", threshold
-                                )
-                            )
-                        )
-                        news.append(
-                            self._materialize(
-                                self._blocked_score(
-                                    base, bvar, keyed, "new", threshold
-                                )
-                            )
-                        )
-                        bvar.cleanup()
-                        self._shared_blocks.remove(bvar)
-                    old_pairs = reduce(DataFrame.unionByName, olds)
-                    new_pairs = reduce(DataFrame.unionByName, news)
+                old_pairs, new_pairs = self._score_passes(
+                    passes, batch_blocks,
+                    [(stored, "old", threshold), (probed_a, "new", threshold)],
+                )
             if tier != "exact" and nprobe > 1:
                 new_pairs = new_pairs.dropDuplicates(["id_a", "id_b"])
             return old_pairs.unionByName(new_pairs), assigned
@@ -1709,7 +1693,17 @@ class CellVectorIndex:
         scorer the search therefore runs JVM-only jobs (a count and the
         collect) and no Python stage. Query vectors are stored once and
         registered under each probed cell through the blocks' ``pos``
-        artifact."""
+        artifact.
+
+        The stored rows then stream through the blocked scorer
+        (:meth:`_score_passes`), each task keeping its local top-k per
+        query, so the rank window shuffles at most k rows per query and
+        task. The query blocks are reclaimed at this instance's next
+        :meth:`unpersist_intermediates`: materialize the result before
+        interleaving new ingest on the same instance."""
+        import shutil
+
+        import numpy as np
         from pyspark.sql import Window
 
         from .similarity import unit_centroids
@@ -1732,158 +1726,44 @@ class CellVectorIndex:
                 sorted({int(c) for c in cellv.ravel()}), None,
                 empty_like=q.withColumn("cell", F.lit(0)),
             )
-            # Blocked scoring (round 11, same shape as dedup_batch's
-            # scale tier; round 12: the query blocks ship once per NODE
-            # as mmap-able artifacts, reclaimed at this instance's next
-            # unpersist_intermediates — materialize search results
-            # before interleaving new ingest on the same instance):
-            # queries ship ONCE as per-cell numpy blocks, stored rows
-            # stream through mapInPandas scoring one einsum block per
-            # cell, and each task pre-reduces to its local top-k per
-            # query (a query's global top-k row is by definition inside
-            # every task's local top-k, so the reduction is lossless) —
-            # the rank window then shuffles ≤ k·tasks rows per query
-            # instead of every candidate. Stored vectors are
-            # single-cell, so each (query, neighbor) scores exactly once
-            # even at nprobe = nlist; cosine bits match the per-pair
-            # scorer exactly (einsum contract, pytest-pinned), so the
-            # DuckDB oracle replay is unaffected.
-            # Round 15: a query set past the per-node artifact budget
-            # scores in multiple passes over row ranges of the collected
-            # arrays — each query lives in exactly one pass, so its
-            # local top-k survivors all come from that pass and the
-            # global rank window over the union is unchanged (bit-equal
-            # to single-pass).
+            # Queries are the b side; stored vectors are single-cell, so
+            # each (query, neighbor) scores exactly once even at
+            # nprobe = nlist.
             passes = self._n_passes(n, dim, range(cellv.shape[1]))
-            if passes == 1:
-                bvar = self._finish_blocks(
-                    n, ids, vecs, norms, cellv, None, False, None
-                )
-                scored = self._search_scored(stored, bvar, kk)
-            else:
-                import numpy as np
-                from functools import reduce
+            bounds = np.linspace(0, n, passes + 1).astype("int64")
 
-                from pyspark import StorageLevel
-
-                ids, vecs, norms = (
-                    np.load(a, mmap_mode="r") if isinstance(a, str) else a
+            def query_blocks(k):
+                # Row ranges partition the queries: a query's local top-k
+                # survivors all come from its one pass, so the rank window
+                # over the union is the single-pass one.
+                if passes == 1:
+                    # the whole fetch: spilled .npy files move into place
+                    # without a copy
+                    return self._finish_blocks(
+                        n, ids, vecs, norms, cellv, None, None
+                    )
+                lo, hi = int(bounds[k]), int(bounds[k + 1])
+                ids_k, vecs_k, norms_k = (
+                    np.load(a, mmap_mode="r")[lo:hi] if isinstance(a, str)
+                    else a[lo:hi]
                     for a in (ids, vecs, norms)
                 )
-                # round 16: persist the pass-invariant pruned stored side
-                # once — each pass's scorer otherwise rescans the probed
-                # cell partitions (see dedup_batch's multi-pass branch)
-                stored = stored.persist(StorageLevel.MEMORY_AND_DISK)
-                self._persisted.append(stored)
-                parts_out = []
-                bounds = np.linspace(0, n, passes + 1).astype("int64")
-                for lo, hi in zip(bounds[:-1], bounds[1:]):
-                    bvar = self._finish_blocks(
-                        int(hi - lo), ids[lo:hi], vecs[lo:hi],
-                        norms[lo:hi], cellv[lo:hi], None, False, None,
-                    )
-                    parts_out.append(
-                        self._materialize(
-                            self._search_scored(stored, bvar, kk)
-                        )
-                    )
-                    bvar.cleanup()
-                    self._shared_blocks.remove(bvar)
-                scored = reduce(DataFrame.unionByName, parts_out)
+                return self._finish_blocks(
+                    hi - lo, ids_k, vecs_k, norms_k, cellv[lo:hi], None, None
+                )
+
+            (scored,) = self._score_passes(
+                passes, query_blocks, [(stored, "topk", kk)]
+            )
         except BaseException:
             self._release_since(*mark)
             raise
         finally:
             if tmp is not None:
-                import shutil
-
                 shutil.rmtree(tmp, ignore_errors=True)
         w = Window.partitionBy("query_id").orderBy(
             F.col("cosine").desc(), F.col("neighbor_id").asc()
         )
         return scored.withColumn("rank", F.row_number().over(w)).filter(
             F.col("rank") <= k
-        )
-
-    @staticmethod
-    def _search_scored(stored: DataFrame, bvar, kk: int) -> DataFrame:
-        """One pass of the blocked ANN scorer: stored rows stream
-        through mapInPandas against the query blocks in ``bvar``,
-        pre-reduced to each task's local top-``kk`` per query (lossless
-        — a query's global top-k row is inside every task's local
-        top-k)."""
-
-        def fn(pdfs):
-            import numpy as np
-            import pandas as pd
-
-            ids_all, vecs_all, nn_all, pos_all = bvar.load()
-            index = bvar.index
-            for pdf in pdfs:
-                if pdf.empty:
-                    continue
-                outs = []
-                for cell, g in pdf.groupby(["cell"], sort=False):
-                    key = (int(cell[0] if isinstance(cell, tuple) else cell),)
-                    rng = index.get(key)
-                    if rng is None:
-                        continue
-                    qlo, qhi = rng
-                    qrows = np.asarray(pos_all[qlo:qhi])
-                    qids = np.asarray(ids_all[qrows])
-                    # node-shared map; float64 upcast once per cell
-                    # (not per stored chunk) when blocks are float32
-                    QM = np.asarray(vecs_all[qrows], dtype="float64")
-                    qn = np.asarray(nn_all[qrows])
-                    S = np.stack(
-                        g["vec"].map(lambda v: np.asarray(v, dtype="float64"))
-                    )
-                    sn = g["__n"].to_numpy(dtype="float64")
-                    sids = g["id"].to_numpy(dtype="int64")
-                    for lo in range(0, len(sids), 2048):
-                        hi = min(lo + 2048, len(sids))
-                        sims = np.einsum(
-                            "ij,kj->ik", S[lo:hi], QM
-                        ) / np.outer(sn[lo:hi], qn)
-                        si, qi = np.nonzero(
-                            sids[lo:hi, None] != qids[None, :]
-                        )
-                        if not len(si):
-                            continue
-                        outs.append(
-                            pd.DataFrame(
-                                {
-                                    "query_id": qids[qi],
-                                    "neighbor_id": sids[lo:hi][si],
-                                    "cosine": sims[si, qi],
-                                }
-                            )
-                        )
-                if not outs:
-                    continue
-                allp = pd.concat(outs)
-                # local lossless top-k per query, keyed EXACTLY like the
-                # global rank window: cosine DESC, ties neighbor ASC. A
-                # zero-norm vector's 0/0 cosine is NaN here but arrives
-                # at the window as NULL (Arrow's pandas conversion is
-                # nan-as-null), and NULL orders LAST under DESC — so the
-                # local key maps NaN to -inf; mapping it greatest would
-                # let a zero-norm row displace a real candidate from a
-                # task's top-k and then sink globally (lossy). Net
-                # contract (pinned in tests): zero-norm neighbors rank
-                # AFTER every real cosine, with NULL cosine — vs the
-                # join shape's JVM NaN-ranks-first, a deliberate,
-                # documented improvement (a zero-norm vector is never a
-                # meaningful best match).
-                skey = allp["cosine"].to_numpy(dtype="float64").copy()
-                skey[np.isnan(skey)] = -np.inf
-                allp = allp.assign(__sk=-skey).sort_values(
-                    ["query_id", "__sk", "neighbor_id"], kind="stable"
-                )
-                yield allp.groupby("query_id", sort=False).head(kk).drop(
-                    columns="__sk"
-                )
-
-        return stored.select("id", "vec", "__n", "cell").mapInPandas(
-            fn, "query_id long, neighbor_id long, cosine double"
         )

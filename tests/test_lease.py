@@ -400,10 +400,14 @@ def test_vector_index_persisted_frames_back_to_baseline(
     """Every frame the vector index persists — the per-batch probe array
     included — is released after apply_batch, after a search materialized
     and unpersist_intermediates, and on every failure path of dedup_batch
-    (single- and multi-pass), with no shared blocks left behind."""
+    and search: the cell guard, the b-side build, the blocked scorer and
+    the pass loop's per-pass materialize, single- and multi-pass, in the
+    first pass and in a later one. No shared blocks, and no added-files
+    registry entries for them, are left behind."""
     idx, df = small_vec_index
     jsc = spark.sparkContext._jsc.sc()
     baseline = jsc.getPersistentRDDs().size()
+    registered = len(_qsblk_registry_entries(spark))
     assert idx.apply_batch(
         df.filter(F.col("vec_id") % 2 == 1), 1, threshold=0.3
     )
@@ -412,26 +416,54 @@ def test_vector_index_persisted_frames_back_to_baseline(
     idx.unpersist_intermediates()
     assert jsc.getPersistentRDDs().size() == baseline
 
-    def boom(*a, **k):
-        raise RuntimeError("boom")
+    def boom_on(target, call):
+        """``target`` that raises on its ``call``-th call (1-based)."""
+        real = getattr(idx, target)
+        calls = []
+
+        def boom(*a, **k):
+            calls.append(1)
+            if len(calls) == call:
+                raise RuntimeError("boom")
+            return real(*a, **k)
+
+        return boom
 
     batch = df.filter(F.col("vec_id") % 3 == 0).withColumn(
         "vec_id", F.col("vec_id") + 100
     )
-    for budget, target in (
-        (None, "_cell_guard"),
-        (None, "_collect_blocks"),
-        (None, "_blocked_score"),
-        (512, "_materialize"),
+    queries = df.filter(F.col("vec_id") < 16)
+    # 512 bytes makes both calls multi-pass here (a later-pass failure
+    # is only reachable then); call numbers count across passes
+    for op, budget, target, call in (
+        ("apply", None, "_cell_guard", 1),
+        ("apply", None, "_collect_blocks", 1),
+        ("apply", None, "_blocked_score", 1),
+        ("apply", None, "_blocked_score", 2),
+        ("apply", 512, "_collect_blocks", 2),
+        ("apply", 512, "_blocked_score", 3),
+        ("apply", 512, "_materialize", 1),
+        ("apply", 512, "_materialize", 4),
+        ("search", None, "_finish_blocks", 1),
+        ("search", None, "_blocked_score", 1),
+        ("search", 512, "_finish_blocks", 2),
+        ("search", 512, "_blocked_score", 2),
+        ("search", 512, "_materialize", 1),
+        ("search", 512, "_materialize", 2),
     ):
         if budget:
             monkeypatch.setattr(idx, "node_budget_bytes", budget)
-        monkeypatch.setattr(idx, target, boom)
+        monkeypatch.setattr(idx, target, boom_on(target, call))
         with pytest.raises(RuntimeError, match="boom"):
-            idx.apply_batch(batch, 2, threshold=0.3)
+            if op == "apply":
+                idx.apply_batch(batch, 2, threshold=0.3)
+            else:
+                idx.search(queries, k=3, nprobe=2)
         monkeypatch.undo()
-        assert jsc.getPersistentRDDs().size() == baseline, target
-        assert idx._persisted == [] and idx._shared_blocks == [], target
+        case = (op, budget, target, call)
+        assert jsc.getPersistentRDDs().size() == baseline, case
+        assert idx._persisted == [] and idx._shared_blocks == [], case
+        assert len(_qsblk_registry_entries(spark)) == registered, case
     assert not idx.batch_applied(2)
 
 

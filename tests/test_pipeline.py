@@ -3446,12 +3446,14 @@ def test_vector_index_blocked_scorer_bit_parity_with_exact(vec_corpus, tmp_path)
 
 
 def test_vector_index_multipass_budget_bit_parity(vec_corpus, tmp_path):
-    """Round 15 (verdict task 1): a batch whose shared-block artifact
-    set exceeds the per-node budget scores in MULTIPLE PASSES over
-    id-hash sub-blocks of the b side — pairs and search results must be
-    bit-equal (== on doubles, exactly-once per pair) to the single-pass
-    path, with the guard engaged and not. Same index instance both
-    runs, so quantizer/cells are shared and the comparison is strict."""
+    """A batch or query set whose shared-block artifact set exceeds the
+    per-node budget runs the one scoring loop in SEVERAL PASSES over
+    shares of the b side: id-hash shares of the batch's probe rows in
+    ingest, row ranges of the fetched queries in search. Pairs and
+    search results must be bit-equal (== on doubles, exactly once per
+    pair) to the single-pass path, with the guard engaged and not. Same
+    index instance both runs, so quantizer/cells are shared and the
+    comparison is strict."""
     from qafs_spark import obs
     from qafs_spark.pipeline import vector_index as vi
     from qafs_spark.pipeline.vector_index import CellVectorIndex

@@ -7,6 +7,7 @@ import os
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import functions as F
 
 from qafs_spark.checks import Column
 
@@ -44,7 +45,9 @@ def _index_cycle(spark, root):
     txt.apply_batch(docs, 0, text_col="text", id_col="doc_id")
     vec.apply_batch(vecs, 0)
     txt.search(["spark", "join"], k=5).toPandas()
-    vec.search(vecs.limit(3), k=5, nprobe=4).toPandas()
+    # a filter, not limit(3): each new limit plan names its counter
+    # _limit_counter_N, so its generated source differs on every cycle
+    vec.search(vecs.filter(F.col("vec_id") < 3), k=5, nprobe=4).toPandas()
     vec.unpersist_intermediates()
 
 
@@ -52,17 +55,17 @@ def test_repeated_index_cycle_reuses_compiled_classes(spark, tmp_path):
     """The repeat of an index cycle on fresh roots reuses the generated
     classes of the first run. With Spark's 100-entry default cache the
     cycle's ~185 classes evict one another and every repeat compiles
-    about 180 again. With the default of ``get_spark``, three successive
-    repeats compiled 4, 8 and 9 (the vector search compiles 4 classes on
-    every repeat, the BM25 search and the banded batch a few on some);
-    the bound of 20 leaves twice that and is a ninth of what an evicting
-    cache recompiles."""
+    about 180 again. With the default of ``get_spark``, 12 repeats after
+    a first cycle (two processes, local[4]) compiled 0 classes in all but
+    two: the banded batch compiled 5 on one and the BM25 search 4 on
+    another. The bound of 10 holds both at once plus one, and is an
+    eighteenth of what an evicting cache recompiles."""
     compiled = (spark.sparkContext._jvm.org.apache.spark.metrics.source
                 .CodegenMetrics.METRIC_COMPILATION_TIME())
     _index_cycle(spark, tmp_path / "first")
     before = compiled.getCount()
     _index_cycle(spark, tmp_path / "again")
-    assert compiled.getCount() - before <= 20
+    assert compiled.getCount() - before <= 10
 
 
 def _relation_outputs(plan):
