@@ -2,11 +2,12 @@
 
 The reference API surface (src/qafs/core.py:17-582) re-expressed Spark-first:
 every load is ONE lazy DataFrame plan (scan → derived-partition pruning →
-time-travel filter → last-write-wins dedup → as-of grid union → outer
-alignment + scalable ffill); nothing materializes on the driver until the
-caller's action. This removes the reference's biggest scalability sin — the
-``.compute()``-to-pandas before dedup/resample (src/qafs/backend/
-pandas.py:158, SURVEY §3.2).
+time-travel filter → one versioned pivot that resolves last-write-wins and
+aligns every series — grouped by time, or by resample bin with the grid's
+bins in the same union → scalable ffill); nothing materializes on the
+driver until the caller's action. This removes the reference's biggest
+scalability sin — the ``.compute()``-to-pandas before dedup/resample
+(src/qafs/backend/pandas.py:158, SURVEY §3.2).
 
 Both API generations are supported: the new-style names (``save_df``,
 ``load_features`` — core.py:385, :441) and the test-specified old-style
@@ -34,12 +35,8 @@ from . import transforms as tfm
 from .checks import Column, _canon_dtype, _judge
 from .exceptions import FeatureStoreException, MissingFeatureException
 from .offsets import parse_offset
-from .operators import (
-    align_features,
-    last_write_wins,
-    resample_asof,
-    time_travel_filter,
-)
+from .operators import ffill, time_travel_filter
+from .operators.align import versioned_pivot
 from .registry import FeatureRecord, Registry
 from .sources.feature_dataset import (
     compact_feature,
@@ -692,7 +689,7 @@ class FeatureStore:
 
         # With freq, history before from_date carries in through the grid
         # chain (golden semantics) — scan with the upper bound only and let
-        # resample_asof's bin aggregation compress the history. Downsample
+        # the pivot's bin aggregation compress the history. Downsample
         # aggregates have no carry-in: keep the lower bound on the scan so
         # the time predicate prunes partitions.
         downsample = isinstance(method, dict) or method in _AGG_HOWS
@@ -710,31 +707,30 @@ class FeatureStore:
             scan_to = grid_upper_bound(
                 _start, n_steps(_start, to_ts, _f), _f
             ) - pd.Timedelta(1, unit="us")
+        # raw (time, created_time, value) versions of every series; the
+        # one versioned pivot below resolves last-write-wins for all of them
         memo: Dict[Tuple[str, str], DataFrame] = {}
-        named = []
-        for ns, nm, rec in recs:
-            series = self._load_single(
-                ns, nm, rec, scan_from, scan_to, freq, time_travel, callers=[], memo=memo
-            )
-            named.append((f"{ns}/{nm}", series.withColumnRenamed("value", f"{ns}/{nm}")))
+        named = [
+            (f"{ns}/{nm}", self._load_single(
+                ns, nm, rec, scan_from, scan_to, time_travel, callers=[], memo=memo
+            ))
+            for ns, nm, rec in recs
+        ]
+        if freq is not None and not downsample and method == "ffill":
+            # grouped by bin: LWW, alignment and binning in one aggregation
+            from .operators.resample import resample_asof_versions
 
-        cols = [n for n, _ in named]
-        if freq is not None:
-            if downsample:
-                from .operators.resample import resample_agg_multi
+            return resample_asof_versions(named, from_ts, to_ts, freq)
+        pivot = versioned_pivot(named)
+        if freq is None:
+            return ffill(pivot, [n for n, _ in named])
+        if downsample:
+            from .operators.resample import resample_agg_multi
 
-                return resample_agg_multi(named, from_ts, to_ts, freq, how=method)
-            if method in ("interpolate", "nearest"):
-                # one tall-union aggregation for all N series (same shuffle
-                # shape as align_features), not N-1 iterated grid joins
-                from .operators.resample import resample_points_multi
+            return resample_agg_multi(pivot, from_ts, to_ts, freq, how=method)
+        from .operators.resample import resample_points_multi
 
-                return resample_points_multi(
-                    named, from_ts, to_ts, freq, method=method
-                )
-            aligned = align_features(named, fill=False)
-            return resample_asof(aligned, cols, from_ts, to_ts, freq)
-        return align_features(named)
+        return resample_points_multi(pivot, from_ts, to_ts, freq, method=method)
 
     def load_dataframe(
         self,
@@ -825,9 +821,9 @@ class FeatureStore:
                 from_ts, to_ts = self._edge_partition_bound(
                     ns, nm, rec, descending
                 )
-            series = self._load_single(
-                ns, nm, rec, from_ts, to_ts, None, None, callers=[], memo={}
-            )
+            series = versioned_pivot([("value", self._load_single(
+                ns, nm, rec, from_ts, to_ts, None, callers=[], memo={}
+            ))])
             order = F.col("time").desc() if descending else F.col("time").asc()
             row = series.orderBy(order).limit(1).collect()
             val = row[0]["value"] if row else None
@@ -976,10 +972,13 @@ class FeatureStore:
             )
 
     def _load_single(
-        self, ns, nm, rec: FeatureRecord, from_ts, to_ts, freq, time_travel,
+        self, ns, nm, rec: FeatureRecord, from_ts, to_ts, time_travel,
         callers: List[str], memo: Dict,
     ) -> DataFrame:
-        """(time, value) series for one feature — lazy plan, never collected."""
+        """(time, created_time, value) versions of one feature for
+        :func:`versioned_pivot` — lazy plan, never collected. A stored
+        feature's are its scanned rows; a transform's are its output, one
+        row per time with a null created_time."""
         key = (ns, nm)
         if key in memo:
             return memo[key]
@@ -990,31 +989,25 @@ class FeatureStore:
             )
         if rec.transform:
             series = self._load_transform(
-                ns, nm, rec, from_ts, to_ts, freq, time_travel, callers + [full], memo
+                ns, nm, rec, from_ts, to_ts, time_travel, callers + [full], memo
             )
         else:
-            series = self._load_leaf(ns, nm, rec, from_ts, to_ts, freq, time_travel)
+            series = self._load_leaf(ns, nm, rec, from_ts, to_ts, time_travel)
         memo[key] = series
         return series
 
-    def _load_leaf(self, ns, nm, rec, from_ts, to_ts, freq, time_travel) -> DataFrame:
+    def _load_leaf(self, ns, nm, rec, from_ts, to_ts, time_travel) -> DataFrame:
+        # every stored version: the pivot's LWW ties on (time, created_time)
+        # go to the greatest value when it is orderable — the survivor the
+        # LWW-collapsing compaction keeps, so reads agree across a collapse
+        # (see sources/feature_dataset.py compact_feature)
         df = self._read_raw(ns, nm, rec, from_ts, to_ts, time_travel)
         if df is None:
-            return empty_feature_df(self.spark, self._value_type(rec)).select(
-                "time", "value"
-            )
-        # tiebreak on value (when orderable): rows tied on (time,
-        # created_time) resolve deterministically AND identically to the
-        # LWW-collapsing compaction's survivor, so reads agree across a
-        # collapse (see sources/feature_dataset.py compact_feature)
-        from .operators.dedup import value_tiebreak
-
-        return last_write_wins(
-            df, value_cols=["value"], tiebreak_cols=value_tiebreak(df)
-        )
+            return empty_feature_df(self.spark, self._value_type(rec))
+        return df
 
     def _load_transform(
-        self, ns, nm, rec, from_ts, to_ts, freq, time_travel, callers, memo
+        self, ns, nm, rec, from_ts, to_ts, time_travel, callers, memo
     ) -> DataFrame:
         payload = rec.transform
         func = tfm.deserialize_transform(payload)
@@ -1025,11 +1018,10 @@ class FeatureStore:
             prec = self.registry.get_feature(pns, pnm)
             if prec is None:
                 raise MissingFeatureException(f"No feature named '{pfull}'")
-            pseries = self._load_single(
-                pns, pnm, prec, from_ts, to_ts, freq, time_travel, callers, memo
-            )
-            named.append((pfull, pseries.withColumnRenamed("value", pfull)))
-        aligned = align_features(named)
+            named.append((pfull, self._load_single(
+                pns, pnm, prec, from_ts, to_ts, time_travel, callers, memo
+            )))
+        aligned = ffill(versioned_pivot(named), parent_names)
         declared = payload.get("returns")
         if declared is None:
             check = Column.from_yaml(rec.check_yaml) if rec.check_yaml else Column()
@@ -1043,7 +1035,10 @@ class FeatureStore:
             if vt is None:
                 vt = tfm.infer_output_type(aligned, func, parent_names)
                 self._transform_type_cache[cache_key] = vt
-        return tfm.apply_transform(aligned, func, parent_names, vt)
+        out = tfm.apply_transform(aligned, func, parent_names, vt)
+        return out.select(
+            "time", F.lit(None).cast("timestamp").alias("created_time"), "value"
+        )
 
     def _data_bounds(
         self, recs, time_travel, from_ts=None

@@ -6,7 +6,8 @@ These are the Spark-native re-expressions of the reference's pandas kernels
 * :mod:`dedup` — last-write-wins per timestamp (J3)
 * :mod:`ffill` — forward-fill, scalable two-pass variant (J1/W1)
 * :mod:`resample` — time-grid generation + as-of semantics (J2)
-* :mod:`align` — multi-series outer alignment (J1)
+* :mod:`align` — multi-series outer alignment (J1), and the versioned pivot
+  that resolves last-write-wins for every series of a feature load at once
 * :mod:`timetravel` — as-of-creation filtering (P2)
 * :mod:`asof` — generic as-of join (pandas merge_asof / DuckDB ASOF JOIN)
 * :mod:`interval` — interval-containment join (binned range join)

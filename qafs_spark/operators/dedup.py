@@ -3,28 +3,29 @@
 Reference semantics (src/qafs/backend/pandas.py:160-161): sort by
 ``created_time``, ``groupby(time).last()`` — upsert-over-append-only.
 
-Spark-first design: a ``groupBy(time).agg(max_by(...))`` instead of a window.
-``max_by`` runs with map-side partial aggregation (each input partition first
-reduces locally), so the shuffle carries at most one row per (group, map
-task) — at 100 TB this is the difference between shuffling the full table and
-shuffling ~|distinct timestamps|. A window (`row_number over partitionBy
-time`) would shuffle every row; we only use that formulation when value types
-are not struct-packable.
+Spark-first design: a ``groupBy(time).agg(max(struct(...)))`` instead of a
+window. The aggregate runs with map-side partial aggregation (each input
+partition first reduces locally), so the shuffle carries at most one row per
+(group, map task) — at 100 TB this is the difference between shuffling the
+full table and shuffling ~|distinct timestamps|. A window (`row_number over
+partitionBy time`) would shuffle every row. :func:`newest` is the one
+ordering of versions; the feature load's versioned pivot
+(:func:`qafs_spark.operators.align.versioned_pivot`) takes the same
+aggregate per series.
 """
 
 from __future__ import annotations
 
 from typing import List, Optional, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def is_orderable(dt) -> bool:
     """True when Spark can sort/compare the type (everything but maps,
     including nested occurrences — struct/array ordering is elementwise)."""
-    from pyspark.sql import types as T
-
     if isinstance(dt, T.MapType):
         return False
     if isinstance(dt, T.ArrayType):
@@ -50,6 +51,22 @@ def value_tiebreak(df: DataFrame, col: str = "value") -> Optional[List[str]]:
     return [col] if is_orderable(dt) else None
 
 
+def newest(version: Column, vtype, ordering: Sequence[str]) -> Column:
+    """The LWW aggregate: the greatest ``version`` record of a group.
+
+    ``version`` is a struct column of type ``vtype`` whose fields compare
+    left to right, so its leading fields (``ordering``: time or
+    created_time, then any tiebreak) decide and the greatest record is the
+    newest write; later fields break what ties remain. When a later field
+    cannot be ordered (maps) the record is picked by ``ordering`` alone
+    and ties on it stay arbitrary. A null record (another series' row in
+    a column-per-series union) never wins."""
+    if is_orderable(vtype):
+        return F.max(version)
+    rest = [f.name for f in vtype.fields if f.name not in set(ordering)]
+    return F.max_by(version, version.dropFields(*rest))
+
+
 def last_write_wins(
     df: DataFrame,
     time_col: str = "time",
@@ -63,30 +80,27 @@ def last_write_wins(
 
     ``tiebreak_cols`` (optional) make the result deterministic when several
     rows share the same ``order_col`` — they extend the ordering
-    lexicographically.
+    lexicographically; the value columns extend it further when they are
+    orderable.
     """
     group_cols = list(group_cols or [])
     if value_cols is None:
         value_cols = [
             c for c in df.columns if c not in set(group_cols) | {time_col, order_col}
         ]
-    value_cols = list(value_cols)
-
-    order_fields = [F.col(order_col)] + [F.col(c) for c in (tiebreak_cols or [])]
-    ordering = order_fields[0] if len(order_fields) == 1 else F.struct(*order_fields)
-
-    aggs: List = [
-        F.max_by(F.struct(*[F.col(c) for c in value_cols]), ordering).alias("__lww")
-    ]
-    if keep_order_col:
-        aggs.append(F.max(order_col).alias(order_col))
-
-    out = df.groupBy(time_col, *group_cols).agg(*aggs)
+    ordering = [order_col] + [c for c in tiebreak_cols or [] if c != order_col]
+    names = ordering + [c for c in value_cols if c not in ordering]
+    types = {f.name: f.dataType for f in df.schema.fields}
+    vtype = T.StructType([T.StructField(c, types[c]) for c in names])
     cols = (
         [F.col(time_col)]
         + [F.col(c) for c in group_cols]
         + [F.col("__lww")[c].alias(c) for c in value_cols]
     )
     if keep_order_col:
-        cols.append(F.col(order_col))
-    return out.select(*cols)
+        cols.append(F.col("__lww")[order_col].alias(order_col))
+    return (
+        df.groupBy(time_col, *group_cols)
+        .agg(newest(F.struct(*names), vtype, ordering).alias("__lww"))
+        .select(*cols)
+    )

@@ -55,9 +55,7 @@ def ffill(
             Window.orderBy(time_col)
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
-        for c in cols:
-            df = df.withColumn(c, F.last(c, ignorenulls=True).over(w))
-        return df
+        return df.withColumns({c: F.last(c, ignorenulls=True).over(w) for c in cols})
 
     bucket_expr = (
         F.date_trunc("month", F.col(time_col))
@@ -70,8 +68,10 @@ def ffill(
 def _ffill_two_pass(
     df: DataFrame, cols: Sequence[str], time_col: str, bucket_expr: Column
 ) -> DataFrame:
+    """Each pass is one DataFrame call over all ``cols`` (every call
+    re-analyses the plan so far)."""
     b = "__ffill_bucket"
-    work = df.withColumn(b, bucket_expr)
+    carry = {c: f"__carry_{c}" for c in cols}
 
     # Pass 1: per-bucket window fill. Buckets are time-ordered so this is
     # correct within a bucket; cross-bucket leading nulls fixed in pass 2.
@@ -80,8 +80,9 @@ def _ffill_two_pass(
         .orderBy(time_col)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    for c in cols:
-        work = work.withColumn(c, F.last(c, ignorenulls=True).over(w))
+    work = df.withColumn(b, bucket_expr).withColumns(
+        {c: F.last(c, ignorenulls=True).over(w) for c in cols}
+    )
 
     # Pass 2: last non-null value of each bucket (after pass 1, that is simply
     # the value at the bucket's max time — max_by ignores rows whose ordering
@@ -90,26 +91,23 @@ def _ffill_two_pass(
     # the unpartitioned window is a single trivial task — and the whole
     # operator stays LAZY: no collect(), no plan-build-time job, one job at
     # the caller's action.
-    lasts = work.groupBy(b).agg(
+    w_carry = Window.orderBy(b).rowsBetween(Window.unboundedPreceding, -1)
+    carry_df = work.groupBy(b).agg(
         *[
             F.max_by(
                 F.col(c), F.when(F.col(c).isNotNull(), F.col(time_col))
             ).alias(c)
             for c in cols
         ]
-    )
-    w_carry = Window.orderBy(b).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    carry_df = lasts.select(
+    ).select(
         b,
-        *[
-            F.last(F.col(c), ignorenulls=True).over(w_carry).alias(f"__carry_{c}")
-            for c in cols
-        ],
+        *[F.last(c, ignorenulls=True).over(w_carry).alias(carry[c]) for c in cols],
     )
 
     out = work.join(F.broadcast(carry_df), on=b, how="left")
-    for c in cols:
-        out = out.withColumn(c, F.coalesce(F.col(c), F.col(f"__carry_{c}")))
-    return out.drop(b, *[f"__carry_{c}" for c in cols])
+    return out.select(
+        *[
+            F.coalesce(F.col(c), F.col(carry[c])).alias(c) if c in carry else F.col(c)
+            for c in df.columns
+        ]
+    )

@@ -17,15 +17,19 @@ forward-fill chain. So the whole golden pipeline collapses to:
 2. ``groupBy(k).agg(max_by(struct(cols), time))`` — ONE aggregation with
    map-side partial combine: a year of history shuffles at most one row per
    (bin × map task), not the raw data;
-3. join with the dense grid k ∈ [0, K], forward-fill per column over k
-   (two-pass bucketed ffill — no single-task global window), keep [0, K].
+3. the dense grid's bins k ∈ [0, K] ride in the same aggregation's union
+   (so every grid bin has a row without a join); forward-fill per column
+   over k (two-pass bucketed ffill — no single-task global window), keep
+   [0, K].
 
-No per-grid-point join, no global sort, no full-history shuffle.
+No per-grid-point join, no global sort, no full-history shuffle. A feature
+load does all of it in one aggregation straight from the stored versions
+(:func:`resample_asof_versions`).
 """
 
 from __future__ import annotations
 
-from typing import Iterable, List, Optional, Tuple
+from typing import Iterable, List, Tuple, Union
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -34,6 +38,7 @@ from pyspark.sql import types as T
 
 from ..exceptions import FeatureStoreException
 from ..offsets import Freq, parse_offset
+from .align import column_union, versioned_pivot
 from .ffill import ffill
 
 _K = "__bin"
@@ -131,6 +136,38 @@ def _month_ceil_k(time_col, anchor: pd.Timestamp, f: Freq):
     return (-F.floor((-d) / F.lit(f.months)).cast("long")).cast("long")
 
 
+def _grid(spark: SparkSession, k_max: int) -> DataFrame:
+    """The grid's bin indexes 0..k_max (none when k_max is -1)."""
+    return spark.range(k_max + 1).select(F.col("id").alias(_K))
+
+
+def _fill_grid(binned: DataFrame, value_cols: List[str], anchor: pd.Timestamp,
+               k_max: int, f: Freq) -> DataFrame:
+    """Forward-fill a one-row-per-bin frame that holds every grid bin over
+    the bin index (two-pass bucketed ffill — no single-task global window)
+    and keep the grid [0, k_max], labelled with its grid time."""
+    full = ffill(
+        binned,
+        value_cols,
+        time_col=_K,
+        bucket=F.floor(F.col(_K) / F.lit(_FFILL_BUCKET_BINS)),
+    )
+    return (
+        full.filter((F.col(_K) >= 0) & (F.col(_K) <= k_max))
+        .select(_grid_time(F.col(_K), anchor, f).alias("time"), *value_cols)
+    )
+
+
+def _grid_bounds(from_ts, to_ts, freq) -> Tuple[pd.Timestamp, int, Freq]:
+    f = parse_offset(freq)
+    from_ts, to_ts = pd.Timestamp(from_ts), pd.Timestamp(to_ts)
+    if to_ts < from_ts:
+        raise FeatureStoreException("to_date must be >= from_date for resample")
+    anchor = f.anchor_start(from_ts)  # anchored grids roll the start
+    # k_max -1 = anchored start past to_ts (empty grid)
+    return anchor, n_steps(anchor, to_ts, f), f
+
+
 def resample_asof(
     aligned: DataFrame,
     value_cols: List[str],
@@ -154,38 +191,49 @@ def resample_asof(
     ``test_align_resample_property_random`` pin. (A per-column as-of is a
     DIFFERENT operator: run each series through its own resample, or ffill
     the aligned frame per column before binning.)
-    """
-    f = parse_offset(freq)
-    from_ts, to_ts = pd.Timestamp(from_ts), pd.Timestamp(to_ts)
-    spark = aligned.sparkSession
-    if to_ts < from_ts:
-        raise FeatureStoreException("to_date must be >= from_date for resample")
-    from_ts = f.anchor_start(from_ts)  # anchored grids roll the start
-    k_max = n_steps(from_ts, to_ts, f)  # -1 = anchored start past to_ts (empty grid)
 
+    The grid's bins ride in the binning aggregation's union (their rows
+    have no time, which ``max_by`` skips), so every grid bin has a row
+    without a join.
+    """
+    anchor, k_max, f = _grid_bounds(from_ts, to_ts, freq)
+    rows = aligned.select(
+        _bin_index(F.col("time"), anchor, f).alias(_K),
+        F.col("time"),
+        F.struct(*[F.col(c) for c in value_cols]).alias("__row"),
+    )
     binned = (
-        aligned.withColumn(_K, _bin_index(F.col("time"), from_ts, f))
+        rows.unionByName(_grid(aligned.sparkSession, k_max), allowMissingColumns=True)
         .groupBy(_K)
-        .agg(
-            F.max_by(
-                F.struct(*[F.col(c) for c in value_cols]), F.col("time")
-            ).alias("__row")
-        )
+        .agg(F.max_by("__row", "time").alias("__row"))
         .select(_K, *[F.col("__row")[c].alias(c) for c in value_cols])
     )
+    return _fill_grid(binned, value_cols, anchor, k_max, f)
 
-    grid = spark.range(k_max + 1).select(F.col("id").alias(_K))
-    full = grid.join(binned, on=_K, how="full")
-    full = ffill(
-        full,
-        value_cols,
-        time_col=_K,
-        bucket=F.floor(F.col(_K) / F.lit(_FFILL_BUCKET_BINS)),
+
+def resample_asof_versions(
+    named: Iterable[Tuple[str, DataFrame]],
+    from_ts,
+    to_ts,
+    freq,
+) -> DataFrame:
+    """:func:`resample_asof` of raw versioned series: last-write-wins, the
+    outer alignment and the binning in one aggregation.
+
+    Each ``(name, df)`` holds ``(time, created_time, value)`` versions (see
+    :func:`qafs_spark.operators.align.versioned_pivot`, which groups them
+    by bin here). The result equals ``last_write_wins`` per series, then
+    ``align_features(fill=False)``, then :func:`resample_asof`.
+    """
+    named = list(named)
+    anchor, k_max, f = _grid_bounds(from_ts, to_ts, freq)
+    binned = versioned_pivot(
+        named,
+        key=_bin_index(F.col("time"), anchor, f),
+        key_col=_K,
+        grid=_grid(named[0][1].sparkSession, k_max),
     )
-    return (
-        full.filter((F.col(_K) >= 0) & (F.col(_K) <= k_max))
-        .select(_grid_time(F.col(_K), from_ts, f).alias("time"), *value_cols)
-    )
+    return _fill_grid(binned, [n for n, _ in named], anchor, k_max, f)
 
 
 def resample_interpolate(
@@ -226,8 +274,26 @@ def resample_interpolate(
     )
 
 
+def _series_columns(
+    named: Union[Iterable[Tuple[str, DataFrame]], DataFrame], time_col: str
+) -> Tuple[DataFrame, List[str]]:
+    """``(frame, names)``: one frame with ``time_col`` and a column per
+    series. ``named`` is either that frame already (the time-grouped
+    :func:`qafs_spark.operators.align.versioned_pivot`) or ``(name, df)``
+    series, which stack into a column-per-series union."""
+    if isinstance(named, DataFrame):
+        return named, [c for c in named.columns if c != time_col]
+    named = list(named)
+    if not named:
+        raise FeatureStoreException("resample needs >= 1 series")
+    return (
+        column_union([df.select(time_col, name) for name, df in named]),
+        [n for n, _ in named],
+    )
+
+
 def resample_points_multi(
-    named: Iterable[Tuple[str, DataFrame]],
+    named: Union[Iterable[Tuple[str, DataFrame]], DataFrame],
     from_ts,
     to_ts,
     freq,
@@ -239,114 +305,27 @@ def resample_points_multi(
     Semantically identical to running :func:`resample_interpolate` /
     :func:`resample_nearest` per series and joining the grids on ``time``
     (each column anchors against its OWN observations), but the plan is the
-    one you want at scale: the series tall-union into a single frame (one
-    union column per series; same-type series share an Exchange exactly like
-    ``align_features``), ONE ``groupBy(bin)`` with per-column null-ignoring
+    one you want at scale: the series stack into one frame with a column
+    per series, ONE ``groupBy(bin)`` with per-column null-ignoring
     ``max_by``/``min_by`` anchors (the ordering key is ``time`` only where
     that column is non-null, so each column still sees only its own
-    observations), then the shared grid-sized ffill/bfill carry passes run
-    once over ALL columns — instead of N-1 iterated time-keyed joins of
-    independently aggregated grids.
+    observations; the grid's bins ride in the same union), then the shared
+    grid-sized ffill/bfill carry passes run once over ALL columns — instead
+    of N-1 iterated time-keyed joins of independently aggregated grids.
 
-    Each input df must have exactly ``(time_col, name)`` columns with unique
-    timestamps (run last-write-wins dedup first).
+    ``named``: ``(name, df)`` series, each df exactly ``(time_col, name)``
+    with unique timestamps (run last-write-wins dedup first), or one frame
+    of ``time_col`` plus a column per series with unique timestamps.
     """
     if method not in ("interpolate", "nearest"):
         raise FeatureStoreException(f"Unknown resample method {method!r}")
-    f = parse_offset(freq)
-    from_ts, to_ts = pd.Timestamp(from_ts), pd.Timestamp(to_ts)
-    named = list(named)
-    if not named:
-        raise FeatureStoreException("resample_points_multi needs >= 1 series")
-    spark = named[0][1].sparkSession
-    if to_ts < from_ts:
-        raise FeatureStoreException("to_date must be >= from_date for resample")
-    from_ts = f.anchor_start(from_ts)  # anchored grids roll the start
-    k_max = n_steps(from_ts, to_ts, f)  # -1 = anchored start past to_ts (empty grid)
-
-    names = [n for n, _ in named]
-    # internal aliases: series names are user strings ("ns/feature")
-    ids = {n: i for i, n in enumerate(names)}
-
-    # tall-union per value type (union columns must share a type; mirrors
-    # align_features' grouping) → per-group one binned aggregation
-    groups: dict = {}
-    for name, df in named:
-        key = df.schema[name].dataType.simpleString()
-        groups.setdefault(key, []).append((name, df))
-
-    anchors: Optional[DataFrame] = None
-    for items in groups.values():
-        gnames = [n for n, _ in items]
-        tall = None
-        for name, df in items:
-            row = df.select(
-                F.col(time_col).alias("__t"),
-                *[
-                    (F.col(n) if n == name else F.lit(None).cast(
-                        df.schema[name].dataType
-                    )).alias(f"__c{ids[n]}")
-                    for n in gnames
-                ],
-            )
-            tall = row if tall is None else tall.unionByName(row)
-        aggs = []
-        for n in gnames:
-            i = ids[n]
-            c, t = F.col(f"__c{i}"), F.col("__t")
-            key_when_set = F.when(c.isNotNull(), t)  # null ordering keys are
-            # ignored by max_by/min_by → anchors see only this column's rows
-            aggs.append(
-                F.max_by(F.struct(t.alias("t"), c.alias("v")), key_when_set)
-                .alias(f"__last{i}")
-            )
-            aggs.append(
-                F.min_by(F.struct(t.alias("t"), c.alias("v")), key_when_set)
-                .alias(f"__first{i}")
-            )
-        binned = (
-            tall.withColumn(_K, _bin_index(F.col("__t"), from_ts, f))
-            .groupBy(_K)
-            .agg(*aggs)
-        )
-        left = binned.select(
-            _K,
-            *[F.col(f"__last{ids[n]}.t").alias(f"__pt{ids[n]}") for n in gnames],
-            *[F.col(f"__last{ids[n]}.v").alias(f"__pv{ids[n]}") for n in gnames],
-        )
-        # the first observation of bin j is the right anchor for grid k <= j-1
-        right = binned.select(
-            (F.col(_K) - 1).alias(_K),
-            *[F.col(f"__first{ids[n]}.t").alias(f"__nt{ids[n]}") for n in gnames],
-            *[F.col(f"__first{ids[n]}.v").alias(f"__nv{ids[n]}") for n in gnames],
-        )
-        part = left.join(right, on=_K, how="full")
-        anchors = part if anchors is None else anchors.join(part, on=_K, how="full")
-
-    grid = spark.range(k_max + 1).select(F.col("id").alias(_K))
-    full = grid.join(anchors, on=_K, how="full")
-    pt_cols = [f"__pt{ids[n]}" for n in names] + [f"__pv{ids[n]}" for n in names]
-    nt_cols = [f"__nt{ids[n]}" for n in names] + [f"__nv{ids[n]}" for n in names]
-    full = ffill(
-        full, pt_cols, time_col=_K,
-        bucket=F.floor(F.col(_K) / F.lit(_FFILL_BUCKET_BINS)),
-    )
-    full = full.withColumn("__nk", -F.col(_K))
-    full = ffill(
-        full, nt_cols, time_col="__nk",
-        bucket=F.floor(F.col("__nk") / F.lit(_FFILL_BUCKET_BINS)),
-    ).drop("__nk")
-
-    types = {n: df.schema[n].dataType for n, df in named}
+    tall, names = _series_columns(named, time_col)
+    anchor, k_max, f = _grid_bounds(from_ts, to_ts, freq)
+    types = {fld.name: fld.dataType for fld in tall.schema.fields}
     numeric = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
                T.FloatType, T.DoubleType, T.DecimalType)
-    g = _grid_time(F.col(_K), from_ts, f)
-    outs = []
-    for n in names:
-        i = ids[n]
-        pt, pv = F.col(f"__pt{i}"), F.col(f"__pv{i}")
-        nt, nv = F.col(f"__nt{i}"), F.col(f"__nv{i}")
-        if method == "interpolate":
+    if method == "interpolate":
+        for n in names:
             if not isinstance(types[n], numeric):
                 # fail at plan build with the offending series named, not as
                 # a Catalyst BINARY_OP_WRONG_TYPE on an internal alias
@@ -355,6 +334,64 @@ def resample_points_multi(
                     f"'{n}' is {types[n].simpleString()} "
                     "(use method='nearest' or 'ffill')"
                 )
+    # internal aliases: series names are user strings ("ns/feature")
+    ids = {n: i for i, n in enumerate(names)}
+    t = F.col("__t")
+    aggs = []
+    for n in names:
+        i = ids[n]
+        c = F.col(f"__c{i}")
+        key_when_set = F.when(c.isNotNull(), t)  # null ordering keys are
+        # ignored by max_by/min_by → anchors see only this column's rows
+        aggs.append(
+            F.max_by(F.struct(t.alias("t"), c.alias("v")), key_when_set)
+            .alias(f"__last{i}")
+        )
+        aggs.append(
+            F.min_by(F.struct(t.alias("t"), c.alias("v")), key_when_set)
+            .alias(f"__first{i}")
+        )
+    rows = tall.select(
+        _bin_index(F.col(time_col), anchor, f).alias(_K),
+        F.col(time_col).alias("__t"),
+        *[F.col(n).alias(f"__c{ids[n]}") for n in names],
+    )
+    binned = (
+        rows.unionByName(_grid(tall.sparkSession, k_max), allowMissingColumns=True)
+        .groupBy(_K)
+        .agg(*aggs)
+    )
+    pt_cols = [f"__pt{i}" for i in ids.values()] + [f"__pv{i}" for i in ids.values()]
+    nt_cols = [f"__nt{i}" for i in ids.values()] + [f"__nv{i}" for i in ids.values()]
+    left = binned.select(
+        _K,
+        *[F.col(f"__last{i}.t").alias(f"__pt{i}") for i in ids.values()],
+        *[F.col(f"__last{i}.v").alias(f"__pv{i}") for i in ids.values()],
+    )
+    # the first observation of bin j is the right anchor for grid k <= j-1
+    right = binned.select(
+        (F.col(_K) - 1).alias(_K),
+        *[F.col(f"__first{i}.t").alias(f"__nt{i}") for i in ids.values()],
+        *[F.col(f"__first{i}.v").alias(f"__nv{i}") for i in ids.values()],
+    )
+    full = left.join(right, on=_K, how="full")
+    full = ffill(
+        full, pt_cols, time_col=_K,
+        bucket=F.floor(F.col(_K) / F.lit(_FFILL_BUCKET_BINS)),
+    )
+    full = full.withColumn("__nk", -F.col(_K))
+    full = ffill(
+        full, nt_cols, time_col="__nk",
+        bucket=F.floor(F.col("__nk") / F.lit(_FFILL_BUCKET_BINS)),
+    )
+
+    g = _grid_time(F.col(_K), anchor, f)
+    outs = []
+    for n in names:
+        i = ids[n]
+        pt, pv = F.col(f"__pt{i}"), F.col(f"__pv{i}")
+        nt, nv = F.col(f"__nt{i}"), F.col(f"__nv{i}")
+        if method == "interpolate":
             dg = (F.unix_micros(g) - F.unix_micros(pt)).cast("double")
             dt = (F.unix_micros(nt) - F.unix_micros(pt)).cast("double")
             v = (
@@ -439,7 +476,7 @@ def _floor_bin_index(time_col, anchor: pd.Timestamp, f: Freq):
 
 
 def resample_agg_multi(
-    named: Iterable[Tuple[str, DataFrame]],
+    named: Union[Iterable[Tuple[str, DataFrame]], DataFrame],
     from_ts,
     to_ts,
     freq,
@@ -452,21 +489,18 @@ def resample_agg_multi(
 
     ``how``: one aggregate name for all series, or ``{name: how}`` per
     series, from mean/sum/min/max/count/first/last/median (median is
-    Spark's exact ``F.median``, not an approximation).
+    Spark's exact ``F.median``, not an approximation). ``named`` is as for
+    :func:`resample_points_multi`.
 
-    Scale shape: the tall-union + ONE ``groupBy(bin)`` plan of
+    Scale shape: the column-per-series union + ONE ``groupBy(bin)`` plan of
     :func:`resample_points_multi` — map-side partial aggregation compresses
     each (bin × map task) to one row before the single data shuffle; rows
     outside [from_ts, to_ts] are filtered AT THE SCAN (pushdown-friendly
-    time predicate), since no carry-in chain needs history. Grid assembly
-    joins only grid-sized frames.
+    time predicate), since no carry-in chain needs history. The grid's bins
+    ride in the same union (all-null rows: count 0, every other aggregate
+    null), so no join follows.
     """
-    f = parse_offset(freq)
-    from_ts, to_ts = pd.Timestamp(from_ts), pd.Timestamp(to_ts)
-    named = list(named)
-    if not named:
-        raise FeatureStoreException("resample_agg_multi needs >= 1 series")
-    names = [n for n, _ in named]
+    tall, names = _series_columns(named, time_col)
     hows = {n: how for n in names} if isinstance(how, str) else dict(how)
     for n in names:
         if hows.get(n) not in _AGG_HOWS:
@@ -474,63 +508,29 @@ def resample_agg_multi(
                 f"Unknown downsample how={hows.get(n)!r} for '{n}' "
                 f"(use one of {_AGG_HOWS})"
             )
-    spark = named[0][1].sparkSession
-    if to_ts < from_ts:
-        raise FeatureStoreException("to_date must be >= from_date for resample")
-    from_ts = f.anchor_start(from_ts)  # anchored grids roll the start
-    k_max = n_steps(from_ts, to_ts, f)  # -1 = anchored start past to_ts (empty grid)
+    anchor, k_max, f = _grid_bounds(from_ts, to_ts, freq)
     ids = {n: i for i, n in enumerate(names)}
     # the last bin is labeled to_ts and covers [to_ts, to_ts + freq) —
     # pandas left-closed convention; the exclusive upper bound is driver-
     # side computable so it still pushes down to the scan
-    upper = grid_upper_bound(from_ts, k_max, f)
-
-    groups: dict = {}
-    for name, df in named:
-        key = df.schema[name].dataType.simpleString()
-        groups.setdefault(key, []).append((name, df))
-
-    binned_parts: List[DataFrame] = []
-    for items in groups.values():
-        gnames = [n for n, _ in items]
-        tall = None
-        for name, df in items:
-            row = df.filter(
-                (F.col(time_col) >= F.lit(from_ts)) & (F.col(time_col) < F.lit(upper))
-            ).select(
-                F.col(time_col).alias("__t"),
-                *[
-                    (F.col(n) if n == name else F.lit(None).cast(
-                        df.schema[name].dataType
-                    )).alias(f"__c{ids[n]}")
-                    for n in gnames
-                ],
-            )
-            tall = row if tall is None else tall.unionByName(row)
-        aggs = [
-            _agg_expr(hows[n], F.col(f"__c{ids[n]}"), F.col("__t")).alias(
-                f"__v{ids[n]}"
-            )
-            for n in gnames
-        ]
-        binned_parts.append(
-            tall.withColumn(_K, _floor_bin_index(F.col("__t"), from_ts, f))
-            .groupBy(_K)
-            .agg(*aggs)
+    upper = grid_upper_bound(anchor, k_max, f)
+    t = F.col(time_col)
+    rows = tall.filter((t >= F.lit(anchor)) & (t < F.lit(upper))).select(
+        _floor_bin_index(t, anchor, f).alias(_K),
+        t.alias("__t"),
+        *[F.col(n).alias(f"__c{ids[n]}") for n in names],
+    )
+    return (
+        rows.unionByName(_grid(tall.sparkSession, k_max), allowMissingColumns=True)
+        .groupBy(_K)
+        .agg(*[
+            _agg_expr(hows[n], F.col(f"__c{i}"), F.col("__t")).alias(f"__v{i}")
+            for n, i in ids.items()
+        ])
+        .select(
+            _grid_time(F.col(_K), anchor, f).alias(time_col),
+            *[F.col(f"__v{i}").alias(n) for n, i in ids.items()],
         )
-
-    grid = spark.range(k_max + 1).select(F.col("id").alias(_K))
-    full = grid
-    for part in binned_parts:
-        full = full.join(part, on=_K, how="left")
-    outs = []
-    for n in names:
-        v = F.col(f"__v{ids[n]}")
-        if hows[n] == "count":
-            v = F.coalesce(v, F.lit(0))  # pandas: empty bins count 0
-        outs.append(v.alias(n))
-    return full.select(
-        _grid_time(F.col(_K), from_ts, f).alias(time_col), *outs
     )
 
 

@@ -7,12 +7,13 @@ against Parquet/DuckDB/pandas), Arrow transfers for the Pandas-UDF surface,
 and partition-type inference off so Hive `partition=` directory keys stay
 strings (our derived-pruning predicates compare strings).
 
-Two defaults keep a repeated operation (an index micro-batch, a search, a
-feature save or load) at the cost of its execution alone: a generated-class
-cache large enough that the second run of a plan shape compiles nothing,
-and no ``ConvertToLocalRelation`` fold, so per-row work over a
-pandas-built frame runs on the executors in generated code instead of
-interpreted in the driver's optimizer. ``extra_conf`` overrides either.
+Three defaults keep a repeated operation (an index micro-batch, a search,
+a feature save or load) at the cost of its execution alone: a
+generated-class cache large enough that the second run of a plan shape
+compiles nothing, no ``ConvertToLocalRelation`` fold, so per-row work over
+a pandas-built frame runs on the executors in generated code instead of
+interpreted in the driver's optimizer, and no per-call Python call-site
+capture while plans are built. ``extra_conf`` overrides any of them.
 """
 
 from __future__ import annotations
@@ -79,6 +80,18 @@ def get_spark(
         # it, but run most shapes once: at 2000 they compile 2256 and
         # 5673 classes.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # Python call-site capture (a static conf, on by default in
+        # PySpark 4). With it on, every DataFrame and Column API call
+        # first asks the JVM for the active session and a conf, walks the
+        # Python stack, and sets and clears the JVM's current origin: four
+        # py4j round trips on top of the call's own. Turning it off alone
+        # took a 4-feature hourly load_features build from ~2,700 round
+        # trips and ~580 ms to ~1,300 and ~350 ms (in-JVM alternating A/B,
+        # local[4], 4-vCPU VM; plans/r19/load_plan_build_ab.txt). Lost:
+        # the Python file:line of the failing call in the DataFrame query
+        # context of analysis and runtime error messages; the error itself
+        # is the same. Set it back to "true" through extra_conf to debug.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -26,7 +26,7 @@ Scale notes baked in here:
 from __future__ import annotations
 
 import posixpath
-from functools import partial
+from functools import partial, reduce
 from typing import List, Optional, Tuple
 
 import pandas as pd
@@ -229,15 +229,19 @@ def read_feature(
             )
         )
     df = reader.parquet(path)
+    # one filter call for every bound (each DataFrame call re-analyses)
+    preds = []
     if from_date is not None:
-        df = df.filter(F.col("time") >= F.lit(pd.Timestamp(from_date)))
+        preds.append(F.col("time") >= F.lit(pd.Timestamp(from_date)))
     if to_date is not None:
-        df = df.filter(F.col("time") <= F.lit(pd.Timestamp(to_date)))
-    if "partition" in df.columns:
-        for pred in derived_partition_predicates(scheme, from_date, to_date):
-            df = df.filter(pred)
-        if not keep_partition_col:
-            df = df.drop("partition")
+        preds.append(F.col("time") <= F.lit(pd.Timestamp(to_date)))
+    partitioned = value_type is not None or "partition" in df.columns
+    if partitioned:
+        preds += derived_partition_predicates(scheme, from_date, to_date)
+    if preds:
+        df = df.filter(reduce(lambda a, b: a & b, preds))
+    if partitioned and not keep_partition_col:
+        df = df.drop("partition")
     return df
 
 

@@ -114,3 +114,25 @@ def test_pandas_save_projection_not_folded(spark, fs, monkeypatch):
     _assert_not_folded(staged[0], ["partition", "created_time"])
     assert len(fs.load_dataframe("fold/x")) == 5
     assert os.path.isdir(fs._path("fold", "x"))
+
+
+def test_call_site_capture_off_by_default(spark, monkeypatch):
+    """``get_spark`` turns off PySpark's per-call Python call-site capture
+    (each DataFrame and Column call otherwise makes four extra py4j round
+    trips), and ``extra_conf`` turns it back on."""
+    from pyspark.sql import SparkSession
+
+    from qafs_spark.session import get_spark
+
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert spark.conf.get(key) == "false"
+    built = []
+
+    def capture(builder):
+        built.append(dict(builder._options))
+        return spark  # the running session; the conf is static
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", capture)
+    get_spark()
+    get_spark(extra_conf={key: "true"})
+    assert [b[key] for b in built] == ["false", "true"]
